@@ -19,11 +19,10 @@ from typing import List, Sequence
 
 import numpy as np
 
-from gen import Inputs, Table
+from gen import RIGHT_ID_BASE, Inputs, Table
 from oracle import DISTANCE, distance_bound, levenshtein_passing
 from workloads import Mapping, Workload, score_column
 
-RIGHT_ID_BASE = 1_000_000
 # jaro-winkler is float arithmetic done in another order than the
 # engine's kernel: pairs this close to the bound are ambiguous
 AMBIGUOUS = 1e-9

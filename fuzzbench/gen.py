@@ -3,7 +3,7 @@
 Shape follows the reference's performance-test generator: a name
 ``"{Base} {Suffix} {City} Branch {NNNN}"``, plus a street address and a
 low-cardinality country. The right side holds canonical entities; a
-share (``match_rate``) of left keys are typo'd copies of right entities
+share (:data:`MATCH_RATE`) of left keys are typo'd copies of right entities
 (insert / delete / replace edits, sometimes a case change), the rest are
 fresh entities. ``dup`` repeats every left key on that many rows, so a
 workload can have many more rows than distinct keys.
@@ -81,6 +81,10 @@ _ALPHABET = "abcdefghijklmnopqrstuvwxyz0123456789 "
 # is decided by the true similarity, not assumed)
 _NAME_EDITS = (1, 1, 1, 2, 2, 2, 3, 3, 4, 6, 9, 12)
 _ADDRESS_EDITS = (0, 0, 1, 1, 2, 3)
+# share of left keys that are typo'd copies of a right entity
+MATCH_RATE = 0.7
+# right ids are RIGHT_ID_BASE + row index, disjoint from left ids
+RIGHT_ID_BASE = 1_000_000
 
 
 @dataclass
@@ -140,7 +144,6 @@ def generate(
     seed: int,
     n_left_keys: int,
     n_right: int,
-    match_rate: float = 0.7,
     dup: int = 1,
     n_countries: int = 12,
 ) -> Inputs:
@@ -163,12 +166,12 @@ def generate(
     right = Table()
     for i in range(n_right):
         name, address, country = fresh()
-        right.ids.append(1_000_000 + i)
+        right.ids.append(RIGHT_ID_BASE + i)
         right.name.append(name)
         right.address.append(address)
         right.country.append(country)
 
-    n_planted = min(round(match_rate * n_left_keys), n_right)
+    n_planted = min(round(MATCH_RATE * n_left_keys), n_right)
     sources = rng.sample(range(n_right), n_planted)
     keys = []  # (name, address, country, planted right id or None)
     for src in sources:

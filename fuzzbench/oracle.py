@@ -4,7 +4,8 @@
 implementations. ``levenshtein_many`` is a numpy bit-parallel
 (Myers / Hyyroe) edit distance over many pairs at once: the brute-force
 oracle and recall eligibility need millions of distances, which plain
-Python cannot do within a run. The tests pin the two levenshtein
+Python cannot do within a run; ``bag_distance_many`` is a cheaper lower
+bound that drops most pairs before it. The tests pin the levenshtein
 versions to each other.
 
 Scores follow the engine's documented semantics: inputs are lowercased,
@@ -19,6 +20,10 @@ from __future__ import annotations
 from typing import Sequence
 
 import numpy as np
+
+
+# pairs per histogram difference in bag_distance_many (bounds its memory)
+_BAG_CHUNK = 1 << 18
 
 
 def distance_bound(threshold: float) -> float:
@@ -95,13 +100,27 @@ def _encode(strings: Sequence[str], width: int) -> np.ndarray:
     return out
 
 
+def _nonzero_codes(strings: Sequence[str]):
+    """(row, position, code) of every character of the strings."""
+    width = max((len(s) for s in strings), default=0)
+    codes = _encode(strings, max(width, 1))
+    rows, pos = np.nonzero(codes)
+    return rows, pos, codes[rows, pos]
+
+
 def _pattern_masks(strings: Sequence[str]) -> np.ndarray:
     """Per string, a 128-entry table: bit i set where char i == code."""
+    rows, pos, codes = _nonzero_codes(strings)
     masks = np.zeros((len(strings), 128), dtype=np.uint64)
-    for r, s in enumerate(strings):
-        for i, code in enumerate(s.lower().encode("ascii")):
-            masks[r, code] |= np.uint64(1 << i)
+    np.bitwise_or.at(masks, (rows, codes), np.left_shift(np.uint64(1), pos.astype(np.uint64)))
     return masks
+
+
+def _histograms(strings: Sequence[str]) -> np.ndarray:
+    """Per string, the count of each of the 128 ASCII codes."""
+    rows, _, codes = _nonzero_codes(strings)
+    flat = np.bincount(rows * 128 + codes, minlength=len(strings) * 128)
+    return flat.reshape(len(strings), 128).astype(np.int16)
 
 
 def _myers(eq_at, pat_len: np.ndarray, txt_len: np.ndarray, width: int) -> np.ndarray:
@@ -158,6 +177,28 @@ def levenshtein_many(
     )
 
 
+def bag_distance_many(
+    patterns: Sequence[str],
+    texts: Sequence[str],
+    pat_idx: np.ndarray,
+    txt_idx: np.ndarray,
+) -> np.ndarray:
+    """Bag distance of lowercased pairs: max of the characters only one
+    side has, counted with multiplicity. A lower bound of the edit
+    distance, and cheap: one histogram difference per pair."""
+    pat_hist, txt_hist = _histograms(patterns), _histograms(texts)
+    used = np.nonzero(pat_hist.any(axis=0) | txt_hist.any(axis=0))[0]
+    pat_hist, txt_hist = pat_hist[:, used], txt_hist[:, used]
+    out = np.empty(len(pat_idx), dtype=np.int64)
+    for lo in range(0, len(pat_idx), _BAG_CHUNK):
+        hi = lo + _BAG_CHUNK
+        diff = pat_hist[pat_idx[lo:hi]] - txt_hist[txt_idx[lo:hi]]
+        out[lo:hi] = np.maximum(
+            np.where(diff > 0, diff, 0).sum(axis=1), np.where(diff < 0, -diff, 0).sum(axis=1)
+        )
+    return out
+
+
 def levenshtein_passing(
     patterns: Sequence[str],
     texts: Sequence[str],
@@ -166,9 +207,14 @@ def levenshtein_passing(
     threshold: float,
 ) -> np.ndarray:
     """Boolean mask: pair k passes the levenshtein threshold, computed
-    with the same float arithmetic the engine's filter uses."""
-    dist = levenshtein_many(patterns, texts, pat_idx, txt_idx)
+    with the same float arithmetic the engine's filter uses. Pairs whose
+    bag distance already fails skip the edit distance."""
+    bound = distance_bound(threshold)
     longest = np.maximum(
         np.maximum(_lengths(patterns)[pat_idx], _lengths(texts)[txt_idx]), 1
     )
-    return dist / longest <= distance_bound(threshold)
+    keep = bag_distance_many(patterns, texts, pat_idx, txt_idx) / longest <= bound
+    idx = np.nonzero(keep)[0]
+    dist = levenshtein_many(patterns, texts, pat_idx[idx], txt_idx[idx])
+    keep[idx] = dist / longest[idx] <= bound
+    return keep

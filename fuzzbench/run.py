@@ -32,12 +32,8 @@ from check import check_output  # noqa: E402
 from gen import Inputs, generate  # noqa: E402
 from workloads import WORKLOADS, Workload  # noqa: E402
 
-SETUP_REPS = 3
-# untimed full joins after the checked join: join times still fall over
-# the first few joins while the JIT compiles the hot paths
-WARM_JOINS = 1
 # warm-up join input (left keys, right rows): small enough that its
-# output is brute-forced on every set-up pass
+# output is brute-forced on every run
 WARMUP_SIZE = (300, 200)
 MIN_JOINS = 3
 MAX_FAILURES = 3
@@ -181,29 +177,26 @@ class Bench:
         return res
 
     # -- phases ---------------------------------------------------------
-    def setup(self):
-        """SETUP_REPS times: get the session, generate and write the inputs,
-        read them back, run and collect the warm-up join. The first
-        repetition starts the JVM and the session; later ones get the
-        running session back from ``get_spark``."""
+    def setup(self) -> float:
+        """The cold set-up, timed: start the JVM and the session with
+        ``get_spark``, generate and write the inputs, read them back, run
+        and collect the warm-up join. That first join pays the one-off
+        costs of a fresh process: the native-kernel compile, the Python
+        worker start and the JIT."""
         from pl_fuzzy_frame_match_spark.session import get_spark
 
-        times, warm_outputs = [], []
-        for _ in range(SETUP_REPS):
-            t0 = time.perf_counter()
-            self.spark = get_spark("fuzzbench")
-            self.spark.sparkContext.setLogLevel("ERROR")
-            full, warm = make_inputs(self.wl, self.args.seed)
-            full_paths = write_inputs(full, self.work, "full")
-            warm_paths = write_inputs(warm, self.work, "warm")
-            out = self._join(*self._read(warm_paths)).toPandas()
-            times.append(time.perf_counter() - t0)
-            warm_outputs.append(out)
-        for out in warm_outputs:
-            self._check(out, warm, brute_force=True, what="warm-up join")
+        t0 = time.perf_counter()
+        self.spark = get_spark("fuzzbench")
+        self.spark.sparkContext.setLogLevel("ERROR")
+        full, warm = make_inputs(self.wl, self.args.seed)
+        full_paths = write_inputs(full, self.work, "full")
+        warm_paths = write_inputs(warm, self.work, "warm")
+        out = self._join(*self._read(warm_paths)).toPandas()
+        elapsed = time.perf_counter() - t0
+        self._check(out, warm, brute_force=True, what="warm-up join")
         self.full = full
         self.full_frames = self._read(full_paths)
-        return times
+        return elapsed
 
     def checked_join(self):
         """One untimed join of the full inputs, collected and checked."""
@@ -235,13 +228,13 @@ class Bench:
                     break
 
     # -- runs -----------------------------------------------------------
-    def run_untraced(self, setup_times, check, info) -> dict:
+    def run_untraced(self, setup_s, check, info) -> dict:
         joins = []
         self.window(lambda: joins.append(self.timed_join()))
         info["join_s"] = joins
         p50 = median(joins)
         return {
-            "setup_s": (median(setup_times), "s"),
+            "setup_s": (setup_s, "s"),
             "join_s_p50": (p50, "s"),
             "pairs_per_s": (distinct_key_pairs(self.wl, self.full) / p50, "pairs/s"),
             "recall": (check.recall, "ratio"),
@@ -357,11 +350,9 @@ class Bench:
         import pyspark
 
         t0 = time.perf_counter()
-        setup_times = self.setup()
+        setup_s = self.setup()
+        # the checked join also warms the JIT on the full inputs
         check, check_s, check_rows = self.checked_join()
-        for _ in range(WARM_JOINS):
-            self.timed_join()
-            self.attempted += 1
         info = {
             "workload": self.wl.name,
             "seed": self.args.seed,
@@ -370,7 +361,7 @@ class Bench:
             "driver_memory": self.spark.conf.get("spark.driver.memory", "default"),
             "jvm_max_heap_mb": self.spark.sparkContext._jvm.java.lang.Runtime.getRuntime().maxMemory() / 2**20,
             "pyspark": pyspark.__version__,
-            "setup_reps_s": setup_times,
+            "setup_s": setup_s,
             "checked_join_s": check_s,
             "checked_join_rows": check_rows,
             "eligible_planted_pairs": check.eligible,
@@ -378,7 +369,7 @@ class Bench:
         if self.args.trace:
             metrics = self.run_traced(info)
         else:
-            metrics = self.run_untraced(setup_times, check, info)
+            metrics = self.run_untraced(setup_s, check, info)
         info["problems"] = self.problems
         info["total_s"] = time.perf_counter() - t0
         print(json.dumps({"info": info}), flush=True)

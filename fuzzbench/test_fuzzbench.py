@@ -12,9 +12,9 @@ import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from check import RIGHT_ID_BASE, check_output, passing_pairs  # noqa: E402
-from gen import generate  # noqa: E402
-from oracle import jaro_winkler, levenshtein, levenshtein_many  # noqa: E402
+from check import check_output, passing_pairs  # noqa: E402
+from gen import MATCH_RATE, RIGHT_ID_BASE, generate  # noqa: E402
+from oracle import bag_distance_many, jaro_winkler, levenshtein, levenshtein_many  # noqa: E402
 from tracing import join_breakdown, self_times  # noqa: E402
 from workloads import WORKLOADS, Workload, score_column  # noqa: E402
 
@@ -34,8 +34,8 @@ def test_shape_duplication_and_truth():
     assert len(inp.left.ids) == 1500
     assert len(set(inp.left.ids)) == 1500
     assert len(set(inp.right.name)) == 400
-    # about 0.7 of left keys are planted, each on `dup` rows
-    assert len(inp.truth) == 3 * round(0.7 * 500)
+    # MATCH_RATE of left keys are planted, each on `dup` rows
+    assert len(inp.truth) == 3 * round(MATCH_RATE * 500)
     right = dict(zip(inp.right.ids, inp.right.name))
     for lid, rid in inp.truth:
         # at most 12 typo edits plus an optional case change
@@ -50,6 +50,8 @@ def test_vectorized_levenshtein_matches_plain_dp():
     idx = np.arange(300)
     fast = levenshtein_many(pats, texts, idx, idx)
     assert list(fast) == [levenshtein(p, t) for p, t in zip(pats, texts)]
+    # the prefilter is a lower bound of the edit distance
+    assert (bag_distance_many(pats, texts, idx, idx) <= fast).all()
 
 
 def test_jaro_winkler_known_values():

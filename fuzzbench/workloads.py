@@ -21,7 +21,6 @@ def score_column(m: Mapping) -> str:
 @dataclass(frozen=True)
 class Workload:
     name: str
-    why: str
     n_left_keys: int
     n_right: int
     mappings: Tuple[Mapping, ...]
@@ -41,24 +40,13 @@ WORKLOADS = {
     for w in (
         Workload(
             name="exact_names",
-            why=(
-                "exact tier: 1.2M distinct-key pairs, below the 1e8 ANN "
-                "crossover, so a broadcast cross join with banded codegen "
-                "levenshtein does the work"
-            ),
-            n_left_keys=1200,
-            n_right=1000,
+            n_left_keys=2000,
+            n_right=1600,
             mappings=NAME_LEV,
             brute_force=True,
         ),
         Workload(
             name="ann_names",
-            why=(
-                "ANN tier: 52K rows over 26K distinct names x 10K rows "
-                "(2.6e8 key pairs, past the 2e8 Catalyst top-N cap with "
-                "room for the planner's 5% HLL error) takes the lossy "
-                "SimHash sketch scan; key dedup halves the rows"
-            ),
             n_left_keys=26_000,
             n_right=10_000,
             dup=2,
@@ -67,13 +55,6 @@ WORKLOADS = {
         ),
         Workload(
             name="multi_refine",
-            why=(
-                "refine tier: exact country runs first as an equi-join "
-                "(O10 needs 1e7 avoided name pairs; 14.6M leaves room for "
-                "the planner's 5% HLL error), then jaro_winkler name "
-                "(pandas-UDF kernel) and levenshtein address refine the "
-                "survivors"
-            ),
             n_left_keys=5200,
             n_right=2800,
             n_countries=48,
