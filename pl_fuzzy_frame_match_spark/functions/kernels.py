@@ -6,19 +6,23 @@ sides, compute a normalized distance in [0,1], flip to similarity with
 ``1 - d``.
 
 Spark-first design:
-- ``levenshtein`` stays entirely JVM-side (built-in ``F.levenshtein``
-  normalized by ``greatest(length)``), so the hot bench path is
-  whole-stage-codegen with zero Python.
+- ``levenshtein`` is a JVM expression (built-in ``F.levenshtein``
+  normalized by ``greatest(length)``, banded by the threshold cap), so
+  it scores in whole-stage codegen with no Python.
 - the other five metrics run as one Arrow-batched pandas UDF
   parameterized by metric (reference delegates to a Rust plugin;
   pandas UDF is the idiomatic Spark equivalent of that FFI boundary).
-  Scoring is only ever applied to *distinct key pairs* (see
-  operators/matcher.py), which keeps the Python batch volume minimal.
+
+The fuzzy join's first round does not score through these columns when
+the native kernels are available: its exact and sketch tiers score key
+pairs inside the fused C scan (operators/candidates.py), and only
+survivors cross Arrow. These columns serve the cross-join fallback, the
+refine rounds and the SQL function. Scoring is only ever applied to
+*distinct key pairs* (see operators/matcher.py), which keeps the
+Python batch volume minimal.
 """
 
 from __future__ import annotations
-
-from functools import lru_cache
 
 import pandas as pd
 from pyspark.sql import Column
@@ -58,8 +62,11 @@ def _batch_distance(metric: str, a: pd.Series, b: pd.Series) -> pd.Series:
     return out
 
 
-@lru_cache(maxsize=None)
 def _pandas_distance_udf(metric: str):
+    # built per call, never cached: a UDF binds the accumulator server
+    # of the SparkContext that was live when it was first used, and
+    # after a context restart a cached one would report to the stopped
+    # server ("Failed to update accumulator")
     @F.pandas_udf(DoubleType())
     def dist(a: pd.Series, b: pd.Series) -> pd.Series:
         return _batch_distance(metric, a, b)

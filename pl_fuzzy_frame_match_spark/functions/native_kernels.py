@@ -207,41 +207,61 @@ static int64_t lev_banded(const uint32_t *s1, int64_t l1,
 
 /* ---------- Myers bit-parallel levenshtein ----------
    Myers (JACM 1999) in Hyyro's (2001) formulation: exact edit distance
-   of a pattern of length <= 64 against a text, one word-op block per
-   text char — no per-cell branches, ~2-3x the banded DP on the 18-25
-   char fuzzy-name workload, and the dominant cost of the fused sketch
-   scan's rescore stage. Returns the distance when <= cap, else -1
-   (Ukkonen cut-off: the running score can drop by at most 1 per
-   remaining text char). */
+   of a pattern of length <= 64 against a text of any length, one
+   word-op block per text char. The pattern's match-mask table (Peq) is
+   built once per LEFT key and reused against every right key it is
+   scored with: a direct table for ASCII, a generation-stamped hash for
+   the rest (no per-key clear of the hash slots). */
 
 typedef struct { uint32_t key; uint32_t gen; uint64_t mask; } peq_slot;
 #define PEQ_SLOTS 256
 #define PEQ_MASK  (PEQ_SLOTS - 1)
 
-static int64_t lev_myers(const uint32_t *s1, int64_t l1,
-                         const uint32_t *s2, int64_t l2,
-                         int64_t cap, peq_slot *peq, uint32_t gen) {
-    /* caller guarantees 0 < l1 <= 64, l1 <= l2, l2 - l1 <= cap */
-    for (int64_t i = 0; i < l1; i++) {
-        uint32_t c = s1[i];
-        size_t p = (size_t)((c * 0x9E3779B1u) & PEQ_MASK);
-        while (peq[p].gen == gen && peq[p].key != c) p = (p + 1) & PEQ_MASK;
-        if (peq[p].gen != gen) {
-            peq[p].gen = gen; peq[p].key = c; peq[p].mask = 0;
-        }
-        peq[p].mask |= 1ULL << i;
+typedef struct {
+    uint64_t ascii[128];
+    peq_slot slot[PEQ_SLOTS];
+    uint32_t gen;
+} peq_table;
+
+static void peq_build(peq_table *P, const uint32_t *s, int64_t m) {
+    memset(P->ascii, 0, sizeof(P->ascii));
+    if (++P->gen == 0) {                /* uint32 wrap: hard reset */
+        memset(P->slot, 0, sizeof(P->slot));
+        P->gen = 1;
     }
-    uint64_t Pv = ~0ULL, Mv = 0;
-    int64_t score = l1;
-    uint64_t high = 1ULL << (l1 - 1);
-    for (int64_t j = 0; j < l2; j++) {
-        uint32_t c = s2[j];
+    for (int64_t i = 0; i < m; i++) {
+        uint32_t c = s[i];
+        if (c < 128) { P->ascii[c] |= 1ULL << i; continue; }
         size_t p = (size_t)((c * 0x9E3779B1u) & PEQ_MASK);
-        uint64_t Eq = 0;
-        while (peq[p].gen == gen) {
-            if (peq[p].key == c) { Eq = peq[p].mask; break; }
+        while (P->slot[p].gen == P->gen && P->slot[p].key != c)
             p = (p + 1) & PEQ_MASK;
+        if (P->slot[p].gen != P->gen) {
+            P->slot[p].gen = P->gen; P->slot[p].key = c; P->slot[p].mask = 0;
         }
+        P->slot[p].mask |= 1ULL << i;
+    }
+}
+
+static inline uint64_t peq_get(const peq_table *P, uint32_t c) {
+    if (c < 128) return P->ascii[c];
+    size_t p = (size_t)((c * 0x9E3779B1u) & PEQ_MASK);
+    while (P->slot[p].gen == P->gen) {
+        if (P->slot[p].key == c) return P->slot[p].mask;
+        p = (p + 1) & PEQ_MASK;
+    }
+    return 0;
+}
+
+static int64_t lev_myers(const peq_table *P, int64_t m,
+                         const uint32_t *t, int64_t n, int64_t cap) {
+    /* 0 < m <= 64. Returns the distance when <= cap, else -1 (Ukkonen
+       cut-off: the last row can drop by at most 1 per remaining text
+       char). */
+    uint64_t Pv = ~0ULL, Mv = 0;
+    int64_t score = m;
+    uint64_t high = 1ULL << (m - 1);
+    for (int64_t j = 0; j < n; j++) {
+        uint64_t Eq = peq_get(P, t[j]);
         uint64_t Xv = Eq | Mv;
         uint64_t Xh = (((Eq & Pv) + Pv) ^ Pv) | Eq;
         uint64_t Ph = Mv | ~(Xh | Pv);
@@ -252,32 +272,39 @@ static int64_t lev_myers(const uint32_t *s1, int64_t l1,
         Mh <<= 1;
         Pv = Mh | ~(Xv | Ph);
         Mv = Ph & Xv;
-        if (score - (l2 - 1 - j) > cap) return -1;
+        if (score - (n - 1 - j) > cap) return -1;
     }
     return score <= cap ? score : -1;
 }
 
-/* dispatch: Myers when the shorter side fits one word, banded DP
-   otherwise. gen-stamped Peq table means no per-call memset; the
-   caller owns the generation counter and zeroes the table once. */
-static int64_t lev_dist(const uint32_t *s1, int64_t l1,
-                        const uint32_t *s2, int64_t l2,
-                        int64_t cap, int64_t *prev, int64_t *cur,
-                        peq_slot *peq, uint32_t *gen) {
-    if (l1 > l2) {
-        const uint32_t *ts = s1; s1 = s2; s2 = ts;
-        int64_t tl = l1; l1 = l2; l2 = tl;
+/* ---------- bag-distance lower bound ----------
+   Character histograms folded to HIST_W one-byte buckets. With A, B the
+   strings' character multisets, S = sum |h_A - h_B| and dl = |A| - |B|:
+   bag distance max(|A\B|, |B\A|) = (S + |dl|) / 2 <= levenshtein (each
+   edit changes each side of the bag difference by at most one). Folding
+   buckets and saturating counts at 255 can only shrink S, so
+   (S_folded + |dl|) > 2 * cap still proves levenshtein > cap. */
+
+#define HIST_W 64
+
+static inline int hist_bucket(uint32_t c) {
+    if (c - 'a' < 26u) return (int)(c - 'a');
+    if (c - '0' < 10u) return 26 + (int)(c - '0');
+    return 36 + (int)(((c * 0x9E3779B1u) >> 16) % 28u);
+}
+
+static void char_hist(const uint32_t *s, int64_t l, uint8_t *h) {
+    memset(h, 0, HIST_W);
+    for (int64_t k = 0; k < l; k++) {
+        uint8_t *b = h + hist_bucket(s[k]);
+        if (*b < 255) (*b)++;
     }
-    if (l2 - l1 > cap) return -1;
-    if (l1 == 0) return l2 <= cap ? l2 : -1;
-    if (l1 <= 64) {
-        if (++(*gen) == 0) {            /* uint32 wrap: hard reset */
-            memset(peq, 0, sizeof(peq_slot) * PEQ_SLOTS);
-            *gen = 1;
-        }
-        return lev_myers(s1, l1, s2, l2, cap, peq, *gen);
-    }
-    return lev_banded(s1, l1, s2, l2, cap, prev, cur);
+}
+
+static inline int64_t hist_l1(const uint8_t *a, const uint8_t *b) {
+    int s = 0;
+    for (int k = 0; k < HIST_W; k++) s += abs((int)a[k] - (int)b[k]);
+    return s;
 }
 
 /* ---------- batch drivers ----------
@@ -354,72 +381,78 @@ int batch_indel(const uint32_t *fa, const int64_t *oa,
     return 0;
 }
 
-int batch_levenshtein(const uint32_t *fa, const int64_t *oa,
-                      const uint32_t *fb, const int64_t *ob,
-                      int64_t n, double bound, double *out) {
-    /* normalized distance with per-pair cap floor(bound * maxlen);
-       pairs past the cap emit 2.0 (reject sentinel — matches the
-       JVM banded-levenshtein mapping in functions/kernels.py). */
-    int64_t m1 = max_len(oa, n), m2 = max_len(ob, n);
-    int64_t w = (m1 > m2 ? m1 : m2) + 1;
-    int64_t *prev = malloc((size_t)w * sizeof(int64_t));
-    int64_t *cur = malloc((size_t)w * sizeof(int64_t));
-    peq_slot peq[PEQ_SLOTS];
-    uint32_t gen = 0;
-    memset(peq, 0, sizeof(peq));
-    if (!prev || !cur) { free(prev); free(cur); return -1; }
-    for (int64_t i = 0; i < n; i++) {
-        const uint32_t *s1 = fa + oa[i];
-        const uint32_t *s2 = fb + ob[i];
-        int64_t l1 = oa[i + 1] - oa[i], l2 = ob[i + 1] - ob[i];
-        int64_t ml = l1 > l2 ? l1 : l2;
-        if (!ml) { out[i] = 0.0; continue; }
-        int64_t cap = (int64_t)(bound * (double)ml);
-        if (cap >= ml) cap = ml;
-        int64_t d = lev_dist(s1, l1, s2, l2, cap, prev, cur, peq, &gen);
-        out[i] = d < 0 ? 2.0 : (double)d / (double)ml;
-    }
-    free(prev); free(cur);
-    return 0;
-}
+/* ---------- fused scan + exact-metric scoring ----------
+   Two candidate modes, one scoring loop:
 
-/* ---------- fused SimHash sketch scan + top-N + rescore ----------
-   For each left sketch: XOR+popcount against every right sketch
-   (right side is nr*8 bytes — cache-resident for any broadcastable
-   side), keep hamming <= max_ham candidates, select the top_n
-   smallest by (hamming << 21 | j) (j ascending = key-rank order,
-   matching the numpy path bit for bit), rescore each survivor with
-   banded levenshtein on the lowercased strings, emit pairs with
-   normalized distance <= bound. Returns the number of emitted pairs,
-   or -1 on allocation failure / output overflow (caller re-chunks). */
+   - sketch (lsk != NULL): for each left sketch, XOR+popcount against
+     every right sketch (the right side is nr*8 bytes, cache-resident),
+     keep hamming <= max_ham, then the top_n smallest by (hamming, j)
+     (j ascending = key-rank order, matching the numpy path bit for
+     bit). Lossy by design.
+   - exact (lsk == NULL): every right key is a candidate. Lossless.
+
+   Each candidate is scored with the exact metric on the lowercased
+   strings and emitted when its normalized distance is <= bound. For
+   levenshtein a pair is rejected before the DP when the length
+   difference or (exact mode) the bag-distance bound already exceeds
+   its cap floor(bound * maxlen); in exact mode a right side sorted by
+   length also restricts each left key to the admissible length window.
+   Filters only skip pairs whose DP would reject them, so the emitted
+   set is unchanged.
+
+   Left keys are processed from i0 until the next key might overflow
+   max_out; *next_i returns where to resume. Returns the number of
+   emitted pairs, or -1 on allocation failure. */
 
 typedef struct { uint32_t key; int64_t j; } scan_cand;
 
-/* metric ids: 0 levenshtein (banded), 1 jaro, 2 jaro_winkler,
+/* metric ids: 0 levenshtein, 1 jaro, 2 jaro_winkler,
    3 damerau_levenshtein, 4 indel, 5 hamming */
 int64_t sketch_scan_score(const uint64_t *lsk, int64_t nl,
                           const uint64_t *rsk, int64_t nr,
                           int64_t max_ham, int64_t top_n, int metric,
                           const uint32_t *lflat, const int64_t *loff,
                           const uint32_t *rflat, const int64_t *roff,
-                          double bound,
+                          double bound, int64_t i0, int64_t *next_i,
                           int64_t max_out,
                           int64_t *out_li, int32_t *out_rj, double *out_d) {
-    scan_cand *cand = malloc((size_t)(nr > 0 ? nr : 1) * sizeof(scan_cand));
-    scan_cand *cand2 = malloc((size_t)(nr > 0 ? nr : 1) * sizeof(scan_cand));
+    int exact = lsk == NULL;
+    int64_t per_key = exact ? nr : (top_n < nr ? top_n : nr);
+    scan_cand *cand = NULL, *cand2 = NULL;
     int64_t lmax = max_len(loff, nl), rmax = max_len(roff, nr);
     int64_t w = (lmax > rmax ? lmax : rmax) + 2;
     int64_t *prev = malloc((size_t)w * sizeof(int64_t));
     int64_t *cur = malloc((size_t)w * sizeof(int64_t));
-    peq_slot peq[PEQ_SLOTS];
-    uint32_t gen = 0;
-    memset(peq, 0, sizeof(peq));
+    peq_table *peq = NULL;
+    uint8_t *rhist = NULL;
+    int len_sorted = 0;
     uint8_t *f1 = NULL, *f2 = NULL;
     int64_t *dmat = NULL;
     da_slot *map = NULL;
     uint64_t mapmask = 0;
     int64_t stride = rmax + 2;
-    if (metric == 1 || metric == 2) {
+    int64_t out_n = 0, i = i0;
+    if (!prev || !cur || per_key > max_out) goto fail;
+    if (!exact) {
+        cand = malloc((size_t)(nr > 0 ? nr : 1) * sizeof(scan_cand));
+        cand2 = malloc((size_t)(nr > 0 ? nr : 1) * sizeof(scan_cand));
+        if (!cand || !cand2) goto fail;
+    }
+    if (metric == 0) {
+        peq = calloc(1, sizeof(peq_table));
+        if (!peq) goto fail;
+        if (exact) {
+            rhist = malloc((size_t)(nr > 0 ? nr : 1) * HIST_W);
+            if (!rhist) goto fail;
+            len_sorted = 1;
+            for (int64_t j = 0; j < nr; j++) {
+                char_hist(rflat + roff[j], roff[j + 1] - roff[j],
+                          rhist + j * HIST_W);
+                if (j && roff[j + 1] - roff[j] < roff[j] - roff[j - 1])
+                    len_sorted = 0;
+            }
+        }
+    } else if (metric == 1 || metric == 2) {
         f1 = malloc((size_t)(lmax > 0 ? lmax : 1));
         f2 = malloc((size_t)(rmax > 0 ? rmax : 1));
         if (!f1 || !f2) goto fail;
@@ -431,43 +464,67 @@ int64_t sketch_scan_score(const uint64_t *lsk, int64_t nl,
         mapmask = cap2 - 1;
         if (!dmat || !map) goto fail;
     }
-    if (!cand || !cand2 || !prev || !cur) goto fail;
-    int64_t out_n = 0;
-    for (int64_t i = 0; i < nl; i++) {
-        uint64_t s = lsk[i];
-        int64_t nc = 0;
-        for (int64_t j = 0; j < nr; j++) {
-            uint64_t x = s ^ rsk[j];
-            int64_t h = __builtin_popcountll(x);
-            if (h <= max_ham) {
-                cand[nc].key = ((uint32_t)h << 21) | (uint32_t)j;
-                cand[nc].j = j;
-                nc++;
-            }
-        }
-        if (nc > top_n) {
-            /* counting selection on the <=65 hamming buckets: same
-               (h asc, j asc) order the old (h<<21|j) qsort produced —
-               per-bucket order is scan order = j ascending — at
-               O(nc + 65) instead of O(nc log nc). On dense sketch
-               neighborhoods (structured key families pass ~10-50% of
-               the right side) the qsort dominated the whole scan. */
-            int64_t hist[66];
-            memset(hist, 0, sizeof(hist));
-            for (int64_t c = 0; c < nc; c++)
-                hist[(cand[c].key >> 21) + 1]++;
-            for (int64_t h = 1; h <= 65; h++) hist[h] += hist[h - 1];
-            for (int64_t c = 0; c < nc; c++) {
-                int64_t h = cand[c].key >> 21;
-                cand2[hist[h]++] = cand[c];
-            }
-            scan_cand *t = cand; cand = cand2; cand2 = t;
-            nc = top_n;
-        }
+    for (; i < nl && out_n + per_key <= max_out; i++) {
         const uint32_t *s1 = lflat + loff[i];
         int64_t l1 = loff[i + 1] - loff[i];
-        for (int64_t c = 0; c < nc; c++) {
-            int64_t j = cand[c].j;
+        int64_t jlo = 0, jhi = nr, nc = 0;
+        if (!exact) {
+            uint64_t s = lsk[i];
+            for (int64_t j = 0; j < nr; j++) {
+                int64_t h = __builtin_popcountll(s ^ rsk[j]);
+                if (h <= max_ham) {
+                    cand[nc].key = ((uint32_t)h << 21) | (uint32_t)j;
+                    cand[nc].j = j;
+                    nc++;
+                }
+            }
+            if (nc > top_n) {
+                /* counting selection on the <=65 hamming buckets: the
+                   (h asc, j asc) order of a sort on (h<<21|j) — per-
+                   bucket order is scan order = j ascending — at
+                   O(nc + 65) instead of O(nc log nc). */
+                int64_t hist[66];
+                memset(hist, 0, sizeof(hist));
+                for (int64_t c = 0; c < nc; c++)
+                    hist[(cand[c].key >> 21) + 1]++;
+                for (int64_t h = 1; h <= 65; h++) hist[h] += hist[h - 1];
+                for (int64_t c = 0; c < nc; c++) {
+                    int64_t h = cand[c].key >> 21;
+                    cand2[hist[h]++] = cand[c];
+                }
+                scan_cand *t = cand; cand = cand2; cand2 = t;
+                nc = top_n;
+            }
+        } else if (len_sorted) {
+            /* admissible right lengths: l2 <= l1 needs l1 - l2 <= cap(l1);
+               l2 > l1 needs l2 - l1 <= bound * l2, i.e. l2 <= l1 / (1 -
+               bound) (+1 absorbs float rounding; the per-pair test below
+               stays exact) */
+            int64_t cap1 = (int64_t)(bound * (double)l1);
+            if (cap1 > l1) cap1 = l1;
+            int64_t lo_len = l1 - cap1;
+            int64_t hi_len = bound >= 1.0
+                ? rmax : (int64_t)((double)l1 / (1.0 - bound)) + 1;
+            int64_t a = 0, b = nr;
+            while (a < b) {
+                int64_t mid = (a + b) / 2;
+                if (roff[mid + 1] - roff[mid] < lo_len) a = mid + 1; else b = mid;
+            }
+            jlo = a;
+            b = nr;
+            while (a < b) {
+                int64_t mid = (a + b) / 2;
+                if (roff[mid + 1] - roff[mid] <= hi_len) a = mid + 1; else b = mid;
+            }
+            jhi = a;
+        }
+        int lev_bits = metric == 0 && l1 > 0 && l1 <= 64;
+        uint8_t lh[HIST_W];
+        if (lev_bits) peq_build(peq, s1, l1);
+        if (rhist) char_hist(s1, l1, lh);
+        int64_t n_iter = exact ? jhi - jlo : nc;
+        for (int64_t c = 0; c < n_iter; c++) {
+            int64_t j = exact ? jlo + c : cand[c].j;
             const uint32_t *s2 = rflat + roff[j];
             int64_t l2 = roff[j + 1] - roff[j];
             int64_t ml = l1 > l2 ? l1 : l2;
@@ -477,8 +534,13 @@ int64_t sketch_scan_score(const uint64_t *lsk, int64_t nl,
             } else if (metric == 0) {
                 int64_t capb = (int64_t)(bound * (double)ml);
                 if (capb >= ml) capb = ml;
-                int64_t dist = lev_dist(s1, l1, s2, l2, capb, prev, cur,
-                                        peq, &gen);
+                int64_t dl = l1 > l2 ? l1 - l2 : l2 - l1;
+                if (dl > capb) continue;
+                if (rhist && hist_l1(lh, rhist + j * HIST_W) + dl > 2 * capb)
+                    continue;
+                int64_t dist = lev_bits
+                    ? lev_myers(peq, l1, s2, l2, capb)
+                    : lev_banded(s1, l1, s2, l2, capb, prev, cur);
                 if (dist < 0) continue;
                 d = (double)dist / (double)ml;
             } else if (metric == 1) {
@@ -500,7 +562,6 @@ int64_t sketch_scan_score(const uint64_t *lsk, int64_t nl,
                 d = (double)(mism + (ml - lmin)) / (double)ml;
             }
             if (d <= bound) {
-                if (out_n >= max_out) goto fail;
                 out_li[out_n] = i;
                 out_rj[out_n] = (int32_t)j;
                 out_d[out_n] = d;
@@ -508,11 +569,12 @@ int64_t sketch_scan_score(const uint64_t *lsk, int64_t nl,
             }
         }
     }
-    free(cand); free(cand2); free(prev); free(cur);
+    *next_i = i;
+    free(cand); free(cand2); free(prev); free(cur); free(peq); free(rhist);
     free(f1); free(f2); free(dmat); free(map);
     return out_n;
 fail:
-    free(cand); free(cand2); free(prev); free(cur);
+    free(cand); free(cand2); free(prev); free(cur); free(peq); free(rhist);
     free(f1); free(f2); free(dmat); free(map);
     return -1;
 }
@@ -586,16 +648,13 @@ def _compile() -> Optional[ctypes.CDLL]:
     lib.batch_jaro.argtypes = [
         u32p, i64p, u32p, i64p, ctypes.c_int64, ctypes.c_int, f64p
     ]
-    lib.batch_levenshtein.argtypes = [
-        u32p, i64p, u32p, i64p, ctypes.c_int64, ctypes.c_double, f64p
-    ]
     u64p = ctypes.POINTER(ctypes.c_uint64)
     i32p = ctypes.POINTER(ctypes.c_int32)
     lib.sketch_scan_score.argtypes = [
         u64p, ctypes.c_int64, u64p, ctypes.c_int64,
         ctypes.c_int64, ctypes.c_int64, ctypes.c_int,
         u32p, i64p, u32p, i64p,
-        ctypes.c_double, ctypes.c_int64,
+        ctypes.c_double, ctypes.c_int64, i64p, ctypes.c_int64,
         i64p, i32p, f64p,
     ]
     lib.sketch_scan_score.restype = ctypes.c_int64
@@ -603,7 +662,7 @@ def _compile() -> Optional[ctypes.CDLL]:
         fn.argtypes = [u32p, i64p, u32p, i64p, ctypes.c_int64, f64p]
     for fn in (
         lib.batch_jaro, lib.batch_damerau, lib.batch_indel,
-        lib.batch_hamming, lib.batch_levenshtein,
+        lib.batch_hamming,
     ):
         fn.restype = ctypes.c_int
     return lib
@@ -676,13 +735,6 @@ NATIVE_DISTANCE = {
 }
 
 
-def batch_levenshtein_bounded(a, b, bound: float) -> "np.ndarray":
-    """Normalized levenshtein distance with per-pair banded cap
-    ``floor(bound * maxlen)``; pairs past the cap return 2.0 (reject
-    sentinel, same mapping as the JVM banded path in kernels.py)."""
-    return _run("batch_levenshtein", a, b, ctypes.c_double(float(bound)))
-
-
 _METRIC_IDS = {
     "levenshtein": 0,
     "jaro": 1,
@@ -694,8 +746,8 @@ _METRIC_IDS = {
 
 
 def sketch_scan_score(
-    lsk: "np.ndarray",
-    rsk: "np.ndarray",
+    lsk: Optional["np.ndarray"],
+    rsk: Optional["np.ndarray"],
     l_strs,
     r_flat: "np.ndarray",
     r_off: "np.ndarray",
@@ -704,21 +756,30 @@ def sketch_scan_score(
     metric: str,
     bound: float,
 ):
-    """Fused C sketch scan: XOR+popcount every (left, right) sketch
-    pair, per-left top-N by (hamming, right rank), exact-metric rescore
-    on the lowercased strings, threshold filter — one pass, no numpy
-    temporaries, right side cache-resident. Returns
-    (left_row_idx int64, right_rank int32, distance float64) arrays for
-    the survivors only. ``r_flat``/``r_off`` come from
-    :func:`flatten_strings` so the right side flattens once per task."""
+    """Fused C scan + exact-metric scoring of left strings ``l_strs``
+    against the right side ``r_flat``/``r_off`` (from
+    :func:`flatten_strings`, so the right side flattens once per task).
+
+    With sketches ``lsk``/``rsk``: XOR+popcount every (left, right)
+    sketch pair, keep hamming <= ``max_hamming``, per-left top-N by
+    (hamming, right rank), rescore. With ``lsk = rsk = None``: every
+    pair is a candidate (lossless); for levenshtein, pass the right side
+    sorted by length so each left key scans only its admissible length
+    window. Either way only pairs with normalized distance <= ``bound``
+    come back, as (left_row_idx int64, right_idx int32, distance
+    float64) arrays."""
     lib = _get_lib()
     if lib is None:
         raise RuntimeError("native kernels unavailable")
-    nl, nr = len(lsk), len(rsk)
-    out_cap = max(nl * min(top_n, nr), 1)
-    out_li = np.empty(out_cap, dtype=np.int64)
-    out_rj = np.empty(out_cap, dtype=np.int32)
-    out_d = np.empty(out_cap, dtype=np.float64)
+    nl, nr = len(l_strs), len(r_off) - 1
+    exact = lsk is None
+    per_key = nr if exact else min(top_n, nr)
+    # output buffer: at least one left key's worst case; the kernel
+    # stops before a key that might overflow it and the loop resumes
+    cap = max(per_key, 1 << 16)
+    out_li = np.empty(cap, dtype=np.int64)
+    out_rj = np.empty(cap, dtype=np.int32)
+    out_d = np.empty(cap, dtype=np.float64)
     if nl == 0 or nr == 0:
         return out_li[:0], out_rj[:0], out_d[:0]
     lflat, loff = _flatten(l_strs)
@@ -727,41 +788,46 @@ def sketch_scan_score(
     i64p = ctypes.POINTER(ctypes.c_int64)
     i32p = ctypes.POINTER(ctypes.c_int32)
     f64p = ctypes.POINTER(ctypes.c_double)
-    rc = lib.sketch_scan_score(
-        np.ascontiguousarray(lsk, dtype=np.uint64).ctypes.data_as(u64p),
-        ctypes.c_int64(nl),
-        np.ascontiguousarray(rsk, dtype=np.uint64).ctypes.data_as(u64p),
-        ctypes.c_int64(nr),
-        ctypes.c_int64(max_hamming),
-        ctypes.c_int64(top_n),
-        ctypes.c_int(_METRIC_IDS[metric]),
-        lflat.ctypes.data_as(u32p),
-        loff.ctypes.data_as(i64p),
-        r_flat.ctypes.data_as(u32p),
-        r_off.ctypes.data_as(i64p),
-        ctypes.c_double(float(bound)),
-        ctypes.c_int64(out_cap),
-        out_li.ctypes.data_as(i64p),
-        out_rj.ctypes.data_as(i32p),
-        out_d.ctypes.data_as(f64p),
-    )
-    if rc < 0:
-        raise MemoryError("sketch_scan_score failed")
-    n = int(rc)
-    return out_li[:n], out_rj[:n], out_d[:n]
+    if exact:
+        lsk_p = rsk_p = None
+    else:
+        lsk = np.ascontiguousarray(lsk, dtype=np.uint64)
+        rsk = np.ascontiguousarray(rsk, dtype=np.uint64)
+        lsk_p, rsk_p = lsk.ctypes.data_as(u64p), rsk.ctypes.data_as(u64p)
+    parts = []
+    i, next_i = 0, ctypes.c_int64(0)
+    while i < nl:
+        rc = lib.sketch_scan_score(
+            lsk_p,
+            ctypes.c_int64(nl),
+            rsk_p,
+            ctypes.c_int64(nr),
+            ctypes.c_int64(max_hamming),
+            ctypes.c_int64(top_n),
+            ctypes.c_int(_METRIC_IDS[metric]),
+            lflat.ctypes.data_as(u32p),
+            loff.ctypes.data_as(i64p),
+            r_flat.ctypes.data_as(u32p),
+            r_off.ctypes.data_as(i64p),
+            ctypes.c_double(float(bound)),
+            ctypes.c_int64(i),
+            ctypes.byref(next_i),
+            ctypes.c_int64(cap),
+            out_li.ctypes.data_as(i64p),
+            out_rj.ctypes.data_as(i32p),
+            out_d.ctypes.data_as(f64p),
+        )
+        if rc < 0:
+            raise MemoryError("sketch_scan_score failed")
+        n = int(rc)
+        parts.append((out_li[:n].copy(), out_rj[:n].copy(), out_d[:n].copy()))
+        i = next_i.value
+    if len(parts) == 1:
+        return parts[0]
+    return tuple(np.concatenate(p) for p in zip(*parts))
 
 
 def flatten_strings(strings):
     """Public alias of the UTF-32 flattener for callers that prepare a
     side once and reuse it across kernel calls."""
     return _flatten(strings)
-
-
-def native_bounded_distance(metric: str, a, b, bound: float) -> "np.ndarray":
-    """Normalized distance for any metric with a caller-side bound:
-    levenshtein uses the banded C kernel (early exit past the cap,
-    rejects as 2.0 > bound); other metrics compute exactly — the
-    caller's ``<= bound`` filter applies either way."""
-    if metric == "levenshtein":
-        return batch_levenshtein_bounded(a, b, bound)
-    return NATIVE_DISTANCE[metric](a, b)

@@ -3,12 +3,19 @@
 Two physical strategies, mirroring the reference's adaptive choice
 (/root/reference/pl_fuzzy_frame_match/matcher.py:241-340):
 
-- **exact** (`cross_join_small_files`, matcher.py:164-185): full
-  cartesian of the two *deduped key frames*. Spark-first: a
-  ``crossJoin`` with an explicit broadcast hint when one key set is
-  small — a BroadcastNestedLoopJoin with zero shuffle; otherwise
-  Spark's partitioned CartesianProduct handles the large case (the
-  reference's manual side-swap heuristic dissolves into AQE).
+- **exact** (`cross_join_small_files`, matcher.py:164-185): every pair
+  of the two *deduped key frames*, scored losslessly. With the native
+  kernels available and the smaller key frame broadcastable, this is
+  one fused C scan (``approx_scored_pairs(..., lossless=True)``): the
+  smaller side is broadcast sorted by length, and each Arrow batch of
+  the other side is scored against all of it in one native pass. For
+  levenshtein a length window and a bag-distance lower bound reject
+  most pairs before the Myers DP (the per-candidate-pair filters of
+  *Fuzzy Joins Using MapReduce*, ICDE 2012), and only survivors cross
+  Arrow. Otherwise ``exact_candidates`` builds a ``crossJoin`` with a
+  broadcast hint when one key set is small (BroadcastNestedLoopJoin,
+  zero shuffle), or Spark's partitioned CartesianProduct, and the
+  matcher scores it with Spark-side columns.
 
 - **approx** (`cross_join_large_files`, matcher.py:99-161): the
   reference calls a Rust ANN plugin in 10k-row chunks with
@@ -18,21 +25,19 @@ Two physical strategies, mirroring the reference's adaptive choice
 
   * **SimHash sketch scan** (default, up to ~1e11 pairs): each
     distinct key gets a 64-bit SimHash of its 3-gram shingle set; the
-    candidate scan is a cross join over ``(key, sketch)`` pairs with
-    ``bit_count(a ^ b) <= max_hamming`` — one codegen'd instruction
-    per pair, no buckets, so it is *immune to LSH skew collapse*
-    (near-identical key families, e.g. sequential id-styled names,
-    put every key in one LSH bucket and OOM a banding join; a scan's
-    memory stays O(survivors)).
+    same native scan keeps pairs with ``popcount(a ^ b) <= max_hamming``
+    and the top-N per key — no buckets, so it is *immune to LSH skew
+    collapse* (near-identical key families, e.g. sequential id-styled
+    names, put every key in one LSH bucket and OOM a banding join; a
+    scan's memory stays O(survivors)).
   * **MinHash banding** (past the scan budget): pure-SQL signatures +
     band-key equi-joins (functions/minhash.py) — candidates ~linear
     when keys are diverse, which at that scale they must be for ANY
     sublinear method to work.
 
-  Both end with a per-left-key ``row_number`` window keeping the top-N
-  nearest candidates, then re-attach the per-key index lists. Lossy by
-  design exactly like the reference (candidate set is a subset of the
-  cartesian).
+  Both keep at most top-N nearest candidates per left key, then
+  re-attach the per-key index lists. Lossy by design exactly like the
+  reference (candidate set is a subset of the cartesian).
 """
 
 from __future__ import annotations
@@ -120,7 +125,9 @@ def exact_candidates(
     n_left_keys: int,
     n_right_keys: int,
 ) -> DataFrame:
-    """Cartesian of the deduped key frames (J1). Broadcasts the smaller
+    """Cartesian of the deduped key frames (J1): the exact tier's
+    fallback when the fused native scan cannot run (no C toolchain, or
+    both key sets past one broadcast). Broadcasts the smaller
     side when it fits (shuffle-free BroadcastNestedLoopJoin) and
     repartitions the probe side so scoring parallelism matches the
     cartesian's compute volume, not its (tiny) input row count."""
@@ -259,9 +266,16 @@ def approx_scored_pairs(
     num_hashes: int = MINHASH_HASHES,
     bands: int = MINHASH_BANDS,
     dist_col: str = "__dist",
+    lossless: bool = False,
 ) -> DataFrame:
     """Approximate candidates SCORED and THRESHOLDED:
     ``(left_col, right_col, dist_col)`` with ``dist_col <= dist_bound``.
+
+    ``lossless=True`` is the exact tier's fused native scan instead:
+    every key pair is scored in the C kernel (no hamming cap, no top-N),
+    so the rows equal the scored cross join. It needs the native kernels
+    and a broadcastable right side (at most ``BROADCAST_KEY_LIMIT``
+    keys); the caller keeps the cross join for everything else.
 
     On the sketch-scan path with the native kernels available, scoring
     fuses into the scan kernel (the reference's ``join_sim`` shape —
@@ -274,6 +288,18 @@ def approx_scored_pairs(
     from ..functions.kernels import distance_column
     from ..functions.native_kernels import native_available
 
+    if lossless:
+        if not native_available() or n_right_keys > BROADCAST_KEY_LIMIT:
+            raise ValueError(
+                "lossless scan needs the native kernels and a right side"
+                " of at most BROADCAST_KEY_LIMIT keys"
+            )
+        return _sketch_scan_topn(
+            left_keys, right_keys, left_col, right_col, top_n,
+            n_left_keys, n_right_keys, max_hamming,
+            rescore_metric=metric, rescore_bound=dist_bound,
+            dist_col=dist_col, lossless=True,
+        )
     pair_volume = max(n_left_keys, 1) * max(n_right_keys, 1)
     if pair_volume <= ANN_CATALYST_CAP:
         return _catalyst_topn_scored(
@@ -597,6 +623,19 @@ _RANK_BITS = 21
 # kernel work and one wave at bench scale.
 SKETCH_PAIRS_PER_TASK = 16_000_000
 
+# Per-task pair budget for the lossless (exact-tier) levenshtein scan.
+# Measured on a 4-core host: the kernel scores fuzzbench exact_names
+# names (34.5 chars, bound 0.25) at ~100M pairs/s/core, since the
+# length and bag-distance filters leave ~1.6% of pairs for Myers; keys
+# that defeat both filters (templated "customer#000001234" families)
+# run Myers on every pair at ~7M pairs/s/core. A task costs ~0.1 s of
+# fixed overhead: exact_names (3.2M pairs, seed 4, 8 interleaved
+# repetitions) joined in 1.01 / 1.09 / 1.28 s medians at 1 / 2 / 4
+# tasks. 4M pairs keeps a worst-case task under ~0.6 s. The other
+# metrics score at 0.1-0.3M pairs/s/core in the same kernel, the rate
+# PAIRS_PER_TASK was set for.
+EXACT_SCAN_PAIRS_PER_TASK = 4_000_000
+
 # Below this right-side key count the kernel emits the RIGHT KEY
 # STRING directly (the originals ride the broadcast next to the
 # sketches and lowered forms): the Arrow exit carries ~30 bytes more
@@ -621,6 +660,7 @@ def _sketch_scan_topn(
     rescore_metric: str | None = None,
     rescore_bound: float | None = None,
     dist_col: str = "__dist",
+    lossless: bool = False,
 ) -> DataFrame:
     """Brute sketch scan as a vectorized kernel: the right side's
     ``(key, 64-bit SimHash)`` pairs are broadcast as numpy arrays
@@ -646,7 +686,14 @@ def _sketch_scan_topn(
     never raw candidates). At a saturated candidate budget this
     collapses the Arrow exit volume by orders of magnitude (e.g. 126M
     candidates -> 7.7K survivors on the 4B-pair bench shape). Output is
-    then ``(left_col, right_col, dist_col)``."""
+    then ``(left_col, right_col, dist_col)``.
+
+    ``lossless`` (with the rescore arguments) is the exact tier: no
+    sketches, no hamming cap, no top-N — every key pair is scored in
+    the C kernel, empty keys included, so the output equals the scored
+    cross join. The right side is broadcast sorted by lowercased length
+    so the levenshtein length and bag-distance filters skip most pairs
+    before the DP."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import (
@@ -662,25 +709,36 @@ def _sketch_scan_topn(
     rescoring = rescore_metric is not None and rescore_bound is not None
 
     spark = left_keys.sparkSession
-    # kernel-calibrated task sizing (round 10): see SKETCH_PAIRS_PER_TASK
+    if not lossless:
+        per_task = SKETCH_PAIRS_PER_TASK
+    elif rescore_metric == "levenshtein":
+        per_task = EXACT_SCAN_PAIRS_PER_TASK
+    else:
+        per_task = PAIRS_PER_TASK
     n_parts = _compute_parallelism(
-        left_keys,
-        max(n_left_keys, 1) * max(n_right_keys, 1),
-        per_task=SKETCH_PAIRS_PER_TASK,
+        left_keys, max(n_left_keys, 1) * max(n_right_keys, 1), per_task
     )
     # sketches for BOTH sides come from the same numpy routine (driver
     # for the broadcast build side, inside the kernel for probes) — no
     # JVM interpreted-HOF expression in the path, and bit-for-bit
-    # agreement is guaranteed by construction
-    ls = left_keys.filter(F.length(left_col) > 0).repartition(n_parts).select(
-        left_col
-    )
-    rkeys = sorted(
-        r[0]
-        for r in right_keys.filter(F.length(right_col) > 0)
-        .select(right_col)
-        .collect()
-    )
+    # agreement is guaranteed by construction. The lossless scan keeps
+    # empty keys: the cross join matches "" with "".
+    if lossless:
+        ls = left_keys.repartition(n_parts).select(left_col)
+        rkeys = sorted(
+            (r[0] for r in right_keys.select(right_col).collect()),
+            key=lambda k: (len(k.lower()), k),
+        )
+    else:
+        ls = left_keys.filter(F.length(left_col) > 0).repartition(
+            n_parts
+        ).select(left_col)
+        rkeys = sorted(
+            r[0]
+            for r in right_keys.filter(F.length(right_col) > 0)
+            .select(right_col)
+            .collect()
+        )
     if not rkeys:
         # all right keys empty/filtered (O7 catches empty FRAMES, not
         # frames whose every key is the empty string): empty candidates
@@ -704,11 +762,10 @@ def _sketch_scan_topn(
             "sketch scan right side exceeds rank budget; raise"
             " SKETCH_SCAN_CAP gating or use the banded path"
         )
-    rsk = simhash_sketch_np(rkeys)
     emit_keys = len(rkeys) <= SKETCH_EMIT_KEY_LIMIT
     bc = spark.sparkContext.broadcast(
         (
-            rsk,
+            None if lossless else simhash_sketch_np(rkeys),
             np.array(rkeys, dtype=object) if emit_keys else None,
             [k.lower() for k in rkeys] if rescoring else None,
         )
@@ -729,14 +786,10 @@ def _sketch_scan_topn(
 
     def scan(batches):
         rv, rarr, rlow = bc.value
-        m = len(rv)
-        if m == 0:
-            return
         if rescoring:
-            # fused C path: scan + top-N + rescore + threshold in one
-            # native pass (no 20 MB hamming-matrix temporaries; the
-            # right sketch vector is cache-resident). Chunked so the
-            # survivor buffer stays bounded.
+            # fused C path: candidates + rescore + threshold in one
+            # native pass per Arrow batch (no hamming-matrix
+            # temporaries; the right side is cache-resident)
             from ..functions.native_kernels import (
                 flatten_strings,
                 sketch_scan_score,
@@ -747,26 +800,21 @@ def _sketch_scan_topn(
                 if not len(pdf):
                     continue
                 lk = pdf[left_col].to_numpy()
-                lv = simhash_sketch_np(lk)
-                llow = [k.lower() for k in lk]
-                step = 4096
-                for c0 in range(0, len(lv), step):
-                    li, rj, d = sketch_scan_score(
-                        lv[c0 : c0 + step],
-                        rv,
-                        llow[c0 : c0 + step],
-                        r_flat,
-                        r_off,
-                        max_hamming,
-                        top_n,
-                        rescore_metric,
-                        rescore_bound,
-                    )
-                    if not len(li):
-                        continue
+                li, rj, d = sketch_scan_score(
+                    None if lossless else simhash_sketch_np(lk),
+                    rv,
+                    [k.lower() for k in lk],
+                    r_flat,
+                    r_off,
+                    max_hamming,
+                    top_n,
+                    rescore_metric,
+                    rescore_bound,
+                )
+                if len(li):
                     yield pd.DataFrame(
                         {
-                            left_col: lk[c0 + li],
+                            left_col: lk[li],
                             rcol_out: rarr[rj] if emit_keys else rj,
                             dist_col: d,
                         }
@@ -777,7 +825,6 @@ def _sketch_scan_topn(
                 continue
             lk = pdf[left_col].to_numpy()
             lv = simhash_sketch_np(lk)
-            llow = None
             for c0 in range(0, len(lv), probe_chunk):
                 lc = lv[c0 : c0 + probe_chunk]
                 ham = _swar_popcount(lc[:, None] ^ rv[None, :])

@@ -7,8 +7,9 @@ Capability parity with the reference's pipeline
            low-uniqueness input dedup, collision renames, output order
   PHASE B  row identity: __left_index / __right_index
   PHASE C  per-mapping loop: key dedup (group->index list) -> adaptive
-           candidate generation (exact cross join | LSH approx) ->
-           score on DISTINCT key pairs -> threshold filter -> explode
+           candidate generation + scoring on DISTINCT key pairs (exact:
+           fused native scan, cross join fallback | approx: sketch scan
+           / LSH) -> threshold filter -> explode
   PHASE D  conjunction of all mappings + payload re-attach
 
 Spark-first deviations from the reference (same *semantics*, different
@@ -42,6 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
+from ..functions import native_kernels
 from ..functions.kernels import distance_column
 from ..models import FuzzyMapping
 from ..naming import (
@@ -59,6 +61,7 @@ from ..plans.planner import (
     should_deduplicate_inputs,
 )
 from .candidates import (
+    BROADCAST_KEY_LIMIT,
     DEFAULT_TOP_N,
     approx_scored_pairs,
     attach_index_lists,
@@ -82,7 +85,6 @@ NEIGHBORHOOD_MAX_EDITS = 2
 LEFT_INDEX = "__left_index"
 RIGHT_INDEX = "__right_index"
 _DIST = "__fuzzy_dist"
-_SCORE = "__fuzzy_score"
 
 # Refine rounds score far fewer pairs per task than the cross-join
 # tier (PAIRS_PER_TASK): the surviving pair set is usually small, and
@@ -159,16 +161,43 @@ def score_and_explode(
     d = distance_column(
         mapping.fuzzy_type, a, b, mapping.reversed_threshold_score
     )
+    scored = candidates.withColumn(_DIST, d).filter(
+        F.col(_DIST) <= F.lit(mapping.reversed_threshold_score)
+    )
+    return _explode_index_lists(scored, F.lit(1.0) - F.col(_DIST), mapping)
+
+
+def _explode_index_lists(
+    pairs: DataFrame, score, mapping: FuzzyMapping
+) -> DataFrame:
+    """Key pairs carrying both index lists -> one row per (left row,
+    right row): ``(__left_index, __right_index, <score col>)``."""
     return (
-        candidates.withColumn(_DIST, d)
-        .filter(F.col(_DIST) <= F.lit(mapping.reversed_threshold_score))
-        .withColumn(_SCORE, F.lit(1.0) - F.col(_DIST))
-        .select(_SCORE, LEFT_INDEX, RIGHT_INDEX)
+        pairs.select(
+            LEFT_INDEX, RIGHT_INDEX, score.alias(mapping.output_column_name)
+        )
         .withColumn(LEFT_INDEX, F.explode(LEFT_INDEX))
         .withColumn(RIGHT_INDEX, F.explode(RIGHT_INDEX))
-        .select(
-            LEFT_INDEX, RIGHT_INDEX, F.col(_SCORE).alias(mapping.output_column_name)
-        )
+    )
+
+
+def _explode_scored_pairs(
+    scored: DataFrame,
+    left_keys: DataFrame,
+    right_keys: DataFrame,
+    mapping: FuzzyMapping,
+    n_left_keys: int,
+    n_right_keys: int,
+) -> DataFrame:
+    """Thresholded key pairs ``(left key, right key, __fuzzy_dist)`` ->
+    row pairs. Index lists re-attach to the surviving pairs only, and
+    the pairs are distinct, so the exploded index pairs are unique."""
+    survivors = attach_index_lists(
+        scored, left_keys, right_keys, mapping.left_col, mapping.right_col,
+        n_left_keys, n_right_keys,
+    )
+    return _explode_index_lists(
+        survivors, F.lit(1.0) - F.col(_DIST), mapping
     )
 
 
@@ -212,12 +241,7 @@ def first_round_matches(
             on=eq,
             how="inner",
         )
-        return (
-            joined.select(LEFT_INDEX, RIGHT_INDEX)
-            .withColumn(LEFT_INDEX, F.explode(LEFT_INDEX))
-            .withColumn(RIGHT_INDEX, F.explode(RIGHT_INDEX))
-            .withColumn(mapping.output_column_name, F.lit(1.0))
-        )
+        return _explode_index_lists(joined, F.lit(1.0), mapping)
     from .candidates import SKETCH_SCAN_CAP
 
     cartesian = max(n_left_keys, 1) * max(n_right_keys, 1)
@@ -276,64 +300,23 @@ def first_round_matches(
             mapping.reversed_threshold_score, dist_col=_DIST,
             n_left_keys=n_left_keys, n_right_keys=n_right_keys,
             cap=max(neighborhood_cap, 1),
-        ).withColumn(_SCORE, F.lit(1.0) - F.col(_DIST))
-        survivors = attach_index_lists(
-            scored, left_keys, right_keys, mapping.left_col, mapping.right_col,
-            n_left_keys, n_right_keys,
         )
-        return (
-            survivors.select(_SCORE, LEFT_INDEX, RIGHT_INDEX)
-            .withColumn(LEFT_INDEX, F.explode(LEFT_INDEX))
-            .withColumn(RIGHT_INDEX, F.explode(RIGHT_INDEX))
-            .select(
-                LEFT_INDEX,
-                RIGHT_INDEX,
-                F.col(_SCORE).alias(mapping.output_column_name),
-            )
+        return _explode_scored_pairs(
+            scored, left_keys, right_keys, mapping, n_left_keys, n_right_keys
         )
     strategy = choose_candidate_strategy(
         n_left_keys, n_right_keys, use_appr_nearest_neighbor, cross_over
     )
-    if strategy.use_approx:
-        # Scored+thresholded pairs straight from the candidate layer
-        # (fused in-kernel rescoring on the sketch-scan path — only
-        # survivors cross Arrow); larger key set on the probe side
-        # (reference matcher.py:16-49). Index lists re-attach only for
-        # survivors: when the candidate budget saturates (dense
-        # neighborhoods), most candidates fail the threshold and must
-        # not pay the index joins. Pairs are distinct by construction,
-        # so exploded index pairs are unique — same as the exact path,
-        # no dedup shuffle.
-        if n_left_keys >= n_right_keys:
-            scored = approx_scored_pairs(
-                left_keys, right_keys, mapping.left_col, mapping.right_col,
-                mapping.fuzzy_type, mapping.reversed_threshold_score,
-                top_n=top_n, n_left_keys=n_left_keys,
-                n_right_keys=n_right_keys, dist_col=_DIST,
-            )
-        else:
-            scored = approx_scored_pairs(
-                right_keys, left_keys, mapping.right_col, mapping.left_col,
-                mapping.fuzzy_type, mapping.reversed_threshold_score,
-                top_n=top_n, n_left_keys=n_right_keys,
-                n_right_keys=n_left_keys, dist_col=_DIST,
-            )
-        scored = scored.withColumn(_SCORE, F.lit(1.0) - F.col(_DIST))
-        survivors = attach_index_lists(
-            scored, left_keys, right_keys, mapping.left_col, mapping.right_col,
-            n_left_keys, n_right_keys,
-        )
-        pairs = (
-            survivors.select(_SCORE, LEFT_INDEX, RIGHT_INDEX)
-            .withColumn(LEFT_INDEX, F.explode(LEFT_INDEX))
-            .withColumn(RIGHT_INDEX, F.explode(RIGHT_INDEX))
-            .select(
-                LEFT_INDEX,
-                RIGHT_INDEX,
-                F.col(_SCORE).alias(mapping.output_column_name),
-            )
-        )
-    else:
+    # O4 exact tier: the fused native scan scores every key pair in C
+    # against the broadcast smaller side (lossless; only survivors
+    # cross Arrow). The codegen cross join stays as the fallback with
+    # no C toolchain or with both key sides past one broadcast.
+    fused_exact = (
+        not strategy.use_approx
+        and min(n_left_keys, n_right_keys) <= BROADCAST_KEY_LIMIT
+        and native_kernels.native_available()
+    )
+    if not (strategy.use_approx or fused_exact):
         cands = exact_candidates(
             left_keys.withColumn(
                 _LC_PREFIX + mapping.left_col,
@@ -346,8 +329,29 @@ def first_round_matches(
             n_left_keys,
             n_right_keys,
         )
-        pairs = score_and_explode(cands, mapping)
-    return pairs
+        return score_and_explode(cands, mapping)
+    # Scored+thresholded key pairs straight from the candidate layer
+    # (in-kernel scoring on the scan paths), larger key set on the
+    # probe side (reference matcher.py:16-49). Index lists re-attach
+    # only for survivors: most candidates fail the threshold and must
+    # not pay the index joins.
+    if n_left_keys >= n_right_keys:
+        scored = approx_scored_pairs(
+            left_keys, right_keys, mapping.left_col, mapping.right_col,
+            mapping.fuzzy_type, mapping.reversed_threshold_score,
+            top_n=top_n, n_left_keys=n_left_keys,
+            n_right_keys=n_right_keys, dist_col=_DIST, lossless=fused_exact,
+        )
+    else:
+        scored = approx_scored_pairs(
+            right_keys, left_keys, mapping.right_col, mapping.left_col,
+            mapping.fuzzy_type, mapping.reversed_threshold_score,
+            top_n=top_n, n_left_keys=n_right_keys,
+            n_right_keys=n_left_keys, dist_col=_DIST, lossless=fused_exact,
+        )
+    return _explode_scored_pairs(
+        scored, left_keys, right_keys, mapping, n_left_keys, n_right_keys
+    )
 
 
 def refine_matches(
@@ -576,9 +580,13 @@ def fuzzy_match_dfs(
     # (milliseconds) instead of the full stats result — empty inputs
     # skip the checkpoints entirely, non-empty inputs keep the
     # concurrent-wave latency win.
-    with ThreadPoolExecutor(max_workers=6) as pool:
+    with ThreadPoolExecutor(max_workers=7) as pool:
         left_empty_fut = pool.submit(left.isEmpty)
         right_empty_fut = pool.submit(right.isEmpty)
+        # the first round's fused scans need the native kernels: in a
+        # cold process their compile (~0.6-0.9 s of cc) overlaps the
+        # planner jobs instead of delaying the first-round plan
+        native_fut = pool.submit(native_kernels.native_available)
 
         def _gated_index(df: DataFrame, name: str) -> Optional[DataFrame]:
             if left_empty_fut.result() or right_empty_fut.result():
@@ -597,6 +605,7 @@ def fuzzy_match_dfs(
         right_count, right_uniq, right_maxlen = right_fut.result()
         left_i = left_idx_fut.result()
         right_i = right_idx_fut.result()
+        native_fut.result()
     maps = set_output_column_names(maps)
     if left_count == 0 or right_count == 0:  # O7 early exit
         if how == "left_anti":

@@ -11,9 +11,12 @@ Capability parity with the reference's pre-processing optimizer
   cartesian > 1e6 -> dropDuplicates the inputs on the key columns
   (pre_process.py:135-171, 317-322; intentionally changes output
   cardinality — pinned by the reference's own tests).
-- O4 adaptive physical strategy: exact cross join below the crossover,
+- O4 adaptive physical strategy: exact (lossless) below the crossover,
   LSH-approximate above it, hard abort past ABORT_CARTESIAN
-  (matcher.py:241-340).
+  (matcher.py:241-340). The exact tier runs as the fused native scan
+  over a broadcast key frame (operators/candidates.py), or as a scored
+  cross join without a C toolchain or when both key frames exceed one
+  broadcast.
 
 Spark mechanics: the distinct counts use one ``approx_count_distinct``
 aggregate per frame (single pass, HyperLogLog — same family as Polars'
@@ -227,8 +230,8 @@ def choose_candidate_strategy(
     use_appr_nearest_neighbor: bool | None = None,
     cross_over: float = DEFAULT_CROSS_OVER,
 ) -> Strategy:
-    """O4: exact cross join vs approximate (LSH) candidate generation,
-    on the cartesian of *distinct key counts* (reference matcher.py:241-340)."""
+    """O4: exact vs approximate (LSH) candidate generation, on the
+    cartesian of *distinct key counts* (reference matcher.py:241-340)."""
     cartesian = n_left_keys * n_right_keys
     if cartesian > ABORT_CARTESIAN:
         raise ValueError(

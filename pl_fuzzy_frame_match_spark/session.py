@@ -57,10 +57,21 @@ def get_spark(app_name: str = "pl-fuzzy-frame-match-spark", shuffle_partitions: 
         # from [5.3, 82.8, 102.3, 72.4] to a stable 5.5-8.9 s band
         # (OPTIMIZATION_r12.md). Override via SPARK_GRAFT_DRIVER_MEM
         # for memory-heavier ad-hoc work.
+        #
+        # NewRatio=3 fixes G1's young generation at a quarter of the
+        # heap. Left adaptive, G1 starts eden small and widens it GC by
+        # GC, so a process's touched heap (its RSS) depends on how many
+        # collections it has seen, i.e. on timing: the fuzzy join's
+        # fused scans allocate little on the heap, and fuzzbench's
+        # peak_rss_mb spread by 0.4-0.9 GB (quartile range) from run to
+        # run. With a fixed young generation the footprint reaches its
+        # steady size within the first collections (4g heap, 4-core
+        # host, 10 seeds each: exact_names 2.83-2.98 GB, ann_names
+        # 2.72-2.78 GB, join times within noise of the adaptive runs).
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "12g"))
         .config(
             "spark.driver.extraJavaOptions",
-            "-Xms" + os.environ.get("SPARK_GRAFT_DRIVER_MEM", "12g"),
+            "-Xms" + os.environ.get("SPARK_GRAFT_DRIVER_MEM", "12g") + " -XX:NewRatio=3",
         )
         .config("spark.sql.crossJoin.enabled", "true")
         .config("spark.ui.enabled", "false")

@@ -174,3 +174,41 @@ def test_batch_distance_handles_nulls():
         out = _batch_distance(metric, a, b)
         assert out.isna().tolist() == [False, True, True, True], metric
         assert out[0] == pytest.approx(k.NORMALIZED_DISTANCE[metric]("abc", "abd"))
+
+
+def test_pandas_udf_scoring_survives_session_restart(spark, restart_spark):
+    """After a SparkContext restart the pandas-UDF kernels must bind the
+    live context, not the stopped one: a UDF built before the restart
+    reports to a dead accumulator server ("Failed to update
+    accumulator"). Scores again through the UDF column and the fused
+    join tier on the fresh session."""
+    from pl_fuzzy_frame_match_spark import FuzzyMapping, fuzzy_match_dfs
+    from pl_fuzzy_frame_match_spark.functions import kernels
+
+    def score(session):
+        df = session.createDataFrame(
+            [("martha", "marhta"), ("dixon", "dicksonx")], ["a", "b"]
+        )
+        d = distance_column("jaro_winkler", F.col("a"), F.col("b"))
+        return [round(r[0], 9) for r in df.select(d).collect()]
+
+    def join(session):
+        left = session.createDataFrame(
+            [(1, "Acme Corp"), (2, "Globex Inc")], ["lid", "lname"]
+        )
+        right = session.createDataFrame([(7, "Acme Corp.")], ["rid", "rname"])
+        maps = [FuzzyMapping("lname", "rname", 80.0, "jaro_winkler")]
+        return [(r["lid"], r["rid"]) for r in fuzzy_match_dfs(left, right, maps).collect()]
+
+    before = score(spark)
+    assert before == [
+        round(k.NORMALIZED_DISTANCE["jaro_winkler"](a, b), 9)
+        for a, b in (("martha", "marhta"), ("dixon", "dicksonx"))
+    ]
+    assert join(spark) == [(1, 7)]
+    fresh = restart_spark()
+    udf = kernels._pandas_distance_udf("jaro_winkler")
+    acc = udf._unwrapped._judf.func().accumulator()
+    assert acc.equals(fresh.sparkContext._javaAccumulator)
+    assert score(fresh) == before
+    assert join(fresh) == [(1, 7)]

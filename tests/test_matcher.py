@@ -304,25 +304,13 @@ def test_sql_registered_fuzzy_sim(spark):
     assert one["x"] is None
 
 
-@pytest.mark.parametrize(
-    "metric", ["levenshtein", "jaro_winkler", "indel", "damerau_levenshtein"]
+_ALL_METRICS = (
+    "levenshtein", "jaro", "jaro_winkler", "damerau_levenshtein", "indel",
+    "hamming",
 )
-def test_fused_rescoring_matches_jvm_scoring(spark, monkeypatch, metric):
-    """The in-kernel fused rescoring (native C metric kernels inside
-    the sketch scan) must produce exactly the rows + scores of the
-    unfused shape (candidates out, Spark-side scoring, filter) for
-    every metric branch of the C scanner."""
-    from pl_fuzzy_frame_match_spark.functions import native_kernels as natk
-    from pl_fuzzy_frame_match_spark.models import FuzzyMapping
-    from pl_fuzzy_frame_match_spark.operators.matcher import fuzzy_match_dfs
 
-    if not natk.native_available():
-        pytest.skip("no C toolchain")
-    # pin the SKETCH tier: at this volume the ANN path would otherwise
-    # plan as the catalyst top-N tier and never touch the C scanner
-    from pl_fuzzy_frame_match_spark.operators import candidates as cand
 
-    monkeypatch.setattr(cand, "ANN_CATALYST_CAP", -1.0)
+def _sketch_tier_frames(spark):
     import random
 
     rng = random.Random(23)
@@ -338,9 +326,88 @@ def test_fused_rescoring_matches_jvm_scoring(spark, monkeypatch, metric):
     right = spark.createDataFrame(
         [(i, n) for i, n in enumerate(names[:90])], ["rid", "rname"]
     )
+    return left, right
+
+
+def _exact_tier_frames(spark):
+    """A few hundred keys covering the exact tier's edge cases: empty
+    keys on both sides (the cross join matches "" with ""), nulls,
+    mixed case, non-ASCII keys and keys past 64 chars (the banded-DP
+    branch of the C levenshtein)."""
+    import random
+
+    rng = random.Random(7)
+    bases = [
+        "Acme Corp", "Zürich Straße Holdings", "São Paulo Comércio",
+        "北京 Trading 有限公司", "Ærøskøbing Færge", "Crème Brûlée Café",
+        "Globex", "Initech Systems", "ŁÓDŹ Fabryka",
+    ]
+    names = [f"{b} {i:03d}" for b in bases for i in range(16)]
+    names += [
+        f"{b} international holdings and subsidiaries group limited {i}"
+        for b in bases[:4] for i in range(6)
+    ]
+
+    def typo(s):
+        i = rng.randrange(len(s))
+        return s[:i] + rng.choice("xé北 Q") + s[i + 1:]
+
+    left = [(i, typo(n) if i % 3 else n.upper()) for i, n in enumerate(names)]
+    left += [(900, ""), (901, ""), (902, None), (903, "x")]
+    right = [(i, n) for i, n in enumerate(names[::2])]
+    right += [(900, ""), (901, None), (902, "y")]
+    return (
+        spark.createDataFrame(left, "lid long, lname string"),
+        spark.createDataFrame(right, "rid long, rname string"),
+    )
+
+
+@pytest.mark.parametrize(
+    "tier, metric, threshold",
+    [
+        pytest.param("sketch", m, 80.0, id=m)
+        for m in ("levenshtein", "jaro_winkler", "indel", "damerau_levenshtein")
+    ]
+    + [
+        pytest.param("exact", m, 75.0, id=f"exact-{m}")
+        for m in _ALL_METRICS
+    ]
+    + [
+        pytest.param("exact", m, t, id=f"exact-{m}-{t:g}")
+        for m in ("levenshtein", "jaro_winkler")
+        for t in (99.0, 1.0)
+    ],
+)
+def test_fused_rescoring_matches_jvm_scoring(
+    spark, monkeypatch, tier, metric, threshold
+):
+    """The in-kernel fused rescoring (native C metric kernels inside
+    the scan) must produce exactly the rows + scores of the unfused
+    shape (candidates out, Spark-side scoring, filter) for every metric
+    branch of the C scanner: on the lossy sketch tier (forced ANN) and
+    on the lossless exact tier, whose unfused twin is the codegen /
+    pandas-UDF cross join."""
+    from pl_fuzzy_frame_match_spark.functions import native_kernels as natk
+    from pl_fuzzy_frame_match_spark.operators import candidates as cand
+    from pl_fuzzy_frame_match_spark.operators import matcher as M
+
+    if not natk.native_available():
+        pytest.skip("no C toolchain")
+    if tier == "sketch":
+        # pin the SKETCH tier: at this volume the ANN path would
+        # otherwise plan as the catalyst top-N tier and never touch
+        # the C scanner
+        monkeypatch.setattr(cand, "ANN_CATALYST_CAP", -1.0)
+        left, right = _sketch_tier_frames(spark)
+        ann = True
+    else:
+        # keep small levenshtein bounds off the O9 equi-join rewrite
+        monkeypatch.setattr(M, "NEIGHBORHOOD_BOUND_GATE", 0.0)
+        left, right = _exact_tier_frames(spark)
+        ann = None
     maps = [
         FuzzyMapping(
-            "lname", "rname", threshold_score=80.0, fuzzy_type=metric
+            "lname", "rname", threshold_score=threshold, fuzzy_type=metric
         )
     ]
     score_col = f"lname_vs_rname_{metric}"
@@ -351,13 +418,20 @@ def test_fused_rescoring_matches_jvm_scoring(spark, monkeypatch, metric):
             for r in df.collect()
         )
 
-    fused = rows(
-        fuzzy_match_dfs(left, right, maps, use_appr_nearest_neighbor=True)
-    )
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    fused_df = fuzzy_match_dfs(left, right, maps, use_appr_nearest_neighbor=ann)
+    assert "MapInPandas" in plan(fused_df)
+    fused = rows(fused_df)
     assert fused  # fixture must match something
+    if tier == "exact":
+        assert (900, 900, 1.0) in fused  # "" matches ""
     # disable the native tier -> unfused JVM-scored shape
     monkeypatch.setattr(natk, "native_available", lambda: False)
-    unfused = rows(
-        fuzzy_match_dfs(left, right, maps, use_appr_nearest_neighbor=True)
+    unfused_df = fuzzy_match_dfs(
+        left, right, maps, use_appr_nearest_neighbor=ann
     )
-    assert fused == unfused
+    if tier == "exact":
+        assert "MapInPandas" not in plan(unfused_df)  # the cross join
+    assert fused == rows(unfused_df)
