@@ -13,13 +13,13 @@ Spark-first design:
   parameterized by metric (reference delegates to a Rust plugin;
   pandas UDF is the idiomatic Spark equivalent of that FFI boundary).
 
-The fuzzy join's first round does not score through these columns when
-the native kernels are available: its exact and sketch tiers score key
-pairs inside the fused C scan (operators/candidates.py), and only
-survivors cross Arrow. These columns serve the cross-join fallback, the
-refine rounds and the SQL function. Scoring is only ever applied to
-*distinct key pairs* (see operators/matcher.py), which keeps the
-Python batch volume minimal.
+The fuzzy join does not score through these columns when the native
+kernels are available: its first round's exact and sketch tiers score
+key pairs inside the fused C scan (operators/candidates.py), and the
+refine rounds score row pairs in one ``mapInArrow`` pass whose C entry
+point reads the Arrow buffers directly (operators/matcher.py). These
+columns serve the no-toolchain fallbacks (cross join, refine rounds)
+and the SQL function.
 """
 
 from __future__ import annotations

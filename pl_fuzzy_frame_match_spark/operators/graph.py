@@ -504,7 +504,11 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
 
 
 def cooccurrence_edges(
-    df: DataFrame, group_col: str, item_col: str, weighted: bool = False
+    df: DataFrame,
+    group_col: str,
+    item_col: str,
+    weighted: bool = False,
+    max_basket: int | None = None,
 ) -> DataFrame:
     """Market-basket edges: one undirected edge (u < v) per pair of
     distinct items sharing a group (e.g. parts co-ordered in the same
@@ -513,7 +517,13 @@ def cooccurrence_edges(
     basket-shaped data. Unweighted: repeat co-purchases collapse to
     one edge. ``weighted=True`` adds ``w`` = the number of groups the
     pair shares (co-purchase strength), the natural input for the
-    weighted PageRank walk."""
+    weighted PageRank walk.
+
+    ``max_basket`` guards against hot groups: a basket with more
+    distinct items than this generates its pairs through the
+    distributed self-join on the group key instead of one in-row array
+    of size^2 / 2 pairs. The result is the same; ``None`` (default)
+    keeps every basket in the array form."""
     # one exchange instead of three (guide §2.4): the old form ran
     # distinct(g, u) -> self-equi-join on g -> distinct(u, v), each its
     # own shuffle (plus AQE stage jobs). collect_set dedupes items
@@ -528,7 +538,10 @@ def cooccurrence_edges(
         .groupBy("g")
         .agg(F.array_sort(F.collect_set("u")).alias("__items"))
     )
-    pairs = baskets.select(
+    small = baskets
+    if max_basket is not None:
+        small = baskets.where(F.size("__items") <= F.lit(int(max_basket)))
+    pairs = small.select(
         F.explode(
             F.expr(
                 "flatten(transform(__items, (x, i) -> "
@@ -537,6 +550,8 @@ def cooccurrence_edges(
             )
         ).alias("__p")
     ).select(F.col("__p.u").alias("u"), F.col("__p.v").alias("v"))
+    if max_basket is not None:
+        pairs = pairs.union(_hot_basket_pairs(baskets, max_basket))
     if weighted:
         # collect_set made each basket contribute a pair at most once,
         # so the count is exactly "number of groups sharing the pair"
@@ -544,6 +559,22 @@ def cooccurrence_edges(
             F.count(F.lit(1)).cast("double").alias("w")
         )
     return pairs.distinct()
+
+
+def _hot_basket_pairs(
+    baskets: DataFrame, max_basket: int, ordered: bool = False
+) -> DataFrame:
+    """Item pairs ``(__a, __b)`` of the baskets (``g``, ``__items``:
+    distinct items) larger than ``max_basket``, through the join form:
+    the items explode back to rows and self-join on ``g``, so a hot
+    basket's quadratic fan-out spreads over tasks. ``__a < __b`` pairs,
+    or with ``ordered`` every ordered pair of distinct items."""
+    rows = baskets.where(F.size("__items") > F.lit(int(max_basket))).select(
+        "g", F.explode("__items").alias("__a")
+    )
+    other = rows.select("g", F.col("__a").alias("__b"))
+    keep = F.col("__a") != F.col("__b") if ordered else F.col("__a") < F.col("__b")
+    return rows.join(other, "g").where(keep).select("__a", "__b")
 
 
 def link_prediction(
@@ -842,6 +873,10 @@ def skipgram_pairs_from_paths(
     value-pins every pair at both gate SFs)."""
     if window < 1:
         raise ValueError("window must be >= 1")
+    # empty and null paths have no positions: size() is 0 / null for
+    # them, and sequence(0, size - 1) would count down into indices
+    # that element_at rejects
+    paths = paths.where(F.size("path") > 0)
     p = F.col("path")
     sz = F.size(p)
     w = F.lit(window)

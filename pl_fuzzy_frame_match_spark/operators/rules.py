@@ -30,10 +30,17 @@ def association_rules(
     item_col: str,
     min_support_count: int = 2,
     min_confidence_pct: int = 0,
+    max_basket: int | None = None,
 ) -> DataFrame:
     """Directional pairwise rules (antecedent -> consequent) with
     basket-count support >= ``min_support_count`` and
     confidence >= ``min_confidence_pct`` / 100 (integer-compared).
+
+    ``max_basket``: baskets with more distinct items than this generate
+    their pairs through the self-join on the basket key instead of one
+    in-row array (the hot-basket guard of
+    :func:`graph.cooccurrence_edges`); same result, ``None`` (default)
+    disables it.
 
     Output: (antecedent, consequent, pair_count, antecedent_count,
     support, confidence, lift) — support = pair baskets / all
@@ -59,18 +66,26 @@ def association_rules(
         .groupBy("item")
         .agg(F.count(F.lit(1)).alias("icnt"))
     )
-    pairs = (
-        baskets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(__items, x -> "
-                    "transform(filter(__items, y -> y != x), "
-                    "y -> named_struct('antecedent', x, 'consequent', y))))"
-                )
-            ).alias("__p")
+    small = baskets
+    if max_basket is not None:
+        small = baskets.where(F.size("__items") <= F.lit(int(max_basket)))
+    directed = small.select(
+        F.explode(
+            F.expr(
+                "flatten(transform(__items, x -> "
+                "transform(filter(__items, y -> y != x), "
+                "y -> named_struct('antecedent', x, 'consequent', y))))"
+            )
+        ).alias("__p")
+    ).select("__p.antecedent", "__p.consequent")
+    if max_basket is not None:
+        from .graph import _hot_basket_pairs
+
+        directed = directed.union(
+            _hot_basket_pairs(baskets, max_basket, ordered=True)
         )
-        .select("__p.antecedent", "__p.consequent")
-        .groupBy("antecedent", "consequent")
+    pairs = (
+        directed.groupBy("antecedent", "consequent")
         .agg(F.count(F.lit(1)).alias("pair_count"))
         .where(F.col("pair_count") >= F.lit(int(min_support_count)))
     )

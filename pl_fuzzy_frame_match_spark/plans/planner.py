@@ -183,12 +183,7 @@ def promote_exact_mappings(
     ) * max(right_uniq.get(lead.right_col, right_count), 1)
     # selectivity of the best exact key: its distinct-value count
     # (uniform-key estimate divides survivor volume by this)
-    best_key_distinct = max(
-        max(
-            left_uniq.get(m.left_col, 1), right_uniq.get(m.right_col, 1), 1
-        )
-        for m in exact
-    )
+    best_key_distinct = _best_key_distinct(exact, left_uniq, right_uniq)
     # materialization guard in ROW units — the promoted plan
     # checkpoints the surviving ROW pairs of the equi-join
     est_rows = cart // best_key_distinct
@@ -204,6 +199,34 @@ def promote_exact_mappings(
     if est_rows <= EXACT_FIRST_PAIR_CAP and avoided >= PROMOTE_MIN_FUZZY_PAIRS:
         return exact + fuzzy  # each block keeps its selectivity order
     return list(fuzzy_maps)
+
+
+def _best_key_distinct(
+    exact_maps: Sequence[FuzzyMapping],
+    left_uniq: Dict[str, int],
+    right_uniq: Dict[str, int],
+) -> int:
+    return max(
+        max(
+            left_uniq.get(m.left_col, 1), right_uniq.get(m.right_col, 1), 1
+        )
+        for m in exact_maps
+    )
+
+
+def estimate_exact_survivors(
+    exact_maps: Sequence[FuzzyMapping],
+    left_uniq: Dict[str, int],
+    right_uniq: Dict[str, int],
+    left_count: int,
+    right_count: int,
+) -> int:
+    """O10's uniform-key estimate of the row pairs that survive the
+    equi-join on ``exact_maps`` (threshold-100 mappings): the row
+    cartesian over the distinct-value count of the most selective
+    key."""
+    cart = max(left_count, 1) * max(right_count, 1)
+    return cart // _best_key_distinct(exact_maps, left_uniq, right_uniq)
 
 
 def should_deduplicate_inputs(

@@ -212,3 +212,154 @@ def test_pandas_udf_scoring_survives_session_restart(spark, restart_spark):
     assert acc.equals(fresh.sparkContext._javaAccumulator)
     assert score(fresh) == before
     assert join(fresh) == [(1, 7)]
+
+
+def _native_or_skip():
+    from pl_fuzzy_frame_match_spark.functions import native_kernels as natk
+
+    if not natk.native_available():
+        pytest.skip("no C toolchain in this environment")
+    return natk
+
+
+def _jaro_cases():
+    """A few hundred pairs: lengths 0, 1, 63, 64, 65 and 100 on both
+    sides (the bit-parallel routine covers <= 64 code points, longer
+    strings take the classic one), small alphabets that force
+    transpositions, non-ASCII code points and near-copies."""
+    rng = random.Random(41)
+    lengths = [0, 1, 63, 64, 65, 100]
+    alphabets = ["ab", "abc", "aé中😀", "abcdefghij klmnop"]
+    a, b = [], []
+    for la in lengths:
+        for lb in lengths:
+            for alpha in alphabets:
+                a.append("".join(rng.choice(alpha) for _ in range(la)))
+                b.append("".join(rng.choice(alpha) for _ in range(lb)))
+    for _ in range(120):  # near-copies: swaps and single edits
+        alpha = rng.choice(alphabets)
+        s = "".join(rng.choice(alpha) for _ in range(rng.randint(2, 70)))
+        i = rng.randrange(len(s) - 1)
+        t = s[:i] + s[i + 1] + s[i] + s[i + 2:]
+        if rng.random() < 0.5:
+            t = t[:rng.randrange(len(t))] + rng.choice(alpha) + t[1:]
+        a.append(s)
+        b.append(t)
+    return a, b
+
+
+@pytest.mark.parametrize("metric", ["jaro", "jaro_winkler"])
+def test_bit_parallel_jaro_equals_classic(metric):
+    """Bit-parallel Jaro / Jaro-Winkler equal the classic window scan
+    bit for bit, with the arguments in either order, through the batch
+    kernel and through the fused scan (which builds the pattern table
+    once per left key)."""
+    import numpy as np
+
+    natk = _native_or_skip()
+    winkler = metric == "jaro_winkler"
+    a, b = _jaro_cases()
+    classic = natk.classic_jaro_distance(a, b, winkler)
+    assert (natk.NATIVE_DISTANCE[metric](a, b) == classic).all()
+    assert (
+        natk.NATIVE_DISTANCE[metric](b, a)
+        == natk.classic_jaro_distance(b, a, winkler)
+    ).all()
+    exp = np.array([k.NORMALIZED_DISTANCE[metric](x, y) for x, y in zip(a, b)])
+    assert (classic == exp).all()
+    # fused scan, lossless mode: every (left, right) pair of a block
+    left, right = a[:48], b[:48]
+    r_flat, r_off = natk.flatten_strings(right)
+    li, rj, d = natk.sketch_scan_score(
+        None, None, left, r_flat, r_off, 0, 0, metric, 1.0
+    )
+    assert len(li) == len(left) * len(right)
+    want = natk.classic_jaro_distance(
+        [left[i] for i in li], [right[j] for j in rj], winkler
+    )
+    assert (d == want).all()
+
+
+def _arrow_pairs(spark):
+    """(a, b) pairs with 1-, 2-, 3- and 4-byte UTF-8 code points, empty
+    strings and nulls, lowered by the JVM and returned as Arrow arrays
+    exactly as a refine round receives them."""
+    rng = random.Random(43)
+    # the last alphabet pairs code points that differ only in the top
+    # payload bit of their UTF-8 lead byte (a U+0101 / U+0501,
+    # U+4E00 / U+CE00, 'a' / U+100061), so a decoder that drops it
+    # makes them equal
+    alphabets = [
+        "abcde", "abéüñ", "ab中文字", "a😀🚀b", "aé中😀 ",
+        "aāԁ一츀\U00100061",
+    ]
+    rows = []
+    for alpha in alphabets:
+        for _ in range(50):
+            s = "".join(rng.choice(alpha) for _ in range(rng.randint(0, 12)))
+            t = list(s)
+            if t and rng.random() < 0.7:
+                t[rng.randrange(len(t))] = rng.choice(alpha)
+            else:
+                t = [rng.choice(alpha) for _ in range(rng.randint(0, 12))]
+            rows.append((s.upper() if rng.random() < 0.2 else s, "".join(t)))
+    rows += [("", ""), ("", "x"), (None, "abc"), ("abc", None), (None, None)]
+    df = spark.createDataFrame(rows, "a string, b string")
+    table = df.select(
+        F.lower("a").alias("a"), F.lower("b").alias("b")
+    ).toArrow()
+    return (
+        table.column("a").combine_chunks(),
+        table.column("b").combine_chunks(),
+        df,
+    )
+
+
+@pytest.mark.parametrize("metric", METRICS)
+def test_arrow_entry_point_matches_batch_kernels(spark, metric):
+    """The Arrow refine entry point reads the UTF-8 buffers directly and
+    must keep the same rows with the same similarities as the batch
+    kernels over Python strings (1 - NATIVE_DISTANCE), nulls never
+    matching, also on sliced arrays (non-zero Arrow offset)."""
+    import numpy as np
+
+    natk = _native_or_skip()
+    a, b, _ = _arrow_pairs(spark)
+    for lo, hi in ((0, len(a)), (7, len(a) - 3)):
+        sa, sb = a.slice(lo, hi - lo), b.slice(lo, hi - lo)
+        av, bv = sa.to_pylist(), sb.to_pylist()
+        ok = [i for i in range(len(av)) if av[i] is not None and bv[i] is not None]
+        dist = natk.NATIVE_DISTANCE[metric](
+            [av[i] for i in ok], [bv[i] for i in ok]
+        )
+        for bound in (0.0, 0.01, 0.3, 0.5, 0.99, 1.0):
+            rows, sim = natk.arrow_score_pairs(sa, sb, metric, bound)
+            keep = dist <= bound
+            assert rows.tolist() == np.array(ok)[keep].tolist(), (metric, bound)
+            assert (sim == 1.0 - dist[keep]).all(), (metric, bound)
+
+
+def test_arrow_entry_point_matches_codegen_levenshtein(spark):
+    """Levenshtein through the Arrow entry point keeps exactly the pairs
+    and scores of the banded codegen levenshtein it replaces."""
+    _native_or_skip()
+    from pl_fuzzy_frame_match_spark.functions.native_kernels import (
+        arrow_score_pairs,
+    )
+
+    a, b, df = _arrow_pairs(spark)
+    indexed = df.withColumn("i", F.monotonically_increasing_id()).select(
+        "i", F.lower("a").alias("a"), F.lower("b").alias("b")
+    )
+    ids = [r["i"] for r in indexed.select("i").collect()]
+    for bound in (0.01, 0.25, 0.5, 0.99):
+        d = distance_column("levenshtein", F.col("a"), F.col("b"), bound)
+        codegen = sorted(
+            (ids.index(r["i"]), 1.0 - r["d"])
+            for r in indexed.select("i", d.alias("d"))
+            .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
+            .filter(F.col("d") <= bound)
+            .collect()
+        )
+        rows, sim = arrow_score_pairs(a, b, "levenshtein", bound)
+        assert list(zip(rows.tolist(), sim.tolist())) == codegen, bound

@@ -312,40 +312,101 @@ def test_promote_exact_mappings_ordering():
     ) == [fz]
 
 
-def test_refine_direct_path_equals_general(spark):
-    """The direct (row-level) refine and the general (distinct +
-    join-back) refine produce identical results — the planner flag
-    only moves cost."""
+_REFINE_METRICS = (
+    "levenshtein",
+    "jaro",
+    "jaro_winkler",
+    "damerau_levenshtein",
+    "indel",
+    "hamming",
+)
+
+
+def _refine_frames(spark):
+    """60 x 45 rows. ``g`` (12 values) is the most selective column, so
+    round 1 is its threshold-100 equi-join (225 row pairs); each metric
+    then refines its own copy ``v_<metric>`` of one value column. The
+    values pair case variants, 2-, 3- and 4-byte code points, single
+    edits and an end transposition of 120-char strings (past the 64
+    code points of the bit-parallel kernels), empty strings and nulls."""
+    lv = ["Müller GmbH", "東京都渋谷区", "😀 emoji co", "x" * 119 + "a",
+          "ab" * 60, "abcabcab", "Jon", "", None, "kitten", "ñandú"]
+    rv = ["MÜLLER GMBH", "東京都 渋谷区", "😀 emoji c0", "x" * 119 + "b",
+          "ab" * 59 + "ba", "bacbacba", "JOHN", "", None, "sitting", "Ñandu"]
+    vcols = ", ".join(f"v_{m} string" for m in _REFINE_METRICS)
+    left = spark.createDataFrame(
+        [(i, i % 12) + (lv[i % 11],) * 6 for i in range(60)],
+        f"lid long, g long, {vcols}",
+    )
+    right = spark.createDataFrame(
+        [(100 + j, j % 12) + (rv[(5 * j + 3) % 11],) * 6 for j in range(45)],
+        f"rid long, rg long, {vcols.replace('v_', 'rv_')}",
+    )
+    return left, right
+
+
+def _refine_rows(spark, monkeypatch, how, threshold, path):
+    """Join rows of the six-metric refine at ``threshold`` through one
+    refine path: ``native`` (the mapInArrow pass), or with
+    ``native_available`` patched to False the row-level ``direct`` or
+    distinct-pair ``general`` fallback."""
     from pl_fuzzy_frame_match_spark import FuzzyMapping, fuzzy_match_dfs
+    from pl_fuzzy_frame_match_spark.functions import native_kernels
     from pl_fuzzy_frame_match_spark.operators import matcher
 
-    left = spark.read.parquet(
-        "/root/testdata/sf0.001/customer.parquet"
-    ).selectExpr("c_custkey", "c_name", "CAST(c_nationkey AS STRING) c_nk")
-    right = spark.read.parquet(
-        "/root/testdata/sf0.001/supplier.parquet"
-    ).selectExpr("s_suppkey", "s_name", "CAST(s_nationkey AS STRING) s_nk")
-    maps = [
-        FuzzyMapping("c_nk", "s_nk", threshold_score=100.0),
-        FuzzyMapping("c_name", "s_name", threshold_score=60.0),
+    left, right = _refine_frames(spark)
+    maps = [FuzzyMapping("g", "rg", threshold_score=100.0)] + [
+        FuzzyMapping(f"v_{m}", f"rv_{m}", threshold_score=threshold, fuzzy_type=m)
+        for m in _REFINE_METRICS
     ]
+    with monkeypatch.context() as mp:
+        if path != "native":
+            mp.setattr(native_kernels, "native_available", lambda: False)
+        mp.setattr(
+            matcher, "REFINE_DIRECT_UNIQUENESS", 0.0 if path == "direct" else 2.0
+        )
+        out = fuzzy_match_dfs(left, right, maps, how=how)
+        return out, sorted(out.collect(), key=repr)
 
-    def rows(threshold):
-        orig = matcher.REFINE_DIRECT_UNIQUENESS
-        matcher.REFINE_DIRECT_UNIQUENESS = threshold
-        try:
-            out = fuzzy_match_dfs(left, right, maps)
-            return sorted(
-                (r["c_custkey"], r["s_suppkey"],
-                 round(r["c_name_vs_s_name_levenshtein"], 6))
-                for r in out.collect()
+
+# refine bounds near 1 (threshold 1) and near 0 (threshold 98: only
+# case variants, single edits and the transposition of the long
+# strings survive)
+_REFINE_THRESHOLDS = (1.0, 98.0)
+
+
+def test_refine_direct_path_equals_general(spark, monkeypatch):
+    """The native refine pass and both fallback refines (direct
+    row-level, general distinct + join-back) return identical rows and
+    scores for all six metrics — the path only moves cost. The native
+    round is one lazy plan: no checkpoint, no repartition."""
+    from pl_fuzzy_frame_match_spark.operators import matcher
+
+    general = {}
+    for threshold in _REFINE_THRESHOLDS:
+        results = {}
+        for path in ("native", "direct", "general"):
+            out, results[path] = _refine_rows(
+                spark, monkeypatch, "inner", threshold, path
             )
-        finally:
-            matcher.REFINE_DIRECT_UNIQUENESS = orig
-
-    direct = rows(0.0)   # force direct (always eligible)
-    general = rows(2.0)  # force general (never eligible)
-    assert direct == general and len(direct) > 0
+            if path == "native":
+                plan = out._jdf.queryExecution().optimizedPlan().toString()
+                assert plan.count("MapInArrow") == len(_REFINE_METRICS)
+                assert "Repartition" not in plan
+                # round 1's explode is still in the lineage: no
+                # checkpoint cut the plan between the rounds
+                assert "Generate explode" in plan
+        assert results["native"] == results["direct"] == results["general"]
+        assert len(results["native"]) > 0, threshold
+        if threshold > 50:
+            assert any(len(r["v_jaro"] or "") == 120 for r in results["native"])
+        general[threshold] = results["general"]
+    # past the per-task budget round 1's key pairs are spread before
+    # the explode; the rows stay the same
+    monkeypatch.setattr(matcher, "REFINE_NATIVE_PAIRS_PER_TASK", 10)
+    out, split = _refine_rows(spark, monkeypatch, "inner", 1.0, "native")
+    assert "Repartition" in out._jdf.queryExecution().optimizedPlan().toString()
+    assert split == general[1.0]
 
 
 # ---------------------------------------------------------------------------
@@ -915,42 +976,22 @@ def test_stream_audio_dedup_matches_batch(spark, tmp_path):
     assert len(rows) <= 32 - 2 * (32 // 4)
 
 
-def test_refine_direct_equals_general_across_join_modes(spark):
-    """O10 + direct refine must be mode-transparent: left / semi /
-    anti multi-mapping joins return identical rows on both refine
-    paths."""
-    from pl_fuzzy_frame_match_spark import FuzzyMapping, fuzzy_match_dfs
-    from pl_fuzzy_frame_match_spark.operators import matcher
-
-    left = spark.read.parquet(
-        "/root/testdata/sf0.001/customer.parquet"
-    ).selectExpr("c_custkey", "c_name", "CAST(c_nationkey AS STRING) c_nk")
-    right = spark.read.parquet(
-        "/root/testdata/sf0.001/supplier.parquet"
-    ).selectExpr("s_suppkey", "s_name", "CAST(s_nationkey AS STRING) s_nk")
-    maps = [
-        FuzzyMapping("c_nk", "s_nk", threshold_score=100.0),
-        FuzzyMapping("c_name", "s_name", threshold_score=60.0),
-    ]
-
+def test_refine_direct_equals_general_across_join_modes(spark, monkeypatch):
+    """O10 + refine must be mode-transparent: left / semi / anti joins
+    return identical rows on the native pass and on both fallback
+    refine paths, for all six metrics at bounds near 0 and near 1."""
     for how in ("left", "left_semi", "left_anti"):
-        results = {}
-        for label, bound in (("direct", 0.0), ("general", 2.0)):
-            orig = matcher.REFINE_DIRECT_UNIQUENESS
-            matcher.REFINE_DIRECT_UNIQUENESS = bound
-            try:
-                out = fuzzy_match_dfs(left, right, maps, how=how)
-                results[label] = sorted(
-                    tuple(
-                        round(v, 6) if isinstance(v, float) else v
-                        for v in r
-                    )
-                    for r in out.collect()
-                )
-            finally:
-                matcher.REFINE_DIRECT_UNIQUENESS = orig
-        assert results["direct"] == results["general"], how
-        assert len(results["direct"]) > 0, how
+        for threshold in _REFINE_THRESHOLDS:
+            # the direct fallback only at the bound near 1, where it
+            # scores the most pairs (each fallback call takes ~10 s)
+            paths = ("native", "general") + (("direct",) if threshold < 50 else ())
+            results = {
+                path: _refine_rows(spark, monkeypatch, how, threshold, path)[1]
+                for path in paths
+            }
+            for path in paths[1:]:
+                assert results[path] == results["native"], (how, threshold, path)
+            assert len(results["native"]) > 0, (how, threshold)
 
 
 def test_resize_images_geometry_and_null_safety(spark):
