@@ -375,7 +375,8 @@ def max_key_length(keys: DataFrame, col: str) -> int:
 
 
 def _deletion_variants(col, cap: int = 1) -> "F.Column":
-    """Lowercased deletion neighborhood of a key with up to ``cap``
+    """Deletion neighborhood of a key (lowered by the caller, in the
+    JVM, as the rescoring is) with up to ``cap``
     deletions (FastSS U_cap, Bocek et al. 2007), including the key
     itself, deduplicated and sorted (deterministic output order).
     |U_1| <= L + 1; |U_2| <= 1 + L + L(L-1)/2.
@@ -392,7 +393,7 @@ def _deletion_variants(col, cap: int = 1) -> "F.Column":
     @F.pandas_udf(ArrayType(StringType()))
     def delk(s: pd.Series) -> pd.Series:
         def variants(k):
-            k = ("" if k is None else k).lower()
+            k = "" if k is None else k
             out = {k}
             frontier = {k}
             for _ in range(cap):
@@ -443,10 +444,10 @@ def neighborhood_scored_pairs(
     from ..functions.kernels import distance_column
 
     lv = left_keys.select(left_col).withColumn(
-        "__var", F.explode(_deletion_variants(left_col, cap))
+        "__var", F.explode(_deletion_variants(jvm_lower(left_col), cap))
     )
     rv = right_keys.select(right_col).withColumn(
-        "__var", F.explode(_deletion_variants(right_col, cap))
+        "__var", F.explode(_deletion_variants(jvm_lower(right_col), cap))
     )
     # per-key variant fan-out bound: ~L+1 at cap 1, ~1+L+L(L-1)/2 at
     # cap 2 (L ~ 31 for realistic keys)
@@ -646,6 +647,25 @@ EXACT_SCAN_PAIRS_PER_TASK = 4_000_000
 # path stays.
 SKETCH_EMIT_KEY_LIMIT = 200_000
 
+# the JVM-lowered left key riding into the scan kernel
+_LC = "__lc_scan_key"
+
+_ASCII_UPPER = "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
+
+
+def jvm_lower(col) -> "F.Column":
+    """Spark's ``lower`` of a key column, lowered in the JVM. ``lower``
+    maps through ICU's case tables (``spark.sql.icu.caseMappings``),
+    whose first use in a process costs ~2 s and ~200 MB of driver
+    memory (measured on a 4-core host); on an all-ASCII value it is
+    exactly A-Z -> a-z, so those values take ``translate`` and only
+    non-ASCII values (more bytes than chars) reach ``lower``."""
+    c = (F.col(col) if isinstance(col, str) else col).cast("string")
+    return F.when(
+        F.length(c) == F.octet_length(c),
+        F.translate(c, _ASCII_UPPER, _ASCII_UPPER.lower()),
+    ).otherwise(F.lower(c))
+
 
 def _sketch_scan_topn(
     left_keys: DataFrame,
@@ -721,24 +741,26 @@ def _sketch_scan_topn(
     # sketches for BOTH sides come from the same numpy routine (driver
     # for the broadcast build side, inside the kernel for probes) — no
     # JVM interpreted-HOF expression in the path, and bit-for-bit
-    # agreement is guaranteed by construction. The lossless scan keeps
-    # empty keys: the cross join matches "" with "".
+    # agreement is guaranteed by construction. The keys the kernel
+    # rescores are lowered in the JVM (``_LC``), as on every other
+    # tier: Python's ``str.lower`` follows another Unicode version. The
+    # lossless scan keeps empty keys: the cross join matches "" with "".
+    lc = jvm_lower(left_col).alias(_LC)
     if lossless:
-        ls = left_keys.repartition(n_parts).select(left_col)
-        rkeys = sorted(
-            (r[0] for r in right_keys.select(right_col).collect()),
-            key=lambda k: (len(k.lower()), k),
+        ls = left_keys.repartition(n_parts).select(left_col, lc)
+        rpairs = sorted(
+            right_keys.select(right_col, jvm_lower(right_col)).collect(),
+            key=lambda r: (len(r[1]), r[0]),
         )
     else:
-        ls = left_keys.filter(F.length(left_col) > 0).repartition(
-            n_parts
-        ).select(left_col)
-        rkeys = sorted(
-            r[0]
-            for r in right_keys.filter(F.length(right_col) > 0)
-            .select(right_col)
+        ls = left_keys.filter(F.length(left_col) > 0).repartition(n_parts)
+        ls = ls.select(left_col, lc) if rescoring else ls.select(left_col)
+        rpairs = sorted(
+            right_keys.filter(F.length(right_col) > 0)
+            .select(right_col, jvm_lower(right_col))
             .collect()
         )
+    rkeys = [r[0] for r in rpairs]
     if not rkeys:
         # all right keys empty/filtered (O7 catches empty FRAMES, not
         # frames whose every key is the empty string): empty candidates
@@ -767,7 +789,7 @@ def _sketch_scan_topn(
         (
             None if lossless else simhash_sketch_np(rkeys),
             np.array(rkeys, dtype=object) if emit_keys else None,
-            [k.lower() for k in rkeys] if rescoring else None,
+            [r[1] for r in rpairs] if rescoring else None,
         )
     )
     fields = [
@@ -803,7 +825,7 @@ def _sketch_scan_topn(
                 li, rj, d = sketch_scan_score(
                     None if lossless else simhash_sketch_np(lk),
                     rv,
-                    [k.lower() for k in lk],
+                    pdf[_LC].tolist(),
                     r_flat,
                     r_off,
                     max_hamming,

@@ -21,10 +21,13 @@ machinery — documented per the survey's guidance):
 - Refinement rounds 2..n carry score columns forward instead of
   materializing per-round frames and re-intersecting them at the end
   (reference ``combine_matches``, matcher.py:388-392). With the native
-  kernels each round is one ``mapInArrow`` pass over the surviving row
-  pairs (C over the Arrow buffers, threshold applied in C), so all
-  rounds stay one lazy plan; without a toolchain a round scores
-  through codegen levenshtein or a pandas UDF.
+  kernels ALL rounds are one ``mapInArrow`` pass over round 1's row
+  pairs: each side's refine values are collected once per join as a
+  value table (row id -> JVM-lowered values, broadcast), so only the
+  row ids and scores cross Arrow; C scores each mapping on the
+  survivors of the one before, and the join stays one lazy plan.
+  Without a toolchain each round scores through codegen levenshtein
+  or a pandas UDF.
 - The reference's explicit spill-to-temp-dir machinery (_utils.py) and
   manual chunking/partitioned-dedup (matcher.py:52-96, 343-385)
   dissolve into Spark's native shuffle spill / partitioning.
@@ -70,6 +73,7 @@ from .candidates import (
     approx_scored_pairs,
     attach_index_lists,
     exact_candidates,
+    jvm_lower,
     max_key_length,
     neighborhood_scored_pairs,
 )
@@ -96,16 +100,15 @@ _DIST = "__fuzzy_dist"
 # (Fallback paths only; the native pass uses the budget below.)
 REFINE_PAIRS_PER_TASK = 20_000
 
-# Per-task row-pair budget of the native refine passes (JVM lower +
-# Arrow + C, ~1 us per pair per round on one core). Measured on a
-# 4-core host with the fuzzbench multi_refine inputs (seed 3), whole
-# joins, medians of 4 warm repetitions interleaved in one process:
-# 306K refine pairs joined in 1.55 s on one task, 1.67 s split 4 ways
-# and 2.20 s split 8 ways (task and Python-worker fixed cost outweigh
-# the spread); 1.2M pairs (4x the left rows) took 3.19 s on one task,
-# 2.42 / 2.48 / 2.91 s split 2 / 4 / 8 ways. Splitting pays from about
-# 300-600K pairs per task.
-REFINE_NATIVE_PAIRS_PER_TASK = 500_000
+# Per-task row-pair budget of the native refine pass (all refine
+# rounds, values from the value tables). Measured on a 4-core host
+# (load average 2-5 from other tenants) with the fuzzbench multi_refine
+# inputs, seed 3, left rows scaled, whole joins, medians of 4-5 warm
+# repetitions interleaved in one process, 1 / 2 / 4 / 8 tasks:
+# 306K refine pairs 1.08 / 1.09 / 1.16 s; 612K 1.19 / 1.23 / 1.29 s;
+# 1.2M 1.57 / 1.41 / 1.56 / 1.87 s; 2.4M 2.15 / 1.95 / 1.90 / 2.21 s.
+# Splitting pays from about 1M pairs, at ~0.6-1M pairs per task.
+REFINE_NATIVE_PAIRS_PER_TASK = 1_000_000
 
 # Above this uniqueness ratio on BOTH refine columns, the distinct
 # value-pair frame would be ~the row-level pair frame, so refine
@@ -118,6 +121,19 @@ REFINE_DIRECT_UNIQUENESS = 0.8
 # sit behind checkpoints, so AQE has no stats and would otherwise
 # sort-merge the (often much larger) match-pair frame against them.
 BROADCAST_ROW_LIMIT = 1_000_000
+
+# A side's refine values are collected once per join as a value table
+# (broadcast to the refine pass) up to BROADCAST_ROW_LIMIT rows and this
+# many estimated Arrow bytes (see value_table_fits); past either bound
+# one join per side carries the values into the pass instead. Measured
+# on a 4-core host (load average 4-5), N x N rows of random 30- and
+# 40-char values, a threshold-100 key with 2N row pairs, then
+# jaro_winkler and levenshtein refine rounds, medians of 2-3 whole
+# joins, tables vs joined values: N = 100K (est. 9.6 MB) 2.00 vs
+# 2.07 s; 400K (38 MB) 4.58 vs 4.85 s; 700K (67 MB) 11.1 vs 10.6 s;
+# 1M (96 MB) 18.5 vs 15.6 s. Every task of the pass loads the whole
+# table, so past ~50 MB the joins win.
+REFINE_TABLE_BYTES = 48 << 20
 
 
 def _maybe_broadcast(df: DataFrame, n_rows: Optional[int]) -> DataFrame:
@@ -378,8 +394,8 @@ def _refine_input_parts(
 ) -> Optional[int]:
     """Partitions for round 1's key pairs when round 1 is an equi-join
     that native refine rounds follow: AQE coalesces the few key pairs
-    to one partition, so every refine pass over their exploded row
-    pairs would run on one core. Past ``REFINE_NATIVE_PAIRS_PER_TASK``
+    to one partition, so the refine pass over their exploded row pairs
+    would run on one core. Past ``REFINE_NATIVE_PAIRS_PER_TASK``
     estimated row pairs (O10's estimate) the KEY pairs are spread
     before the explode; spreading the exploded rows instead costs a
     shuffle dearer per pair than the scoring it spreads."""
@@ -398,6 +414,32 @@ def _refine_input_parts(
     return min(-(-est // REFINE_NATIVE_PAIRS_PER_TASK), cores * 2)
 
 
+def value_table_fits(n_rows: int, max_lens: Sequence[int]) -> bool:
+    """Whether one side's refine values are collected as a value table:
+    at most ``BROADCAST_ROW_LIMIT`` rows and ``REFINE_TABLE_BYTES``
+    estimated Arrow bytes (an int64 id, and an int32 offset plus the
+    planner's max length per value column, per row)."""
+    est = n_rows * (8 + sum(4 + n for n in max_lens))
+    return 0 < n_rows <= BROADCAST_ROW_LIMIT and est <= REFINE_TABLE_BYTES
+
+
+def collect_value_table(df: DataFrame, index_col: str, cols: Sequence[str]):
+    """One Arrow collect of ``(index, lower(col), ...)``, sorted by
+    index: ``(ids, {col: lowered values})``. The JVM lowers each input
+    row once, so the values equal Spark's ``lower`` by construction."""
+    import numpy as np
+
+    cols = list(dict.fromkeys(cols))
+    tbl = df.select(
+        index_col, *[jvm_lower(c).alias(c) for c in cols]
+    ).toArrow()
+    ids = tbl.column(0).to_numpy()
+    order = np.argsort(ids, kind="stable")
+    return ids[order], {
+        c: tbl.column(c).take(order).combine_chunks() for c in cols
+    }
+
+
 def refine_matches(
     left: DataFrame,
     right: DataFrame,
@@ -405,33 +447,62 @@ def refine_matches(
     mapping: FuzzyMapping,
     n_left: Optional[int] = None,
     n_right: Optional[int] = None,
-    direct: bool = False,
+    direct=False,
+    *,
+    more: Sequence[FuzzyMapping] = (),
+    tables=(None, None),
 ) -> DataFrame:
-    """Rounds 2..n (reference matcher.py:188-238, 456-491): restrict to
-    surviving index pairs, score their (left value, right value) pairs,
-    keep pairs passing this mapping's threshold, carry all prior score
-    columns forward. Conjunction semantics — output can only shrink
-    (pinned by the reference's monotonicity tests).
+    """Rounds 2..n (reference matcher.py:188-238, 456-491): restrict the
+    surviving index pairs to those whose (left value, right value)
+    pairs pass ``mapping`` and then each mapping of ``more`` in turn,
+    and carry all prior score columns forward. Conjunction semantics —
+    output can only shrink (pinned by the reference's monotonicity
+    tests). A score column of an existing name is replaced in place.
 
-    With the native kernels (threshold < 100) the round is one
-    ``mapInArrow`` pass over the row pairs (:func:`_score_rows_native`):
+    With the native kernels all rounds are ONE ``mapInArrow`` pass
+    over ``existing`` (:func:`_refine_pass`), in the given order, each
+    mapping scored only on the survivors of the one before
+    (threshold-100 mappings as lowercase equality). A side whose value
+    table is given in ``tables`` (``(left, right)``, each from
+    :func:`collect_value_table` or None) is looked up from it inside
+    the pass, so only the index and prior-score columns cross Arrow;
+    any other side joins its lowered values once, for all rounds.
     ``existing`` is referenced once and never checkpointed, and there
-    is no repartition (the opaque pass cannot sink below one), so every
-    round stays one lazy plan on the partitions it receives (see
-    :func:`_refine_input_parts`).
+    is no repartition, so the join stays one lazy plan on the
+    partitions it receives (see :func:`_refine_input_parts`).
 
-    Without a toolchain the round scores through
-    :func:`distance_column` (codegen levenshtein / pandas UDF). The
-    ``direct`` path (planner-flagged near-unique columns) scores the
-    rows behind a repartition + lazy checkpoint; the general path
-    scores each DISTINCT value pair once and joins back, and
-    materializes ``existing`` first (the Spark analogue of the
-    reference's per-round spill, matcher.py:492), because its plan
-    references it on two branches. The exact-match shortcut
-    (threshold 100) references ``existing`` once and stays lazy on
-    every path (VERDICT r4 #4: this was the fuzzy_join_multi
-    fixed-cost gap; the reference's O8 skipped per-round recounts the
-    same way)."""
+    Without a toolchain each round scores through
+    :func:`distance_column` (codegen levenshtein / pandas UDF) in
+    :func:`_refine_round`; ``direct`` (one flag for all rounds, or one
+    per round) picks its row-level path over the distinct-pair one."""
+    maps = [mapping, *more]
+    if native_kernels.native_available():
+        return _refine_pass(left, right, existing, maps, n_left, n_right, tables)
+    flags = direct if isinstance(direct, (list, tuple)) else [direct] * len(maps)
+    for m, d in zip(maps, flags):
+        existing = _refine_round(left, right, existing, m, n_left, n_right, d)
+    return existing
+
+
+def _refine_round(
+    left: DataFrame,
+    right: DataFrame,
+    existing: DataFrame,
+    mapping: FuzzyMapping,
+    n_left: Optional[int],
+    n_right: Optional[int],
+    direct: bool,
+) -> DataFrame:
+    """One refine round without the native kernels. The ``direct``
+    path (planner-flagged near-unique columns) scores the rows behind a
+    repartition + lazy checkpoint; the general path scores each
+    DISTINCT value pair once and joins back, and materializes
+    ``existing`` first (the Spark analogue of the reference's per-round
+    spill, matcher.py:492), because its plan references it on two
+    branches. The exact-match shortcut (threshold 100) references
+    ``existing`` once and stays lazy (VERDICT r4 #4: this was the
+    fuzzy_join_multi fixed-cost gap; the reference's O8 skipped
+    per-round recounts the same way)."""
 
     def _vals(frame: DataFrame) -> DataFrame:
         return (
@@ -468,8 +539,6 @@ def refine_matches(
             .withColumn(mapping.output_column_name, F.lit(1.0))
             .drop(mapping.left_col, mapping.right_col)
         )
-    if native_kernels.native_available():
-        return _score_rows_native(_vals(existing), mapping)
     if direct:
         # near-unique refine columns (planner-flagged): the distinct
         # value-pair frame would be ~the row-level frame, so the
@@ -550,53 +619,139 @@ def refine_matches(
     ).drop(mapping.left_col, mapping.right_col)
 
 
-def _score_rows_native(vals: DataFrame, mapping: FuzzyMapping) -> DataFrame:
-    """Score the row-level value pairs of a refine round in one
-    ``mapInArrow`` pass: the JVM lowers both value columns, C reads
-    them straight from the Arrow buffers, scores and thresholds each
-    row, and the batch is filtered by the kept row indices, so the
-    index and prior-score columns pass through untouched. Output: the
-    ``vals`` columns minus the two value columns, with the score
-    appended (or replacing a prior column of the same name, as
-    ``withColumn`` does on the fallback paths)."""
-    la, lb = _LC_PREFIX + "refine_l", _LC_PREFIX + "refine_r"
-    out = mapping.output_column_name
-    cols = [
-        c for c in vals.columns if c not in (mapping.left_col, mapping.right_col)
-    ]
-    if out not in cols:
-        cols.append(out)
-    keep = [c for c in cols if c != out]
+def _refine_pass(
+    left: DataFrame,
+    right: DataFrame,
+    existing: DataFrame,
+    maps: Sequence[FuzzyMapping],
+    n_left: Optional[int],
+    n_right: Optional[int],
+    tables,
+) -> DataFrame:
+    """Every refine mapping in one ``mapInArrow`` pass over the row
+    pairs of ``existing``. Per side, the lowered values come either
+    from its value table (broadcast once; the batch's index column is
+    mapped to table positions with ``np.searchsorted``, and ids absent
+    from the table drop out, as in an inner join) or from one join of
+    ``(index, lower(col), ...)`` carrying all the side's refine
+    columns into the batch. Each mapping is scored in C
+    (``arrow_score_pairs`` on the ``take``n values; threshold 100 as
+    Arrow equality) on the survivors of the mapping before it, and the
+    batch is filtered by the kept rows, so the index and prior-score
+    columns pass through untouched. Output: ``existing``'s columns,
+    each new score column appended or replacing a prior column of the
+    same name, as ``withColumn`` does on the fallback."""
+    cols = list(existing.columns)
+    scored = [m.output_column_name for m in maps]
+    cols += [c for c in dict.fromkeys(scored) if c not in cols]
     schema = StructType(
         [
-            StructField(out, DoubleType(), False) if c == out else vals.schema[c]
+            StructField(c, DoubleType(), False)
+            if c in scored
+            else existing.schema[c]
             for c in cols
         ]
     )
+    sides = (
+        (left, LEFT_INDEX, n_left, tables[0], [m.left_col for m in maps]),
+        (right, RIGHT_INDEX, n_right, tables[1], [m.right_col for m in maps]),
+    )
+    frame = existing
+    side_cols, shipped = [], []
+    for s, (df, index, n_rows, table, vcols) in enumerate(sides):
+        vcols = list(dict.fromkeys(vcols))
+        side_cols.append(vcols)
+        if table is not None:
+            ids, values = table
+            shipped.append((ids, [values[c] for c in vcols]))
+            continue
+        shipped.append(None)
+        lowered = [
+            jvm_lower(c).alias(f"__refine_{s}_{k}")
+            for k, c in enumerate(vcols)
+        ]
+        frame = frame.join(
+            _maybe_broadcast(df.select(index, *lowered), n_rows),
+            on=index,
+            how="inner",
+        )
+    at = {c: i for i, c in enumerate(frame.columns)}
+    index_at = (at[LEFT_INDEX], at[RIGHT_INDEX])
+    value_at = [
+        [at.get(f"__refine_{s}_{k}") for k in range(len(side_cols[s]))]
+        for s in (0, 1)
+    ]
+    spec = [
+        (
+            side_cols[0].index(m.left_col),
+            side_cols[1].index(m.right_col),
+            m.fuzzy_type,
+            m.reversed_threshold_score,
+            m.output_column_name,
+        )
+        for m in maps
+    ]
+    pass_at = [None if c in scored else at[c] for c in cols]
     names = schema.names
-    metric, bound = mapping.fuzzy_type, mapping.reversed_threshold_score
-    n_keep, at = len(keep), cols.index(out)
+    bc = (
+        existing.sparkSession.sparkContext.broadcast(tuple(shipped))
+        if any(t is not None for t in shipped)
+        else None
+    )
 
     def score(batches):
+        import numpy as np
         import pyarrow as pa
+        import pyarrow.compute as pc
 
         from ..functions.native_kernels import arrow_score_pairs
 
+        tabs = bc.value if bc is not None else (None, None)
+
+        def values(batch, pos, rows, s, k):
+            if tabs[s] is None:
+                return batch.column(value_at[s][k]).take(rows)
+            return tabs[s][1][k].take(pos[s][rows])
+
         for batch in batches:
-            rows, sim = arrow_score_pairs(
-                batch.column(n_keep), batch.column(n_keep + 1), metric, bound
-            )
+            hit, pos = np.ones(batch.num_rows, dtype=bool), [None, None]
+            for s in (0, 1):
+                if tabs[s] is not None:
+                    ids = tabs[s][0]
+                    key = batch.column(index_at[s]).to_numpy()
+                    pos[s] = np.searchsorted(ids, key)
+                    found = pos[s] < len(ids)
+                    found[found] = ids[pos[s][found]] == key[found]
+                    hit &= found
+            rows = np.flatnonzero(hit)
+            sims = {}
+            for lk, rk, metric, bound, name in spec:
+                if not len(rows):
+                    break
+                a = values(batch, pos, rows, 0, lk)
+                b = values(batch, pos, rows, 1, rk)
+                if bound == 0.0:
+                    eq = pc.fill_null(pc.equal(a, b), False)
+                    keep = np.flatnonzero(eq.to_numpy(zero_copy_only=False))
+                    sim = np.ones(len(keep))
+                else:
+                    keep, sim = arrow_score_pairs(a, b, metric, bound)
+                rows = rows[keep]
+                sims = {c: v[keep] for c, v in sims.items()}
+                sims[name] = sim
             if len(rows):
                 take = pa.array(rows)
-                arrays = [batch.column(k).take(take) for k in range(n_keep)]
-                arrays.insert(at, pa.array(sim))
-                yield pa.RecordBatch.from_arrays(arrays, names=names)
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        pa.array(sims[c])
+                        if j is None
+                        else batch.column(j).take(take)
+                        for c, j in zip(names, pass_at)
+                    ],
+                    names=names,
+                )
 
-    return vals.select(
-        *keep,
-        F.lower(F.col(mapping.left_col)).alias(la),
-        F.lower(F.col(mapping.right_col)).alias(lb),
-    ).mapInArrow(score, schema)
+    return frame.mapInArrow(score, schema)
 
 
 def _empty_result(
@@ -683,7 +838,16 @@ def fuzzy_match_dfs(
     # (milliseconds) instead of the full stats result — empty inputs
     # skip the checkpoints entirely, non-empty inputs keep the
     # concurrent-wave latency win.
-    with ThreadPoolExecutor(max_workers=7) as pool:
+    #
+    # With refine rounds and the native kernels, each side's value table
+    # (every mapping column, lowered, by row id) is collected as soon as
+    # that side's index and stats are done. The collects overlap the
+    # other side's jobs and the first round's planning; the pool is not
+    # joined, and the refine call waits for them. The mapping order is
+    # not known yet, so round 1's column rides along; the refine pass
+    # ships only the refine columns.
+    pool = ThreadPoolExecutor(max_workers=9)
+    try:
         left_empty_fut = pool.submit(left.isEmpty)
         right_empty_fut = pool.submit(right.isEmpty)
         # the first round's fused scans need the native kernels: in a
@@ -696,19 +860,38 @@ def fuzzy_match_dfs(
                 return None  # O7 will exit; don't materialize anything
             return add_index_column(df, name)
 
-        left_fut = pool.submit(
-            get_count_uniqueness_and_maxlen, left, [m.left_col for m in maps]
-        )
+        def _gated_table(idx_fut, stats_fut, name, cols):
+            if len(cols) < 2 or not native_fut.result():
+                return None
+            indexed = idx_fut.result()
+            n_rows, _, max_lens = stats_fut.result()
+            if indexed is None or not value_table_fits(
+                n_rows, [max_lens[c] for c in dict.fromkeys(cols)]
+            ):
+                return None
+            return collect_value_table(indexed, name, cols)
+
+        left_cols = [m.left_col for m in maps]
+        right_cols = [m.right_col for m in maps]
+        left_fut = pool.submit(get_count_uniqueness_and_maxlen, left, left_cols)
         right_fut = pool.submit(
-            get_count_uniqueness_and_maxlen, right, [m.right_col for m in maps]
+            get_count_uniqueness_and_maxlen, right, right_cols
         )
         left_idx_fut = pool.submit(_gated_index, left, LEFT_INDEX)
         right_idx_fut = pool.submit(_gated_index, right, RIGHT_INDEX)
+        left_tab_fut = pool.submit(
+            _gated_table, left_idx_fut, left_fut, LEFT_INDEX, left_cols
+        )
+        right_tab_fut = pool.submit(
+            _gated_table, right_idx_fut, right_fut, RIGHT_INDEX, right_cols
+        )
         left_count, left_uniq, left_maxlen = left_fut.result()
         right_count, right_uniq, right_maxlen = right_fut.result()
         left_i = left_idx_fut.result()
         right_i = right_idx_fut.result()
         native_fut.result()
+    finally:
+        pool.shutdown(wait=False)
     maps = set_output_column_names(maps)
     if left_count == 0 or right_count == 0:  # O7 early exit
         if how == "left_anti":
@@ -763,52 +946,55 @@ def fuzzy_match_dfs(
         + [m.output_column_name for m in maps]
     )
 
-    # ---- PHASE C: per-mapping loop
-    matches: Optional[DataFrame] = None
+    # ---- PHASE C: round 1, then all refine rounds in one call
     key_pair_parts = _refine_input_parts(
         spark, maps, left_uniq, right_uniq, left_count, right_count
     )
-    for mapping in maps:
-        if matches is None:
-            logger.info(
-                "fuzzy match %s ~ %s (%s, threshold %s)",
-                mapping.left_col,
-                mapping.right_col,
-                mapping.fuzzy_type,
-                mapping.threshold_score,
-            )
-            matches = first_round_matches(
-                left_i,
-                right_i,
-                mapping,
-                left_uniq[mapping.left_col],
-                right_uniq[mapping.right_col],
-                use_appr_nearest_neighbor,
-                top_n,
-                cross_over_for_appr_nearest_neighbor,
-                max_len_left=left_maxlen.get(mapping.left_col),
-                max_len_right=right_maxlen.get(mapping.right_col),
-                n_parts=key_pair_parts,
-            )
-        else:
-            logger.info(
-                "refining matches on %s ~ %s", mapping.left_col, mapping.right_col
-            )
-            direct = (
-                left_uniq.get(mapping.left_col, 0)
-                >= REFINE_DIRECT_UNIQUENESS * left_count
-                and right_uniq.get(mapping.right_col, 0)
-                >= REFINE_DIRECT_UNIQUENESS * right_count
-            )
-            matches = refine_matches(
-                left_i,
-                right_i,
-                matches,
-                mapping,
-                left_count,
-                right_count,
-                direct=direct,
-            )
+    first = maps[0]
+    logger.info(
+        "fuzzy match %s ~ %s (%s, threshold %s)",
+        first.left_col,
+        first.right_col,
+        first.fuzzy_type,
+        first.threshold_score,
+    )
+    matches = first_round_matches(
+        left_i,
+        right_i,
+        first,
+        left_uniq[first.left_col],
+        right_uniq[first.right_col],
+        use_appr_nearest_neighbor,
+        top_n,
+        cross_over_for_appr_nearest_neighbor,
+        max_len_left=left_maxlen.get(first.left_col),
+        max_len_right=right_maxlen.get(first.right_col),
+        n_parts=key_pair_parts,
+    )
+    if len(maps) > 1:
+        logger.info(
+            "refining matches on %s",
+            [(m.left_col, m.right_col) for m in maps[1:]],
+        )
+        # direct: near-unique refine columns take the fallback's
+        # row-level path (no distinct + join-back)
+        direct = [
+            left_uniq.get(m.left_col, 0) >= REFINE_DIRECT_UNIQUENESS * left_count
+            and right_uniq.get(m.right_col, 0)
+            >= REFINE_DIRECT_UNIQUENESS * right_count
+            for m in maps[1:]
+        ]
+        matches = refine_matches(
+            left_i,
+            right_i,
+            matches,
+            maps[1],
+            left_count,
+            right_count,
+            direct=direct,
+            more=maps[2:],
+            tables=(left_tab_fut.result(), right_tab_fut.result()),
+        )
 
     # ---- PHASE D: payload re-attach + frozen column order
     if how in ("left_semi", "left_anti"):

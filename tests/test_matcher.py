@@ -332,8 +332,9 @@ def _sketch_tier_frames(spark):
 def _exact_tier_frames(spark):
     """A few hundred keys covering the exact tier's edge cases: empty
     keys on both sides (the cross join matches "" with ""), nulls,
-    mixed case, non-ASCII keys and keys past 64 chars (the banded-DP
-    branch of the C levenshtein)."""
+    mixed case, non-ASCII keys, keys whose lowercase differs between
+    the JVM and Python, and keys past 64 chars (the banded-DP branch
+    of the C levenshtein)."""
     import random
 
     rng = random.Random(7)
@@ -354,8 +355,12 @@ def _exact_tier_frames(spark):
 
     left = [(i, typo(n) if i % 3 else n.upper()) for i, n in enumerate(names)]
     left += [(900, ""), (901, ""), (902, None), (903, "x")]
+    # capitals that Spark's lower (the JVM's Unicode tables) folds but
+    # Python's str.lower of an older Unicode version does not
+    left += [(904, "X\ua7cbY"), (905, "abc\ua7dcd"), (906, "X\ua7cb\ua7cbY")]
     right = [(i, n) for i, n in enumerate(names[::2])]
     right += [(900, ""), (901, None), (902, "y")]
+    right += [(903, "x\u0264y"), (904, "abc\u019bd"), (905, "x\u0264\u0264y")]
     return (
         spark.createDataFrame(left, "lid long, lname string"),
         spark.createDataFrame(right, "rid long, rname string"),
@@ -376,7 +381,8 @@ def _exact_tier_frames(spark):
         pytest.param("exact", m, t, id=f"exact-{m}-{t:g}")
         for m in ("levenshtein", "jaro_winkler")
         for t in (99.0, 1.0)
-    ],
+    ]
+    + [pytest.param("o9", "levenshtein", 99.0, id="o9-levenshtein-99")],
 )
 def test_fused_rescoring_matches_jvm_scoring(
     spark, monkeypatch, tier, metric, threshold
@@ -386,7 +392,8 @@ def test_fused_rescoring_matches_jvm_scoring(
     shape (candidates out, Spark-side scoring, filter) for every metric
     branch of the C scanner: on the lossy sketch tier (forced ANN) and
     on the lossless exact tier, whose unfused twin is the codegen /
-    pandas-UDF cross join."""
+    pandas-UDF cross join. The O9 deletion-neighbourhood join (``o9``)
+    must match the cross join too."""
     from pl_fuzzy_frame_match_spark.functions import native_kernels as natk
     from pl_fuzzy_frame_match_spark.operators import candidates as cand
     from pl_fuzzy_frame_match_spark.operators import matcher as M
@@ -401,8 +408,9 @@ def test_fused_rescoring_matches_jvm_scoring(
         left, right = _sketch_tier_frames(spark)
         ann = True
     else:
-        # keep small levenshtein bounds off the O9 equi-join rewrite
-        monkeypatch.setattr(M, "NEIGHBORHOOD_BOUND_GATE", 0.0)
+        if tier == "exact":
+            # keep small levenshtein bounds off the O9 equi-join rewrite
+            monkeypatch.setattr(M, "NEIGHBORHOOD_BOUND_GATE", 0.0)
         left, right = _exact_tier_frames(spark)
         ann = None
     maps = [
@@ -422,16 +430,19 @@ def test_fused_rescoring_matches_jvm_scoring(
         return df._jdf.queryExecution().executedPlan().toString()
 
     fused_df = fuzzy_match_dfs(left, right, maps, use_appr_nearest_neighbor=ann)
-    assert "MapInPandas" in plan(fused_df)
+    # the scans run in mapInPandas, O9's variant UDF in ArrowEvalPython
+    shape = "ArrowEvalPython" if tier == "o9" else "MapInPandas"
+    assert shape in plan(fused_df)
     fused = rows(fused_df)
     assert fused  # fixture must match something
     if tier == "exact":
         assert (900, 900, 1.0) in fused  # "" matches ""
-    # disable the native tier -> unfused JVM-scored shape
+    # disable the native tier (and O9) -> unfused JVM-scored shape
     monkeypatch.setattr(natk, "native_available", lambda: False)
+    monkeypatch.setattr(M, "NEIGHBORHOOD_BOUND_GATE", 0.0)
     unfused_df = fuzzy_match_dfs(
         left, right, maps, use_appr_nearest_neighbor=ann
     )
-    if tier == "exact":
+    if tier != "sketch":
         assert "MapInPandas" not in plan(unfused_df)  # the cross join
     assert fused == rows(unfused_df)

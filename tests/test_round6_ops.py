@@ -328,18 +328,24 @@ def _refine_frames(spark):
     then refines its own copy ``v_<metric>`` of one value column. The
     values pair case variants, 2-, 3- and 4-byte code points, single
     edits and an end transposition of 120-char strings (past the 64
-    code points of the bit-parallel kernels), empty strings and nulls."""
+    code points of the bit-parallel kernels), empty strings and nulls,
+    and keys whose lowercase needs more than ASCII folding: dotted
+    capital I (lowers to two code points), sharp s and its capital,
+    a Greek final sigma and U+A7CB. Every left value meets its right
+    counterpart in some row pair."""
     lv = ["Müller GmbH", "東京都渋谷区", "😀 emoji co", "x" * 119 + "a",
-          "ab" * 60, "abcabcab", "Jon", "", None, "kitten", "ñandú"]
+          "ab" * 60, "abcabcab", "Jon", "", None, "kitten", "ñandú",
+          "İstanbul Straße", "ΟΔΟΣ \ua7cbY"]
     rv = ["MÜLLER GMBH", "東京都 渋谷区", "😀 emoji c0", "x" * 119 + "b",
-          "ab" * 59 + "ba", "bacbacba", "JOHN", "", None, "sitting", "Ñandu"]
+          "ab" * 59 + "ba", "bacbacba", "JOHN", "", None, "sitting", "Ñandu",
+          "İSTANBUL STRAẞE", "οδος \u0264y"]
     vcols = ", ".join(f"v_{m} string" for m in _REFINE_METRICS)
     left = spark.createDataFrame(
-        [(i, i % 12) + (lv[i % 11],) * 6 for i in range(60)],
+        [(i, i % 12) + (lv[i % len(lv)],) * 6 for i in range(60)],
         f"lid long, g long, {vcols}",
     )
     right = spark.createDataFrame(
-        [(100 + j, j % 12) + (rv[(5 * j + 3) % 11],) * 6 for j in range(45)],
+        [(100 + j, j % 12) + (rv[(j + 1) % len(rv)],) * 6 for j in range(45)],
         f"rid long, rg long, {vcols.replace('v_', 'rv_')}",
     )
     return left, right
@@ -347,9 +353,11 @@ def _refine_frames(spark):
 
 def _refine_rows(spark, monkeypatch, how, threshold, path):
     """Join rows of the six-metric refine at ``threshold`` through one
-    refine path: ``native`` (the mapInArrow pass), or with
-    ``native_available`` patched to False the row-level ``direct`` or
-    distinct-pair ``general`` fallback."""
+    refine path: ``native`` (the mapInArrow pass over broadcast value
+    tables), ``joined`` (the same pass with the values joined into the
+    batch: value-table bound 0), ``mixed`` (a left value table, right
+    values joined), or with ``native_available`` patched to False the
+    row-level ``direct`` or distinct-pair ``general`` fallback."""
     from pl_fuzzy_frame_match_spark import FuzzyMapping, fuzzy_match_dfs
     from pl_fuzzy_frame_match_spark.functions import native_kernels
     from pl_fuzzy_frame_match_spark.operators import matcher
@@ -360,7 +368,18 @@ def _refine_rows(spark, monkeypatch, how, threshold, path):
         for m in _REFINE_METRICS
     ]
     with monkeypatch.context() as mp:
-        if path != "native":
+        if path == "joined":
+            mp.setattr(matcher, "REFINE_TABLE_BYTES", 0)
+        elif path == "mixed":
+            collect = matcher.collect_value_table
+            mp.setattr(
+                matcher,
+                "collect_value_table",
+                lambda df, index, cols: collect(df, index, cols)
+                if index == matcher.LEFT_INDEX
+                else None,
+            )
+        elif path != "native":
             mp.setattr(native_kernels, "native_available", lambda: False)
         mp.setattr(
             matcher, "REFINE_DIRECT_UNIQUENESS", 0.0 if path == "direct" else 2.0
@@ -376,27 +395,37 @@ _REFINE_THRESHOLDS = (1.0, 98.0)
 
 
 def test_refine_direct_path_equals_general(spark, monkeypatch):
-    """The native refine pass and both fallback refines (direct
-    row-level, general distinct + join-back) return identical rows and
-    scores for all six metrics — the path only moves cost. The native
-    round is one lazy plan: no checkpoint, no repartition."""
+    """The native refine pass (value tables or joined values) and both
+    fallback refines (direct row-level, general distinct + join-back)
+    return identical rows and scores for all six metrics — the path
+    only moves cost. The native refine is one lazy plan: one pass for
+    all six rounds, no checkpoint, no repartition."""
     from pl_fuzzy_frame_match_spark.operators import matcher
 
     general = {}
     for threshold in _REFINE_THRESHOLDS:
-        results = {}
-        for path in ("native", "direct", "general"):
+        results, joins = {}, {}
+        for path in ("native", "joined", "mixed", "direct", "general"):
             out, results[path] = _refine_rows(
                 spark, monkeypatch, "inner", threshold, path
             )
-            if path == "native":
+            if path in ("native", "joined", "mixed"):
                 plan = out._jdf.queryExecution().optimizedPlan().toString()
-                assert plan.count("MapInArrow") == len(_REFINE_METRICS)
+                assert plan.count("MapInArrow") == 1
                 assert "Repartition" not in plan
                 # round 1's explode is still in the lineage: no
                 # checkpoint cut the plan between the rounds
                 assert "Generate explode" in plan
-        assert results["native"] == results["direct"] == results["general"]
+                joins[path] = plan.count("Join Inner")
+        # the value tables replace one value join per side
+        assert joins["joined"] == joins["mixed"] + 1 == joins["native"] + 2
+        assert (
+            results["native"]
+            == results["joined"]
+            == results["mixed"]
+            == results["direct"]
+            == results["general"]
+        )
         assert len(results["native"]) > 0, threshold
         if threshold > 50:
             assert any(len(r["v_jaro"] or "") == 120 for r in results["native"])
@@ -978,13 +1007,16 @@ def test_stream_audio_dedup_matches_batch(spark, tmp_path):
 
 def test_refine_direct_equals_general_across_join_modes(spark, monkeypatch):
     """O10 + refine must be mode-transparent: left / semi / anti joins
-    return identical rows on the native pass and on both fallback
-    refine paths, for all six metrics at bounds near 0 and near 1."""
+    return identical rows on the native pass (value tables or joined
+    values) and on both fallback refine paths, for all six metrics at
+    bounds near 0 and near 1."""
     for how in ("left", "left_semi", "left_anti"):
         for threshold in _REFINE_THRESHOLDS:
             # the direct fallback only at the bound near 1, where it
             # scores the most pairs (each fallback call takes ~10 s)
-            paths = ("native", "general") + (("direct",) if threshold < 50 else ())
+            paths = ("native", "joined", "general") + (
+                ("direct",) if threshold < 50 else ()
+            )
             results = {
                 path: _refine_rows(spark, monkeypatch, how, threshold, path)[1]
                 for path in paths
