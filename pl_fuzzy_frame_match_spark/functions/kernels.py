@@ -34,6 +34,25 @@ from .py_kernels import NORMALIZED_DISTANCE
 # metrics computable as pure Catalyst expressions (codegen, no Python)
 JVM_METRICS = ("levenshtein",)
 
+_ASCII_UPPER = "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
+
+
+def jvm_lower(col) -> Column:
+    """Spark's ``lower`` of a key column, lowered in the JVM: the one
+    lowercasing rule of every matching tier, so key equality and scores
+    agree across them (Python's ``str.lower`` follows another Unicode
+    version and differs on some code points). ``lower`` maps through
+    ICU's case tables (``spark.sql.icu.caseMappings``), whose first use
+    in a process costs ~2 s and ~200 MB of driver memory (measured on a
+    4-core host); on an all-ASCII value it is exactly A-Z -> a-z, so
+    those values take ``translate`` and only non-ASCII values (more
+    bytes than chars) reach ``lower``."""
+    c = (F.col(col) if isinstance(col, str) else col).cast("string")
+    return F.when(
+        F.length(c) == F.octet_length(c),
+        F.translate(c, _ASCII_UPPER, _ASCII_UPPER.lower()),
+    ).otherwise(F.lower(c))
+
 
 def _batch_distance(metric: str, a: pd.Series, b: pd.Series) -> pd.Series:
     """Normalized distance over one Arrow batch. Kernel tiers (pinned to
@@ -108,7 +127,7 @@ def distance_column(
 
 def similarity_column(metric: str, left: Column, right: Column) -> Column:
     """Similarity = 1 - normalized distance, on lowercased inputs."""
-    return F.lit(1.0) - distance_column(metric, F.lower(left), F.lower(right))
+    return F.lit(1.0) - distance_column(metric, jvm_lower(left), jvm_lower(right))
 
 
 def register_sql_functions(spark) -> None:

@@ -25,12 +25,14 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .kernels import jvm_lower
+
 
 def char_shingles(col: Column, n: int = 3) -> Column:
     """Distinct lowercased character n-grams. Strings shorter than ``n``
     contribute themselves as a single shingle so the set is never empty
     for non-empty input."""
-    low = F.lower(col)
+    low = jvm_lower(col)
     return F.array_distinct(
         F.transform(
             F.sequence(F.lit(1), F.greatest(F.length(low) - (n - 1), F.lit(1))),

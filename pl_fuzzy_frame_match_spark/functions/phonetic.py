@@ -46,6 +46,8 @@ import string
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .kernels import jvm_lower
+
 # letter -> digit table for 'abcdefghijklmnopqrstuvwxyz'
 SOUNDEX_DIGITS = "01230120022455012623010202"
 
@@ -53,7 +55,7 @@ SOUNDEX_DIGITS = "01230120022455012623010202"
 def soundex_code(col: Column) -> Column:
     """Knuth-variant Soundex code (see module docstring for the exact
     spec). NULL for NULL input or input with no ascii letters."""
-    letters = F.regexp_replace(F.lower(col), "[^a-z]", "")
+    letters = F.regexp_replace(jvm_lower(col), "[^a-z]", "")
     codes = F.translate(letters, string.ascii_lowercase, SOUNDEX_DIGITS)
     # Java regex supports backreferences; the DuckDB oracle mirrors
     # this with one run-collapse regexp per digit (RE2 has no \1).
@@ -140,7 +142,7 @@ def phonetic_blocked_pairs(
     if not score:
         return pairs.select("left_name", "right_name")
     sim = F.lit(1.0) - distance_column(
-        metric, F.lower(F.col("left_name")), F.lower(F.col("right_name"))
+        metric, jvm_lower("left_name"), jvm_lower("right_name")
     )
     return (
         pairs.withColumn("similarity", sim)

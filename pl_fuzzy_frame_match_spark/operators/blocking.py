@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.kernels import jvm_lower
+
 
 def sorted_neighborhood_pairs(
     df: DataFrame,
@@ -77,7 +79,7 @@ def sorted_neighborhood_pairs(
     if not score:
         return pairs.select("left_name", "right_name")
     sim = F.lit(1.0) - distance_column(
-        metric, F.lower(F.col("left_name")), F.lower(F.col("right_name"))
+        metric, jvm_lower("left_name"), jvm_lower("right_name")
     )
     return (
         pairs.withColumn("similarity", sim)
@@ -113,7 +115,7 @@ def prefix_block_pairs(
         .distinct()
         if distinct_keys is None
         else distinct_keys
-    ).withColumn("_pfx", F.substring(F.lower(F.col("left_name")), 1, prefix_len))
+    ).withColumn("_pfx", F.substring(jvm_lower("left_name"), 1, prefix_len))
     if max_block is not None:
         # block purging, same contract as phonetic_blocked_pairs
         small = (
@@ -134,7 +136,7 @@ def prefix_block_pairs(
     if not score:
         return pairs.select("left_name", "right_name")
     sim = F.lit(1.0) - distance_column(
-        metric, F.lower(F.col("left_name")), F.lower(F.col("right_name"))
+        metric, jvm_lower("left_name"), jvm_lower("right_name")
     )
     return (
         pairs.withColumn("similarity", sim)
@@ -176,7 +178,7 @@ def blocking_quality(
     )
     right = names.select(F.col("left_name").alias("right_name"))
     sim = F.lit(1.0) - distance_column(
-        metric, F.lower(F.col("left_name")), F.lower(F.col("right_name"))
+        metric, jvm_lower("left_name"), jvm_lower("right_name")
     )
     truth = (
         names.join(right, F.col("left_name") < F.col("right_name"))
@@ -283,7 +285,7 @@ def purged_block_report(
     out = None
     for tier, code in (
         ("phonetic", soundex_code(F.col("k"))),
-        ("prefix", F.substring(F.lower(F.col("k")), 1, prefix_len)),
+        ("prefix", F.substring(jvm_lower("k"), 1, prefix_len)),
     ):
         over = (
             keys.select(code.alias("_b"))
@@ -387,7 +389,7 @@ def resolve_entities(
         .distinct()
     )
     sim = F.lit(1.0) - distance_column(
-        metric, F.lower(F.col("left_name")), F.lower(F.col("right_name"))
+        metric, jvm_lower("left_name"), jvm_lower("right_name")
     )
     matches = cands.where(sim >= F.lit(threshold))
     lid = ranked.select(
@@ -461,7 +463,7 @@ def er_quality(
     )
     right = names.select(F.col("name").alias("right_name"))
     sim = F.lit(1.0) - distance_column(
-        metric, F.lower(F.col("name")), F.lower(F.col("right_name"))
+        metric, jvm_lower("name"), jvm_lower("right_name")
     )
     truth_matches = (
         names.join(right, F.col("name") < F.col("right_name"))

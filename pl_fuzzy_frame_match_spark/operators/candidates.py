@@ -48,6 +48,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.kernels import jvm_lower
 from ..functions.minhash import banded_buckets, char_shingles, est_jaccard
 
 # Broadcast a key frame when its distinct-key count is below this.
@@ -329,8 +330,8 @@ def approx_scored_pairs(
     la, lb = "__lc_scored_l", "__lc_scored_r"
     d = distance_column(metric, F.col(la), F.col(lb), dist_bound)
     return (
-        pairs.withColumn(la, F.lower(F.col(left_col)))
-        .withColumn(lb, F.lower(F.col(right_col)))
+        pairs.withColumn(la, jvm_lower(left_col))
+        .withColumn(lb, jvm_lower(right_col))
         .withColumn(dist_col, d)
         .filter(F.col(dist_col) <= F.lit(dist_bound))
         .drop(la, lb)
@@ -490,8 +491,8 @@ def neighborhood_scored_pairs(
     # pair's score is a pure function of the pair, so dedup order
     # cannot change the result set
     return (
-        cand.withColumn(la, F.lower(F.col(left_col)))
-        .withColumn(lb, F.lower(F.col(right_col)))
+        cand.withColumn(la, jvm_lower(left_col))
+        .withColumn(lb, jvm_lower(right_col))
         .withColumn(dist_col, d)
         .filter(F.col(dist_col) <= F.lit(dist_bound))
         .drop(la, lb)
@@ -527,9 +528,9 @@ def _catalyst_topn_scored(
 
     la, lb = "__lc_topn_l", "__lc_topn_r"
     cands = exact_candidates(
-        left_keys.select(left_col).withColumn(la, F.lower(F.col(left_col))),
+        left_keys.select(left_col).withColumn(la, jvm_lower(left_col)),
         right_keys.select(right_col).withColumn(
-            lb, F.lower(F.col(right_col))
+            lb, jvm_lower(right_col)
         ),
         n_left_keys,
         n_right_keys,
@@ -649,23 +650,6 @@ SKETCH_EMIT_KEY_LIMIT = 200_000
 
 # the JVM-lowered left key riding into the scan kernel
 _LC = "__lc_scan_key"
-
-_ASCII_UPPER = "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
-
-
-def jvm_lower(col) -> "F.Column":
-    """Spark's ``lower`` of a key column, lowered in the JVM. ``lower``
-    maps through ICU's case tables (``spark.sql.icu.caseMappings``),
-    whose first use in a process costs ~2 s and ~200 MB of driver
-    memory (measured on a 4-core host); on an all-ASCII value it is
-    exactly A-Z -> a-z, so those values take ``translate`` and only
-    non-ASCII values (more bytes than chars) reach ``lower``."""
-    c = (F.col(col) if isinstance(col, str) else col).cast("string")
-    return F.when(
-        F.length(c) == F.octet_length(c),
-        F.translate(c, _ASCII_UPPER, _ASCII_UPPER.lower()),
-    ).otherwise(F.lower(c))
-
 
 def _sketch_scan_topn(
     left_keys: DataFrame,

@@ -50,7 +50,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
 from ..functions import native_kernels
-from ..functions.kernels import distance_column
+from ..functions.kernels import distance_column, jvm_lower
 from ..models import FuzzyMapping
 from ..naming import (
     get_rename_right_columns_to_ensure_no_overlap,
@@ -73,7 +73,6 @@ from .candidates import (
     approx_scored_pairs,
     attach_index_lists,
     exact_candidates,
-    jvm_lower,
     max_key_length,
     neighborhood_scored_pairs,
 )
@@ -124,15 +123,20 @@ BROADCAST_ROW_LIMIT = 1_000_000
 
 # A side's refine values are collected once per join as a value table
 # (broadcast to the refine pass) up to BROADCAST_ROW_LIMIT rows and this
-# many estimated Arrow bytes (see value_table_fits); past either bound
-# one join per side carries the values into the pass instead. Measured
-# on a 4-core host (load average 4-5), N x N rows of random 30- and
-# 40-char values, a threshold-100 key with 2N row pairs, then
+# many Arrow bytes (estimated before the collect by value_table_fits,
+# checked on the collected table before the broadcast); past either
+# bound one join per side carries the values into the pass instead.
+# Measured on a 4-core host (load average 4-5), N x N rows of random
+# 30- and 40-char values, a threshold-100 key with 2N row pairs, then
 # jaro_winkler and levenshtein refine rounds, medians of 2-3 whole
 # joins, tables vs joined values: N = 100K (est. 9.6 MB) 2.00 vs
 # 2.07 s; 400K (38 MB) 4.58 vs 4.85 s; 700K (67 MB) 11.1 vs 10.6 s;
 # 1M (96 MB) 18.5 vs 15.6 s. Every task of the pass loads the whole
-# table, so past ~50 MB the joins win.
+# table, so past ~50 MB the joins win. Below it the tables pay: on the
+# fuzzbench multi_refine workload (~5K x 3K rows, same host, 10
+# interleaved pairs of 8 s runs, seeds 401-410) tables vs joined
+# values read 12.5M vs 10.1M pairs/s (medians; tables faster in 9 of
+# 10 pairs).
 REFINE_TABLE_BYTES = 48 << 20
 
 
@@ -184,12 +188,8 @@ def score_and_explode(
     volume — measured ~15% of the 80M-pair exact path), below the
     join it runs once per key row / once at broadcast build."""
     la, lb = _LC_PREFIX + mapping.left_col, _LC_PREFIX + mapping.right_col
-    a = F.col(la) if la in candidates.columns else F.lower(
-        F.col(mapping.left_col)
-    )
-    b = F.col(lb) if lb in candidates.columns else F.lower(
-        F.col(mapping.right_col)
-    )
+    a = F.col(la) if la in candidates.columns else jvm_lower(mapping.left_col)
+    b = F.col(lb) if lb in candidates.columns else jvm_lower(mapping.right_col)
     d = distance_column(
         mapping.fuzzy_type, a, b, mapping.reversed_threshold_score
     )
@@ -268,9 +268,9 @@ def first_round_matches(
         # concern entirely for exact mappings mixed into fuzzy specs.
         eq = "__eq_key"
         joined = left_keys.withColumn(
-            eq, F.lower(F.col(mapping.left_col))
+            eq, jvm_lower(mapping.left_col)
         ).join(
-            right_keys.withColumn(eq, F.lower(F.col(mapping.right_col))),
+            right_keys.withColumn(eq, jvm_lower(mapping.right_col)),
             on=eq,
             how="inner",
         )
@@ -355,11 +355,11 @@ def first_round_matches(
         cands = exact_candidates(
             left_keys.withColumn(
                 _LC_PREFIX + mapping.left_col,
-                F.lower(F.col(mapping.left_col)),
+                jvm_lower(mapping.left_col),
             ),
             right_keys.withColumn(
                 _LC_PREFIX + mapping.right_col,
-                F.lower(F.col(mapping.right_col)),
+                jvm_lower(mapping.right_col),
             ),
             n_left_keys,
             n_right_keys,
@@ -418,7 +418,10 @@ def value_table_fits(n_rows: int, max_lens: Sequence[int]) -> bool:
     """Whether one side's refine values are collected as a value table:
     at most ``BROADCAST_ROW_LIMIT`` rows and ``REFINE_TABLE_BYTES``
     estimated Arrow bytes (an int64 id, and an int32 offset plus the
-    planner's max length per value column, per row)."""
+    planner's max length per value column, per row). The max length
+    counts chars, so a non-ASCII side may collect up to ~4x the bound;
+    :func:`_refine_pass` broadcasts a table only if its collected
+    bytes fit."""
     est = n_rows * (8 + sum(4 + n for n in max_lens))
     return 0 < n_rows <= BROADCAST_ROW_LIMIT and est <= REFINE_TABLE_BYTES
 
@@ -533,8 +536,8 @@ def _refine_round(
         return (
             _vals(existing)
             .filter(
-                F.lower(F.col(mapping.left_col))
-                == F.lower(F.col(mapping.right_col))
+                jvm_lower(mapping.left_col)
+                == jvm_lower(mapping.right_col)
             )
             .withColumn(mapping.output_column_name, F.lit(1.0))
             .drop(mapping.left_col, mapping.right_col)
@@ -555,8 +558,8 @@ def _refine_round(
             _vals(existing)
             .repartition(cores * 2)
             .localCheckpoint(eager=False)
-            .withColumn(la, F.lower(F.col(mapping.left_col)))
-            .withColumn(lb, F.lower(F.col(mapping.right_col)))
+            .withColumn(la, jvm_lower(mapping.left_col))
+            .withColumn(lb, jvm_lower(mapping.right_col))
             .withColumn(
                 _DIST,
                 distance_column(
@@ -596,8 +599,8 @@ def _refine_round(
     # the alias binds one codegen variable per row
     la, lb = _LC_PREFIX + "refine_l", _LC_PREFIX + "refine_r"
     scored = (
-        distinct_pairs.withColumn(la, F.lower(F.col(mapping.left_col)))
-        .withColumn(lb, F.lower(F.col(mapping.right_col)))
+        distinct_pairs.withColumn(la, jvm_lower(mapping.left_col))
+        .withColumn(lb, jvm_lower(mapping.right_col))
         .withColumn(
             _DIST,
             distance_column(
@@ -630,7 +633,8 @@ def _refine_pass(
 ) -> DataFrame:
     """Every refine mapping in one ``mapInArrow`` pass over the row
     pairs of ``existing``. Per side, the lowered values come either
-    from its value table (broadcast once; the batch's index column is
+    from its value table (broadcast once, if its Arrow bytes fit
+    ``REFINE_TABLE_BYTES``; the batch's index column is
     mapped to table positions with ``np.searchsorted``, and ids absent
     from the table drop out, as in an inner join) or from one join of
     ``(index, lower(col), ...)`` carrying all the side's refine
@@ -662,9 +666,13 @@ def _refine_pass(
         vcols = list(dict.fromkeys(vcols))
         side_cols.append(vcols)
         if table is not None:
+            # the estimate counts chars; ship only tables whose UTF-8
+            # bytes fit, so a wide non-ASCII side joins its values
             ids, values = table
-            shipped.append((ids, [values[c] for c in vcols]))
-            continue
+            arrays = [values[c] for c in vcols]
+            if ids.nbytes + sum(a.nbytes for a in arrays) <= REFINE_TABLE_BYTES:
+                shipped.append((ids, arrays))
+                continue
         shipped.append(None)
         lowered = [
             jvm_lower(c).alias(f"__refine_{s}_{k}")
@@ -841,13 +849,11 @@ def fuzzy_match_dfs(
     #
     # With refine rounds and the native kernels, each side's value table
     # (every mapping column, lowered, by row id) is collected as soon as
-    # that side's index and stats are done. The collects overlap the
-    # other side's jobs and the first round's planning; the pool is not
-    # joined, and the refine call waits for them. The mapping order is
-    # not known yet, so round 1's column rides along; the refine pass
-    # ships only the refine columns.
-    pool = ThreadPoolExecutor(max_workers=9)
-    try:
+    # that side's index and stats are done, overlapping the other side's
+    # jobs. The mapping order is not known yet, so round 1's column
+    # rides along; the refine pass ships only the refine columns. A
+    # failed collect leaves that side to the join-fed values.
+    with ThreadPoolExecutor(max_workers=9) as pool:
         left_empty_fut = pool.submit(left.isEmpty)
         right_empty_fut = pool.submit(right.isEmpty)
         # the first round's fused scans need the native kernels: in a
@@ -869,7 +875,16 @@ def fuzzy_match_dfs(
                 n_rows, [max_lens[c] for c in dict.fromkeys(cols)]
             ):
                 return None
-            return collect_value_table(indexed, name, cols)
+            try:
+                return collect_value_table(indexed, name, cols)
+            except Exception:
+                logger.warning(
+                    "value table of %s not collected; its refine values"
+                    " are joined instead",
+                    name,
+                    exc_info=True,
+                )
+                return None
 
         left_cols = [m.left_col for m in maps]
         right_cols = [m.right_col for m in maps]
@@ -890,8 +905,7 @@ def fuzzy_match_dfs(
         left_i = left_idx_fut.result()
         right_i = right_idx_fut.result()
         native_fut.result()
-    finally:
-        pool.shutdown(wait=False)
+        tables = (left_tab_fut.result(), right_tab_fut.result())
     maps = set_output_column_names(maps)
     if left_count == 0 or right_count == 0:  # O7 early exit
         if how == "left_anti":
@@ -993,7 +1007,7 @@ def fuzzy_match_dfs(
             right_count,
             direct=direct,
             more=maps[2:],
-            tables=(left_tab_fut.result(), right_tab_fut.result()),
+            tables=tables,
         )
 
     # ---- PHASE D: payload re-attach + frozen column order

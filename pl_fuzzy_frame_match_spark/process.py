@@ -10,7 +10,7 @@ from typing import Optional, Tuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .functions.kernels import distance_column
+from .functions.kernels import distance_column, jvm_lower
 from .operators.matcher import LEFT_INDEX, RIGHT_INDEX, build_key_frame
 
 
@@ -29,8 +29,8 @@ def calculate_fuzzy_score(
     # every reference inside the banded-distance expression tree)
     la, lb = "__lc_proc_l", "__lc_proc_r"
     return (
-        mapping_table.withColumn(la, F.lower(F.col(left_col_name)))
-        .withColumn(lb, F.lower(F.col(right_col_name)))
+        mapping_table.withColumn(la, jvm_lower(left_col_name))
+        .withColumn(lb, jvm_lower(right_col_name))
         .withColumn(
             "s",
             distance_column(

@@ -13,6 +13,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.kernels import jvm_lower
+
 
 def _as_instant(df: DataFrame, col: str) -> DataFrame:
     """Watermarks require an instant (``TIMESTAMP``); parquet event-time
@@ -326,8 +328,8 @@ def _banded_fuzzy_enrich(
     joined = exploded.join(idx, on=["__band", "__bk"], how="left_outer")
     d = distance_column(
         mapping.fuzzy_type,
-        F.lower(F.col(key_col)),
-        F.lower(F.col("__rkey")),
+        jvm_lower(key_col),
+        jvm_lower("__rkey"),
         rev,
     )
     scored = joined.withColumn(
@@ -1073,7 +1075,7 @@ def phonetic_probe_batch(
         F.col(name_col).alias("query_name")
     ).withColumn("_qcode", soundex_code(F.col("query_name")))
     sim = F.lit(1.0) - distance_column(
-        metric, F.lower(F.col("query_name")), F.lower(F.col("match_name"))
+        metric, jvm_lower("query_name"), jvm_lower("match_name")
     )
     return (
         probes.join(index, probes["_qcode"] == index["_icode"])
@@ -1159,7 +1161,7 @@ def _entity_scored(queries, entities, name_col, threshold, metric):
         F.col(name_col).alias("query_name")
     ).withColumn("__qcode", soundex_code(F.col("query_name")))
     sim = F.lit(1.0) - distance_column(
-        metric, F.lower(F.col("query_name")), F.lower(F.col("__iname"))
+        metric, jvm_lower("query_name"), jvm_lower("__iname")
     )
     joined = probes.join(
         index, probes["__qcode"] == index["__icode"], "left"

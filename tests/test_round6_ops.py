@@ -355,8 +355,8 @@ def _refine_rows(spark, monkeypatch, how, threshold, path):
     """Join rows of the six-metric refine at ``threshold`` through one
     refine path: ``native`` (the mapInArrow pass over broadcast value
     tables), ``joined`` (the same pass with the values joined into the
-    batch: value-table bound 0), ``mixed`` (a left value table, right
-    values joined), or with ``native_available`` patched to False the
+    batch: value-table bound 0), ``mixed`` (a left value table; the
+    right table's collect fails, so its values are joined), or with ``native_available`` patched to False the
     row-level ``direct`` or distinct-pair ``general`` fallback."""
     from pl_fuzzy_frame_match_spark import FuzzyMapping, fuzzy_match_dfs
     from pl_fuzzy_frame_match_spark.functions import native_kernels
@@ -372,13 +372,13 @@ def _refine_rows(spark, monkeypatch, how, threshold, path):
             mp.setattr(matcher, "REFINE_TABLE_BYTES", 0)
         elif path == "mixed":
             collect = matcher.collect_value_table
-            mp.setattr(
-                matcher,
-                "collect_value_table",
-                lambda df, index, cols: collect(df, index, cols)
-                if index == matcher.LEFT_INDEX
-                else None,
-            )
+
+            def left_only(df, index, cols):
+                if index == matcher.RIGHT_INDEX:
+                    raise RuntimeError("collect failed")
+                return collect(df, index, cols)
+
+            mp.setattr(matcher, "collect_value_table", left_only)
         elif path != "native":
             mp.setattr(native_kernels, "native_available", lambda: False)
         mp.setattr(
@@ -436,6 +436,50 @@ def test_refine_direct_path_equals_general(spark, monkeypatch):
     out, split = _refine_rows(spark, monkeypatch, "inner", 1.0, "native")
     assert "Repartition" in out._jdf.queryExecution().optimizedPlan().toString()
     assert split == general[1.0]
+
+
+def test_refine_value_table_bound_counts_utf8_bytes(spark, monkeypatch):
+    """The value-table bound holds on the collected UTF-8 bytes, not on
+    the planner's char lengths: a side of 3-byte code points whose
+    char-based estimate fits (``value_table_fits``) but whose table
+    does not joins its values into the pass instead, with the same
+    rows; an ASCII side of the same char lengths keeps its table."""
+    from pl_fuzzy_frame_match_spark import FuzzyMapping, fuzzy_match_dfs
+    from pl_fuzzy_frame_match_spark.operators import matcher
+
+    maps = [
+        FuzzyMapping("k", "rk", threshold_score=100.0),
+        FuzzyMapping("v", "rv", threshold_score=80.0),
+    ]
+
+    def run(text, bound):
+        left = spark.createDataFrame(
+            [(i, i % 4, text + str(i % 3)) for i in range(20)],
+            "id long, k long, v string",
+        )
+        right = spark.createDataFrame(
+            [(j, j % 4, text.upper() + str(j % 2)) for j in range(16)],
+            "rid long, rk long, rv string",
+        )
+        with monkeypatch.context() as mp:
+            mp.setattr(matcher, "REFINE_TABLE_BYTES", bound)
+            out = fuzzy_match_dfs(left, right, maps)
+            plan = out._jdf.queryExecution().optimizedPlan().toString()
+            return plan.count("Join Inner"), sorted(out.collect(), key=repr)
+
+    # 31 chars per value; per row an 8-byte id, 4-byte offsets and the
+    # 1-char key: the estimate is 48 bytes a row on both sides
+    bound = 1000
+    with monkeypatch.context() as mp:
+        mp.setattr(matcher, "REFINE_TABLE_BYTES", bound)
+        assert matcher.value_table_fits(20, [1, 31])
+        assert matcher.value_table_fits(16, [1, 31])
+    wide = "東京都渋谷区" * 5  # 30 chars, 90 UTF-8 bytes
+    joins_table, rows_table = run(wide, 1 << 30)
+    joins_bytes, rows_bytes = run(wide, bound)
+    assert rows_bytes == rows_table and len(rows_table) > 0
+    assert joins_bytes == joins_table + 2
+    assert run("abcdef" * 5, bound)[0] == joins_table
 
 
 # ---------------------------------------------------------------------------
