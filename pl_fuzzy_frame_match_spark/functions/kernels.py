@@ -136,12 +136,15 @@ def register_sql_functions(spark) -> None:
         SELECT * FROM t1 JOIN t2
         ON fuzzy_sim('jaro_winkler', t1.name, t2.name) >= 0.8
 
-    Implemented as one Arrow-batched pandas UDF dispatching on the
-    metric value per batch (metrics are almost always literals, so the
-    dispatch dict lookup is once per row over a cached function table).
-    The DataFrame API's :func:`similarity_column` stays the fast path —
-    it keeps ``levenshtein`` in whole-stage codegen — but the SQL entry
-    point makes every metric reachable from plain SQL."""
+    A SQL function lowers both strings in the JVM (Spark's ``lower``,
+    the lowercasing rule of every matching tier) and calls one
+    Arrow-batched pandas UDF, registered as ``_fuzzy_sim_lowered``,
+    that dispatches on the metric value per batch (metrics are almost
+    always literals, so the dispatch dict lookup is once per row over a
+    cached function table). The DataFrame API's
+    :func:`similarity_column` stays the fast path — it keeps
+    ``levenshtein`` in whole-stage codegen — but the SQL entry point
+    makes every metric reachable from plain SQL."""
 
     @F.pandas_udf(DoubleType())
     def fuzzy_sim(metric: pd.Series, a: pd.Series, b: pd.Series) -> pd.Series:
@@ -152,9 +155,12 @@ def register_sql_functions(spark) -> None:
             if m not in NORMALIZED_DISTANCE:
                 continue
             sel = metric == m
-            out[sel] = 1.0 - _batch_distance(
-                m, a[sel].str.lower(), b[sel].str.lower()
-            )
+            out[sel] = 1.0 - _batch_distance(m, a[sel], b[sel])
         return out
 
-    spark.udf.register("fuzzy_sim", fuzzy_sim)
+    spark.udf.register("_fuzzy_sim_lowered", fuzzy_sim)
+    spark.sql(
+        "CREATE OR REPLACE TEMPORARY FUNCTION"
+        " fuzzy_sim(m STRING, a STRING, b STRING) RETURNS DOUBLE"
+        " RETURN _fuzzy_sim_lowered(m, lower(a), lower(b))"
+    )

@@ -541,23 +541,29 @@ def _catalyst_topn_scored(
         .filter(F.col(dist_col) <= F.lit(dist_bound))
         .select(left_col, right_col, dist_col)
     )
-    # two-phase top-N exactly like the banded tier: phase 1 bounds any
-    # skewed left key's sort to (key, salt) groups, phase 2's global
-    # per-key window then sees at most 16 * top_n rows
-    salt = F.pmod(F.xxhash64(F.col(right_col)), F.lit(16))
-    win1 = Window.partitionBy(left_col, "__salt").orderBy(
-        F.col(dist_col).asc(), F.col(right_col).asc()
+    return _salted_topn(scored, left_col, right_col, dist_col, top_n).select(
+        left_col, right_col, dist_col
     )
-    win2 = Window.partitionBy(left_col).orderBy(
-        F.col(dist_col).asc(), F.col(right_col).asc()
-    )
+
+
+def _salted_topn(
+    pairs: DataFrame, left_col: str, right_col: str, order_col: str, top_n: int
+) -> DataFrame:
+    """At most ``top_n`` rows per left key, smallest ``order_col`` first
+    and ties by ascending right key, in two window phases: a skewed
+    left key with millions of candidates would otherwise sort them in
+    ONE window task. Phase 1 takes the top-N within (key, salt) —
+    bounded groups — so phase 2's global window per key sees at most
+    16 * top_n rows."""
+    order = (F.col(order_col).asc(), F.col(right_col).asc())
+    win1 = Window.partitionBy(left_col, "__salt").orderBy(*order)
+    win2 = Window.partitionBy(left_col).orderBy(*order)
     return (
-        scored.withColumn("__salt", salt)
+        pairs.withColumn("__salt", F.pmod(F.xxhash64(F.col(right_col)), F.lit(16)))
         .withColumn("__r1", F.row_number().over(win1))
         .filter(F.col("__r1") <= top_n)
         .withColumn("__rank", F.row_number().over(win2))
         .filter(F.col("__rank") <= top_n)
-        .select(left_col, right_col, dist_col)
     )
 
 
@@ -614,6 +620,39 @@ def _swar_popcount(x):
 # rank fits in 21 bits alongside 7 bits of hamming in a uint32 —
 # exactly the BROADCAST_KEY_LIMIT guarantee (2^21 = ~2.1M right keys)
 _RANK_BITS = 21
+
+
+def _hamming_topn(lv, rv, top_n: int, max_hamming: int, probe_chunk: int):
+    """Per-probe hamming top-N of the sketches ``lv`` against the
+    key-sorted right sketches ``rv``, ``probe_chunk`` probes at a time:
+    yields ``(probe rows, right columns, hamming)`` per chunk, at most
+    ``top_n`` columns per probe, smallest hamming first and ties by
+    right key rank."""
+    import numpy as np
+
+    for c0 in range(0, len(lv), probe_chunk):
+        ham = _swar_popcount(lv[c0 : c0 + probe_chunk, None] ^ rv[None, :])
+        # hamming cap first: with a realistic cap (2 sigma below the
+        # random-pair mean) ~97% of the chunk dies here, so the top-N
+        # selection runs on the tiny survivor set instead of an
+        # argpartition over the full chunk matrix (which dominated the
+        # scan at wide right sides)
+        rows, cols = np.nonzero(ham <= max_hamming)
+        if not len(rows):
+            continue
+        h = ham[rows, cols].astype(np.uint32)
+        if np.bincount(rows).max() > top_n:
+            # column index IS the key rank (rv is key-sorted), so
+            # (hamming << RANK_BITS | col) is a total, deterministic order
+            comb = (h << np.uint32(_RANK_BITS)) | cols.astype(np.uint32)
+            order = np.lexsort((comb, rows))
+            rows, cols, h = rows[order], cols[order], h[order]
+            starts = np.flatnonzero(np.r_[True, rows[1:] != rows[:-1]])
+            sizes = np.diff(np.r_[starts, len(rows)])
+            keep = np.arange(len(rows)) - np.repeat(starts, sizes) < top_n
+            rows, cols, h = rows[keep], cols[keep], h[keep]
+        yield c0 + rows, cols, h
+
 
 # Per-task pair budget for the C sketch scan — distinct from the
 # Catalyst/pandas-kernel PAIRS_PER_TASK (250K): the native XOR +
@@ -830,38 +869,12 @@ def _sketch_scan_topn(
             if not len(pdf):
                 continue
             lk = pdf[left_col].to_numpy()
-            lv = simhash_sketch_np(lk)
-            for c0 in range(0, len(lv), probe_chunk):
-                lc = lv[c0 : c0 + probe_chunk]
-                ham = _swar_popcount(lc[:, None] ^ rv[None, :])
-                # hamming cap first: with a realistic cap (2 sigma below
-                # the random-pair mean) ~97% of the chunk dies here, so
-                # the top-N selection runs on the tiny survivor set
-                # instead of an argpartition over the full chunk matrix
-                # (which dominated the scan at wide right sides)
-                rows, cols = np.nonzero(ham <= max_hamming)
-                if not len(rows):
-                    continue
-                h = ham[rows, cols].astype(np.uint32)
-                if np.bincount(rows).max() > top_n:
-                    # column index IS the key rank (rv is key-sorted),
-                    # so (hamming << RANK_BITS | col) is the same total,
-                    # deterministic order the argpartition path used
-                    comb = (h << np.uint32(_RANK_BITS)) | cols.astype(
-                        np.uint32
-                    )
-                    order = np.lexsort((comb, rows))
-                    rows, cols, h = rows[order], cols[order], h[order]
-                    starts = np.flatnonzero(
-                        np.r_[True, rows[1:] != rows[:-1]]
-                    )
-                    sizes = np.diff(np.r_[starts, len(rows)])
-                    pos = np.arange(len(rows)) - np.repeat(starts, sizes)
-                    keep = pos < top_n
-                    rows, cols, h = rows[keep], cols[keep], h[keep]
+            for rows, cols, h in _hamming_topn(
+                simhash_sketch_np(lk), rv, top_n, max_hamming, probe_chunk
+            ):
                 yield pd.DataFrame(
                     {
-                        left_col: lk[c0 + rows],
+                        left_col: lk[rows],
                         rcol_out: rarr[cols]
                         if emit_keys
                         else cols.astype(np.int32),
@@ -1015,30 +1028,12 @@ def _sketch_scan_topn_blocked(
                 m = len(rk)
                 if m == 0 or len(lk) == 0:
                     continue
-                lv = simhash_sketch_np(lk)
-                for c0 in range(0, len(lv), probe_chunk):
-                    lc = lv[c0 : c0 + probe_chunk]
-                    ham = _swar_popcount(lc[:, None] ^ rv[None, :])
-                    rows, cols = np.nonzero(ham <= max_hamming)
-                    if not len(rows):
-                        continue
-                    h = ham[rows, cols].astype(np.uint32)
-                    if np.bincount(rows).max() > top_n:
-                        comb = (h << np.uint32(_RANK_BITS)) | cols.astype(
-                            np.uint32
-                        )
-                        order = np.lexsort((comb, rows))
-                        rows, cols, h = rows[order], cols[order], h[order]
-                        starts = np.flatnonzero(
-                            np.r_[True, rows[1:] != rows[:-1]]
-                        )
-                        sizes = np.diff(np.r_[starts, len(rows)])
-                        pos = np.arange(len(rows)) - np.repeat(starts, sizes)
-                        keep = pos < top_n
-                        rows, cols, h = rows[keep], cols[keep], h[keep]
+                for rows, cols, h in _hamming_topn(
+                    simhash_sketch_np(lk), rv, top_n, max_hamming, probe_chunk
+                ):
                     yield pd.DataFrame(
                         {
-                            left_col: lk[c0 + rows],
+                            left_col: lk[rows],
                             right_col: rk[cols],
                             "__ham": h.astype(np.int32),
                         }
@@ -1134,22 +1129,6 @@ def _banded_topn(
         .filter(F.col("__jaccard_dist") <= F.lit(jaccard_distance))
         .select(left_col, right_col, "__jaccard_dist")
     )
-    # two-phase top-N: a skewed left key with millions of band
-    # candidates would otherwise sort them in ONE window task. Phase 1
-    # takes top-N within (key, salt) — bounded groups — so phase 2's
-    # global window per key sees at most SALT * top_n rows.
-    salt = F.pmod(F.xxhash64(F.col(right_col)), F.lit(16))
-    win1 = Window.partitionBy(left_col, "__salt").orderBy(
-        F.col("__jaccard_dist").asc(), F.col(right_col).asc()
-    )
-    win2 = Window.partitionBy(left_col).orderBy(
-        F.col("__jaccard_dist").asc(), F.col(right_col).asc()
-    )
-    return (
-        pairs.withColumn("__salt", salt)
-        .withColumn("__r1", F.row_number().over(win1))
-        .filter(F.col("__r1") <= top_n)
-        .withColumn("__rank", F.row_number().over(win2))
-        .filter(F.col("__rank") <= top_n)
-        .select(left_col, right_col)
-    )
+    return _salted_topn(
+        pairs, left_col, right_col, "__jaccard_dist", top_n
+    ).select(left_col, right_col)

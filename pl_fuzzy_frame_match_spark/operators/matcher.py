@@ -20,14 +20,14 @@ machinery — documented per the survey's guidance):
   reference pins them by spilling to Arrow IPC, matcher.py:416).
 - Refinement rounds 2..n carry score columns forward instead of
   materializing per-round frames and re-intersecting them at the end
-  (reference ``combine_matches``, matcher.py:388-392). With the native
-  kernels ALL rounds are one ``mapInArrow`` pass over round 1's row
-  pairs: each side's refine values are collected once per join as a
-  value table (row id -> JVM-lowered values, broadcast), so only the
-  row ids and scores cross Arrow; C scores each mapping on the
-  survivors of the one before, and the join stays one lazy plan.
-  Without a toolchain each round scores through codegen levenshtein
-  or a pandas UDF.
+  (reference ``combine_matches``, matcher.py:388-392). ALL rounds share
+  one plan over round 1's row pairs: each side's lowered refine values
+  come once per join from a value table (row id -> JVM-lowered values,
+  collected and broadcast) or from one join, and each mapping filters
+  the survivors of the one before. Only the scorer differs: with the
+  native kernels C scores every mapping in one ``mapInArrow`` pass,
+  without a toolchain each mapping is one filter over codegen
+  levenshtein or a pandas UDF. The join stays one lazy plan.
 - The reference's explicit spill-to-temp-dir machinery (_utils.py) and
   manual chunking/partitioned-dedup (matcher.py:52-96, 343-385)
   dissolve into Spark's native shuffle spill / partitioning.
@@ -61,7 +61,6 @@ from ..plans.planner import (
     DEFAULT_CROSS_OVER,
     choose_candidate_strategy,
     estimate_exact_survivors,
-    get_count_and_approx_uniqueness,
     get_count_uniqueness_and_maxlen,
     order_mappings_by_selectivity,
     promote_exact_mappings,
@@ -70,6 +69,7 @@ from ..plans.planner import (
 from .candidates import (
     BROADCAST_KEY_LIMIT,
     DEFAULT_TOP_N,
+    SKETCH_SCAN_CAP,
     approx_scored_pairs,
     attach_index_lists,
     exact_candidates,
@@ -93,12 +93,6 @@ LEFT_INDEX = "__left_index"
 RIGHT_INDEX = "__right_index"
 _DIST = "__fuzzy_dist"
 
-# Refine rounds score far fewer pairs per task than the cross-join
-# tier (PAIRS_PER_TASK): the surviving pair set is usually small, and
-# one coalesced partition serializes the kernel — spread it thinner.
-# (Fallback paths only; the native pass uses the budget below.)
-REFINE_PAIRS_PER_TASK = 20_000
-
 # Per-task row-pair budget of the native refine pass (all refine
 # rounds, values from the value tables). Measured on a 4-core host
 # (load average 2-5 from other tenants) with the fuzzbench multi_refine
@@ -108,12 +102,6 @@ REFINE_PAIRS_PER_TASK = 20_000
 # 1.2M 1.57 / 1.41 / 1.56 / 1.87 s; 2.4M 2.15 / 1.95 / 1.90 / 2.21 s.
 # Splitting pays from about 1M pairs, at ~0.6-1M pairs per task.
 REFINE_NATIVE_PAIRS_PER_TASK = 1_000_000
-
-# Above this uniqueness ratio on BOTH refine columns, the distinct
-# value-pair frame would be ~the row-level pair frame, so refine
-# scores rows directly (no distinct, no join-back, no eager
-# checkpoint — the round stays one lazy plan).
-REFINE_DIRECT_UNIQUENESS = 0.8
 
 # Broadcast an indexed input frame into pair-level joins when its row
 # count (known exactly from the planner pass) is below this. The frames
@@ -125,9 +113,12 @@ BROADCAST_ROW_LIMIT = 1_000_000
 # (broadcast to the refine pass) up to BROADCAST_ROW_LIMIT rows and this
 # many Arrow bytes (estimated before the collect by value_table_fits,
 # checked on the collected table before the broadcast); past either
-# bound one join per side carries the values into the pass instead.
-# Measured on a 4-core host (load average 4-5), N x N rows of random
-# 30- and 40-char values, a threshold-100 key with 2N row pairs, then
+# bound one join per side carries the values into the pass instead. The
+# same bounds pick which joined values are broadcast: without a
+# toolchain a side that fits is broadcast-joined, any other side (and
+# a table refused by the byte check) joins without a hint. Measured on
+# a 4-core host (load average 4-5), N x N rows of random 30- and
+# 40-char values, a threshold-100 key with 2N row pairs, then
 # jaro_winkler and levenshtein refine rounds, medians of 2-3 whole
 # joins, tables vs joined values: N = 100K (est. 9.6 MB) 2.00 vs
 # 2.07 s; 400K (38 MB) 4.58 vs 4.85 s; 700K (67 MB) 11.1 vs 10.6 s;
@@ -277,8 +268,6 @@ def first_round_matches(
         if n_parts:
             joined = joined.repartition(n_parts)
         return _explode_index_lists(joined, F.lit(1.0), mapping)
-    from .candidates import SKETCH_SCAN_CAP
-
     cartesian = max(n_left_keys, 1) * max(n_right_keys, 1)
     neighborhood_cap = (
         int(
@@ -415,13 +404,13 @@ def _refine_input_parts(
 
 
 def value_table_fits(n_rows: int, max_lens: Sequence[int]) -> bool:
-    """Whether one side's refine values are collected as a value table:
-    at most ``BROADCAST_ROW_LIMIT`` rows and ``REFINE_TABLE_BYTES``
-    estimated Arrow bytes (an int64 id, and an int32 offset plus the
-    planner's max length per value column, per row). The max length
-    counts chars, so a non-ASCII side may collect up to ~4x the bound;
-    :func:`_refine_pass` broadcasts a table only if its collected
-    bytes fit."""
+    """Whether one side's refine values fit a value table: at most
+    ``BROADCAST_ROW_LIMIT`` rows and ``REFINE_TABLE_BYTES`` estimated
+    Arrow bytes (an int64 id, and an int32 offset plus the planner's
+    max length per value column, per row). The max length counts
+    chars, so a non-ASCII side may collect up to ~4x the bound;
+    :func:`_refine_values` ships a collected table only if its bytes
+    fit."""
     est = n_rows * (8 + sum(4 + n for n in max_lens))
     return 0 < n_rows <= BROADCAST_ROW_LIMIT and est <= REFINE_TABLE_BYTES
 
@@ -448,9 +437,6 @@ def refine_matches(
     right: DataFrame,
     existing: DataFrame,
     mapping: FuzzyMapping,
-    n_left: Optional[int] = None,
-    n_right: Optional[int] = None,
-    direct=False,
     *,
     more: Sequence[FuzzyMapping] = (),
     tables=(None, None),
@@ -462,231 +448,147 @@ def refine_matches(
     output can only shrink (pinned by the reference's monotonicity
     tests). A score column of an existing name is replaced in place.
 
-    With the native kernels all rounds are ONE ``mapInArrow`` pass
-    over ``existing`` (:func:`_refine_pass`), in the given order, each
-    mapping scored only on the survivors of the one before
-    (threshold-100 mappings as lowercase equality). A side whose value
-    table is given in ``tables`` (``(left, right)``, each from
-    :func:`collect_value_table` or None) is looked up from it inside
-    the pass, so only the index and prior-score columns cross Arrow;
-    any other side joins its lowered values once, for all rounds.
-    ``existing`` is referenced once and never checkpointed, and there
-    is no repartition, so the join stays one lazy plan on the
-    partitions it receives (see :func:`_refine_input_parts`).
-
-    Without a toolchain each round scores through
-    :func:`distance_column` (codegen levenshtein / pandas UDF) in
-    :func:`_refine_round`; ``direct`` (one flag for all rounds, or one
-    per round) picks its row-level path over the distinct-pair one."""
+    One plan for both scorers: :func:`_refine_values` brings each
+    side's lowered refine values to the row pairs once, for all rounds,
+    and each mapping is then scored in the given order on the survivors
+    of the one before (threshold-100 mappings as lowercase equality).
+    ``tables`` (``(left, right)``) is the planner's per-side decision:
+    a value table from :func:`collect_value_table`, True for values
+    that fit one but were not collected (no toolchain), or None. Only
+    the scorer depends on the toolchain: with the native kernels every
+    mapping is scored in C in ONE ``mapInArrow`` pass
+    (:func:`_refine_pass`); without them each mapping is one filter
+    over Spark columns (:func:`_refine_filters`). ``existing`` is
+    referenced once and never checkpointed eagerly, so the join stays
+    one lazy plan."""
     maps = [mapping, *more]
-    if native_kernels.native_available():
-        return _refine_pass(left, right, existing, maps, n_left, n_right, tables)
-    flags = direct if isinstance(direct, (list, tuple)) else [direct] * len(maps)
-    for m, d in zip(maps, flags):
-        existing = _refine_round(left, right, existing, m, n_left, n_right, d)
-    return existing
-
-
-def _refine_round(
-    left: DataFrame,
-    right: DataFrame,
-    existing: DataFrame,
-    mapping: FuzzyMapping,
-    n_left: Optional[int],
-    n_right: Optional[int],
-    direct: bool,
-) -> DataFrame:
-    """One refine round without the native kernels. The ``direct``
-    path (planner-flagged near-unique columns) scores the rows behind a
-    repartition + lazy checkpoint; the general path scores each
-    DISTINCT value pair once and joins back, and materializes
-    ``existing`` first (the Spark analogue of the reference's per-round
-    spill, matcher.py:492), because its plan references it on two
-    branches. The exact-match shortcut (threshold 100) references
-    ``existing`` once and stays lazy (VERDICT r4 #4: this was the
-    fuzzy_join_multi fixed-cost gap; the reference's O8 skipped
-    per-round recounts the same way)."""
-
-    def _vals(frame: DataFrame) -> DataFrame:
-        return (
-            frame.join(
-                _maybe_broadcast(
-                    left.select(LEFT_INDEX, mapping.left_col), n_left
-                ),
-                on=LEFT_INDEX,
-                how="inner",
-            )
-            .join(
-                _maybe_broadcast(
-                    right.select(RIGHT_INDEX, mapping.right_col), n_right
-                ),
-                on=RIGHT_INDEX,
-                how="inner",
-            )
-            .filter(
-                F.col(mapping.left_col).isNotNull()
-                & F.col(mapping.right_col).isNotNull()
-            )
-        )
-
-    if mapping.reversed_threshold_score == 0.0:
-        # exact-match shortcut (threshold 100): no distinct-pair frame,
-        # no scoring, no join-back — just the equality filter; single
-        # reference to `existing`, so no checkpoint either
-        return (
-            _vals(existing)
-            .filter(
-                jvm_lower(mapping.left_col)
-                == jvm_lower(mapping.right_col)
-            )
-            .withColumn(mapping.output_column_name, F.lit(1.0))
-            .drop(mapping.left_col, mapping.right_col)
-        )
-    if direct:
-        # near-unique refine columns (planner-flagged): the distinct
-        # value-pair frame would be ~the row-level frame, so the
-        # distinct + join-back machinery is pure overhead — score the
-        # rows directly. Single reference to `existing` => the whole
-        # round stays one lazy plan with NO eager checkpoint (the
-        # exact-shortcut insight, extended). The round-robin
-        # repartition + LAZY checkpoint barrier parallelizes the
-        # kernel (AQE coalesces the surviving-pair exchange to ~1
-        # partition otherwise) without a separate blocking job.
-        cores = existing.sparkSession.sparkContext.defaultParallelism
-        la, lb = _LC_PREFIX + "refine_l", _LC_PREFIX + "refine_r"
-        return (
-            _vals(existing)
-            .repartition(cores * 2)
-            .localCheckpoint(eager=False)
-            .withColumn(la, jvm_lower(mapping.left_col))
-            .withColumn(lb, jvm_lower(mapping.right_col))
-            .withColumn(
-                _DIST,
-                distance_column(
-                    mapping.fuzzy_type,
-                    F.col(la),
-                    F.col(lb),
-                    mapping.reversed_threshold_score,
-                ),
-            )
-            .filter(F.col(_DIST) <= F.lit(mapping.reversed_threshold_score))
-            .withColumn(
-                mapping.output_column_name, F.lit(1.0) - F.col(_DIST)
-            )
-            .drop(la, lb, _DIST, mapping.left_col, mapping.right_col)
-        )
-    existing = existing.localCheckpoint(eager=True)
-    vals = _vals(existing)
-    distinct_pairs = vals.select(mapping.left_col, mapping.right_col).distinct()
-    # Parallelize the refine-round scoring (O10 made this path carry
-    # real fuzzy work): AQE coalesces the small distinct-pair exchange
-    # to ONE partition, serializing the distance kernel (the same
-    # measured gotcha as the dedup verify stages). Repartition by the
-    # surviving-pair volume — the count is free off the checkpoint —
-    # behind a LAZY localCheckpoint barrier so Catalyst cannot sink
-    # the scoring projection below the round-robin exchange back into
-    # the single-partition aggregate stage.
-    n_pairs = existing.count()
-    cores = existing.sparkSession.sparkContext.defaultParallelism
-    n_parts = int(min(max(n_pairs // REFINE_PAIRS_PER_TASK, 1), cores * 2))
-    if n_parts > 1:
-        distinct_pairs = distinct_pairs.repartition(n_parts).localCheckpoint(
-            eager=False
-        )
-    # alias the lowercased pair in a projection: an inline lower() is
-    # re-evaluated at every reference in the distance expression tree
-    # (levenshtein args + both lengths + the banded cap — ~6x per row);
-    # the alias binds one codegen variable per row
-    la, lb = _LC_PREFIX + "refine_l", _LC_PREFIX + "refine_r"
-    scored = (
-        distinct_pairs.withColumn(la, jvm_lower(mapping.left_col))
-        .withColumn(lb, jvm_lower(mapping.right_col))
-        .withColumn(
-            _DIST,
-            distance_column(
-                mapping.fuzzy_type,
-                F.col(la),
-                F.col(lb),
-                mapping.reversed_threshold_score,
-            ),
-        )
-        .drop(la, lb)
-        .filter(F.col(_DIST) <= F.lit(mapping.reversed_threshold_score))
-        .withColumn(mapping.output_column_name, F.lit(1.0) - F.col(_DIST))
-        .drop(_DIST)
+    frame, side_cols, shipped = _refine_values(
+        left, right, existing, maps, tables
     )
-    # the distinct-value-pair frame is tiny relative to row-level pairs;
-    # AQE turns this into a broadcast join at runtime when it fits
-    return vals.join(
-        scored, on=[mapping.left_col, mapping.right_col], how="inner"
-    ).drop(mapping.left_col, mapping.right_col)
+    scored = [m.output_column_name for m in maps]
+    cols = list(existing.columns)
+    cols += [c for c in dict.fromkeys(scored) if c not in cols]
+    if native_kernels.native_available():
+        return _refine_pass(frame, cols, maps, side_cols, shipped)
+    return _refine_filters(frame, cols, maps, side_cols)
 
 
-def _refine_pass(
+def _refine_col(side: int, k: int) -> str:
+    return f"__refine_{side}_{k}"
+
+
+def _refine_values(
     left: DataFrame,
     right: DataFrame,
     existing: DataFrame,
     maps: Sequence[FuzzyMapping],
-    n_left: Optional[int],
-    n_right: Optional[int],
     tables,
-) -> DataFrame:
-    """Every refine mapping in one ``mapInArrow`` pass over the row
-    pairs of ``existing``. Per side, the lowered values come either
-    from its value table (broadcast once, if its Arrow bytes fit
-    ``REFINE_TABLE_BYTES``; the batch's index column is
-    mapped to table positions with ``np.searchsorted``, and ids absent
-    from the table drop out, as in an inner join) or from one join of
-    ``(index, lower(col), ...)`` carrying all the side's refine
-    columns into the batch. Each mapping is scored in C
-    (``arrow_score_pairs`` on the ``take``n values; threshold 100 as
-    Arrow equality) on the survivors of the mapping before it, and the
-    batch is filtered by the kept rows, so the index and prior-score
-    columns pass through untouched. Output: ``existing``'s columns,
-    each new score column appended or replacing a prior column of the
-    same name, as ``withColumn`` does on the fallback."""
-    cols = list(existing.columns)
-    scored = [m.output_column_name for m in maps]
-    cols += [c for c in dict.fromkeys(scored) if c not in cols]
-    schema = StructType(
-        [
-            StructField(c, DoubleType(), False)
-            if c in scored
-            else existing.schema[c]
-            for c in cols
-        ]
-    )
+):
+    """The refine values of both sides, once for every mapping:
+    ``(frame, side_cols, shipped)``. ``side_cols`` lists each side's
+    distinct refine columns. A value table whose collected Arrow bytes
+    (ids, offsets and UTF-8 data of those columns) fit
+    ``REFINE_TABLE_BYTES`` is shipped as ``(ids, arrays)`` for the
+    native pass to look the values up in (tables are only collected
+    with the native kernels); any other side joins
+    ``(index, lower(col), ...)`` into ``existing`` as
+    ``__refine_<side>_<k>`` columns. Such a join is broadcast only for
+    a side marked True, so a side too wide for a table, or refused
+    one by the byte check, is never broadcast either."""
+    frame, side_cols, shipped = existing, [], []
     sides = (
-        (left, LEFT_INDEX, n_left, tables[0], [m.left_col for m in maps]),
-        (right, RIGHT_INDEX, n_right, tables[1], [m.right_col for m in maps]),
+        (left, LEFT_INDEX, tables[0], [m.left_col for m in maps]),
+        (right, RIGHT_INDEX, tables[1], [m.right_col for m in maps]),
     )
-    frame = existing
-    side_cols, shipped = [], []
-    for s, (df, index, n_rows, table, vcols) in enumerate(sides):
+    for s, (df, index, table, vcols) in enumerate(sides):
         vcols = list(dict.fromkeys(vcols))
         side_cols.append(vcols)
-        if table is not None:
-            # the estimate counts chars; ship only tables whose UTF-8
-            # bytes fit, so a wide non-ASCII side joins its values
+        if isinstance(table, tuple):
+            # the planner's estimate counts chars; the bound holds on
+            # the collected UTF-8 bytes
             ids, values = table
             arrays = [values[c] for c in vcols]
             if ids.nbytes + sum(a.nbytes for a in arrays) <= REFINE_TABLE_BYTES:
                 shipped.append((ids, arrays))
                 continue
         shipped.append(None)
-        lowered = [
-            jvm_lower(c).alias(f"__refine_{s}_{k}")
-            for k, c in enumerate(vcols)
-        ]
-        frame = frame.join(
-            _maybe_broadcast(df.select(index, *lowered), n_rows),
-            on=index,
-            how="inner",
+        vals = df.select(
+            index,
+            *[jvm_lower(c).alias(_refine_col(s, k)) for k, c in enumerate(vcols)],
         )
+        frame = frame.join(
+            F.broadcast(vals) if table is True else vals, on=index, how="inner"
+        )
+    return frame, side_cols, shipped
+
+
+def _refine_filters(
+    frame: DataFrame,
+    cols: Sequence[str],
+    maps: Sequence[FuzzyMapping],
+    side_cols,
+) -> DataFrame:
+    """The no-toolchain scorer: one filter per mapping, in order, over
+    the joined values — threshold 100 as equality (score 1.0), any other
+    threshold as ``distance_column(...) <= bound`` (score ``1 - d``;
+    codegen levenshtein, the pandas UDF for the other metrics). If any
+    mapping is fuzzy, a round-robin repartition behind a LAZY
+    checkpoint spreads the scoring (AQE would coalesce the pairs to
+    ~one partition and serialize the kernel) without a separate
+    blocking job; the checkpoint keeps Catalyst from sinking the
+    scoring below the exchange."""
+    if any(m.reversed_threshold_score > 0.0 for m in maps):
+        cores = frame.sparkSession.sparkContext.defaultParallelism
+        frame = frame.repartition(cores * 2).localCheckpoint(eager=False)
+    for m in maps:
+        a = F.col(_refine_col(0, side_cols[0].index(m.left_col)))
+        b = F.col(_refine_col(1, side_cols[1].index(m.right_col)))
+        bound = m.reversed_threshold_score
+        if bound == 0.0:
+            frame = frame.filter(a == b).withColumn(
+                m.output_column_name, F.lit(1.0)
+            )
+            continue
+        frame = (
+            frame.withColumn(_DIST, distance_column(m.fuzzy_type, a, b, bound))
+            .filter(F.col(_DIST) <= F.lit(bound))
+            .withColumn(m.output_column_name, F.lit(1.0) - F.col(_DIST))
+        )
+    return frame.select(*cols)
+
+
+def _refine_pass(
+    frame: DataFrame,
+    cols: Sequence[str],
+    maps: Sequence[FuzzyMapping],
+    side_cols,
+    shipped,
+) -> DataFrame:
+    """The native scorer: every refine mapping in one ``mapInArrow``
+    pass over the row pairs of ``frame``. A side with a shipped value
+    table (broadcast once) maps the batch's index column to table
+    positions with ``np.searchsorted``, and ids absent from the table
+    drop out, as in an inner join; a joined side reads its
+    ``__refine_<side>_<k>`` columns. Each mapping is scored in C
+    (``arrow_score_pairs`` on the ``take``n values; threshold 100 as
+    Arrow equality) on the survivors of the mapping before it, and the
+    batch is filtered by the kept rows, so the index and prior-score
+    columns pass through untouched. Output: ``cols``, each new score
+    column appended or replacing a prior column of the same name, as
+    ``withColumn`` does on the fallback."""
+    scored = [m.output_column_name for m in maps]
+    schema = StructType(
+        [
+            StructField(c, DoubleType(), False)
+            if c in scored
+            else frame.schema[c]
+            for c in cols
+        ]
+    )
     at = {c: i for i, c in enumerate(frame.columns)}
     index_at = (at[LEFT_INDEX], at[RIGHT_INDEX])
     value_at = [
-        [at.get(f"__refine_{s}_{k}") for k in range(len(side_cols[s]))]
+        [at.get(_refine_col(s, k)) for k in range(len(side_cols[s]))]
         for s in (0, 1)
     ]
     spec = [
@@ -702,7 +604,7 @@ def _refine_pass(
     pass_at = [None if c in scored else at[c] for c in cols]
     names = schema.names
     bc = (
-        existing.sparkSession.sparkContext.broadcast(tuple(shipped))
+        frame.sparkSession.sparkContext.broadcast(tuple(shipped))
         if any(t is not None for t in shipped)
         else None
     )
@@ -847,12 +749,14 @@ def fuzzy_match_dfs(
     # skip the checkpoints entirely, non-empty inputs keep the
     # concurrent-wave latency win.
     #
-    # With refine rounds and the native kernels, each side's value table
-    # (every mapping column, lowered, by row id) is collected as soon as
+    # With refine rounds, each side's refine decision is made as soon as
     # that side's index and stats are done, overlapping the other side's
-    # jobs. The mapping order is not known yet, so round 1's column
-    # rides along; the refine pass ships only the refine columns. A
-    # failed collect leaves that side to the join-fed values.
+    # jobs: with the native kernels a side whose values fit
+    # (value_table_fits) collects its value table (every mapping column,
+    # lowered, by row id); without them it is marked True, so its value
+    # join is broadcast. The mapping order is not known yet, so round
+    # 1's column rides along; the refine pass ships only the refine
+    # columns. A failed collect leaves that side to a plain value join.
     with ThreadPoolExecutor(max_workers=9) as pool:
         left_empty_fut = pool.submit(left.isEmpty)
         right_empty_fut = pool.submit(right.isEmpty)
@@ -867,7 +771,7 @@ def fuzzy_match_dfs(
             return add_index_column(df, name)
 
         def _gated_table(idx_fut, stats_fut, name, cols):
-            if len(cols) < 2 or not native_fut.result():
+            if len(cols) < 2:
                 return None
             indexed = idx_fut.result()
             n_rows, _, max_lens = stats_fut.result()
@@ -875,6 +779,8 @@ def fuzzy_match_dfs(
                 n_rows, [max_lens[c] for c in dict.fromkeys(cols)]
             ):
                 return None
+            if not native_fut.result():
+                return True
             try:
                 return collect_value_table(indexed, name, cols)
             except Exception:
@@ -990,24 +896,8 @@ def fuzzy_match_dfs(
             "refining matches on %s",
             [(m.left_col, m.right_col) for m in maps[1:]],
         )
-        # direct: near-unique refine columns take the fallback's
-        # row-level path (no distinct + join-back)
-        direct = [
-            left_uniq.get(m.left_col, 0) >= REFINE_DIRECT_UNIQUENESS * left_count
-            and right_uniq.get(m.right_col, 0)
-            >= REFINE_DIRECT_UNIQUENESS * right_count
-            for m in maps[1:]
-        ]
         matches = refine_matches(
-            left_i,
-            right_i,
-            matches,
-            maps[1],
-            left_count,
-            right_count,
-            direct=direct,
-            more=maps[2:],
-            tables=tables,
+            left_i, right_i, matches, maps[1], more=maps[2:], tables=tables
         )
 
     # ---- PHASE D: payload re-attach + frozen column order

@@ -304,6 +304,27 @@ def test_sql_registered_fuzzy_sim(spark):
     assert one["x"] is None
 
 
+def test_sql_fuzzy_sim_lowers_like_similarity_column(spark):
+    """``fuzzy_sim`` lowers its inputs with Spark's ``lower``, as
+    ``similarity_column`` does: U+A7CB lowers to U+0264 there, while
+    Python's ``str.lower`` leaves it unchanged (a 0.667 score)."""
+    from pl_fuzzy_frame_match_spark.functions.kernels import (
+        register_sql_functions,
+        similarity_column,
+    )
+
+    register_sql_functions(spark)
+    row = (
+        spark.createDataFrame([("X\ua7cbY", "x\u0264y")], ["a", "b"])
+        .select(
+            F.expr("fuzzy_sim('levenshtein', a, b)").alias("sql"),
+            similarity_column("levenshtein", F.col("a"), F.col("b")).alias("col"),
+        )
+        .first()
+    )
+    assert row["sql"] == row["col"] == 1.0
+
+
 _ALL_METRICS = (
     "levenshtein", "jaro", "jaro_winkler", "damerau_levenshtein", "indel",
     "hamming",

@@ -637,6 +637,31 @@ def test_stream_fuzzy_enrich_matches_batch(spark, tmp_path):
     assert got == expect
 
 
+def test_stream_fuzzy_enrich_lowers_like_similarity_column(spark):
+    """The enrich scores keys lowered by Spark's ``lower``, as the batch
+    join and ``similarity_column`` do: ``XꟋY`` (U+A7CB) matches ``xɤy``
+    with score 1.0, where Python's ``str.lower`` would give 0.667."""
+    from pyspark.sql import functions as F
+
+    from pl_fuzzy_frame_match_spark.functions.kernels import similarity_column
+    from pl_fuzzy_frame_match_spark.models import FuzzyMapping
+    from pl_fuzzy_frame_match_spark.streaming.stream_ops import (
+        stream_fuzzy_enrich,
+    )
+
+    left = spark.createDataFrame([(1, "X\ua7cbY")], ["id", "k"])
+    right = spark.createDataFrame([("x\u0264y",)], ["name"])
+    expect = left.crossJoin(right).select(
+        similarity_column("levenshtein", F.col("k"), F.col("name"))
+    ).first()[0]
+    mapping = FuzzyMapping("k", "name", threshold_score=90.0)
+    # max_hamming 64: the sketch stage keeps every candidate
+    row = stream_fuzzy_enrich(left, right, mapping, max_hamming=64).first()
+    assert expect == 1.0
+    assert row["name_matched"] == "x\u0264y"
+    assert row[mapping.output_column_name] == expect
+
+
 def test_ipc_roundtrip(spark, tmp_path):
     from pl_fuzzy_frame_match_spark.sources.io import (
         ipc_schema,

@@ -356,8 +356,9 @@ def _refine_rows(spark, monkeypatch, how, threshold, path):
     refine path: ``native`` (the mapInArrow pass over broadcast value
     tables), ``joined`` (the same pass with the values joined into the
     batch: value-table bound 0), ``mixed`` (a left value table; the
-    right table's collect fails, so its values are joined), or with ``native_available`` patched to False the
-    row-level ``direct`` or distinct-pair ``general`` fallback."""
+    right table's collect fails, so its values are joined), or
+    ``fallback`` (``native_available`` patched to False in the driver:
+    the same joined values, one Spark filter per mapping)."""
     from pl_fuzzy_frame_match_spark import FuzzyMapping, fuzzy_match_dfs
     from pl_fuzzy_frame_match_spark.functions import native_kernels
     from pl_fuzzy_frame_match_spark.operators import matcher
@@ -379,14 +380,13 @@ def _refine_rows(spark, monkeypatch, how, threshold, path):
                 return collect(df, index, cols)
 
             mp.setattr(matcher, "collect_value_table", left_only)
-        elif path != "native":
+        elif path == "fallback":
             mp.setattr(native_kernels, "native_available", lambda: False)
-        mp.setattr(
-            matcher, "REFINE_DIRECT_UNIQUENESS", 0.0 if path == "direct" else 2.0
-        )
         out = fuzzy_match_dfs(left, right, maps, how=how)
         return out, sorted(out.collect(), key=repr)
 
+
+_REFINE_PATHS = ("native", "joined", "mixed", "fallback")
 
 # refine bounds near 1 (threshold 1) and near 0 (threshold 98: only
 # case variants, single edits and the transposition of the long
@@ -394,48 +394,101 @@ def _refine_rows(spark, monkeypatch, how, threshold, path):
 _REFINE_THRESHOLDS = (1.0, 98.0)
 
 
-def test_refine_direct_path_equals_general(spark, monkeypatch):
-    """The native refine pass (value tables or joined values) and both
-    fallback refines (direct row-level, general distinct + join-back)
-    return identical rows and scores for all six metrics — the path
-    only moves cost. The native refine is one lazy plan: one pass for
-    all six rounds, no checkpoint, no repartition."""
+def test_refine_paths_agree(spark, monkeypatch):
+    """The native refine pass (value tables, joined values or both) and
+    the no-toolchain filters return identical rows and scores for all
+    six metrics — the scorer only moves cost. The native refine is one
+    lazy plan: one MapInArrow pass for all six rounds, no checkpoint,
+    no repartition, and its joined values carry no broadcast hint (the
+    table bound refused them, or their collect failed)."""
     from pl_fuzzy_frame_match_spark.operators import matcher
 
-    general = {}
+    fallback = {}
     for threshold in _REFINE_THRESHOLDS:
-        results, joins = {}, {}
-        for path in ("native", "joined", "mixed", "direct", "general"):
+        results, joins, hints = {}, {}, {}
+        for path in _REFINE_PATHS:
             out, results[path] = _refine_rows(
                 spark, monkeypatch, "inner", threshold, path
             )
-            if path in ("native", "joined", "mixed"):
-                plan = out._jdf.queryExecution().optimizedPlan().toString()
-                assert plan.count("MapInArrow") == 1
-                assert "Repartition" not in plan
-                # round 1's explode is still in the lineage: no
-                # checkpoint cut the plan between the rounds
-                assert "Generate explode" in plan
-                joins[path] = plan.count("Join Inner")
+            if path == "fallback":
+                continue  # its plan is cut by the lazy checkpoint
+            qe = out._jdf.queryExecution()
+            plan = qe.optimizedPlan().toString()
+            assert plan.count("MapInArrow") == 1
+            assert "Repartition" not in plan
+            # round 1's explode is still in the lineage: no checkpoint
+            # cut the plan between the rounds
+            assert "Generate explode" in plan
+            joins[path] = plan.count("Join Inner")
+            hints[path] = qe.analyzed().toString().count("strategy=broadcast")
         # the value tables replace one value join per side
         assert joins["joined"] == joins["mixed"] + 1 == joins["native"] + 2
-        assert (
-            results["native"]
-            == results["joined"]
-            == results["mixed"]
-            == results["direct"]
-            == results["general"]
-        )
+        # only the two payload joins are hinted
+        assert hints["native"] == hints["joined"] == hints["mixed"] == 2
+        assert all(results[p] == results["native"] for p in _REFINE_PATHS)
         assert len(results["native"]) > 0, threshold
         if threshold > 50:
             assert any(len(r["v_jaro"] or "") == 120 for r in results["native"])
-        general[threshold] = results["general"]
+        fallback[threshold] = results["fallback"]
     # past the per-task budget round 1's key pairs are spread before
     # the explode; the rows stay the same
     monkeypatch.setattr(matcher, "REFINE_NATIVE_PAIRS_PER_TASK", 10)
     out, split = _refine_rows(spark, monkeypatch, "inner", 1.0, "native")
     assert "Repartition" in out._jdf.queryExecution().optimizedPlan().toString()
-    assert split == general[1.0]
+    assert split == fallback[1.0]
+
+
+def test_refine_fallback_replaces_repeated_mapping_in_place(spark, monkeypatch):
+    """One refine call whose fuzzy mapping comes twice, with a
+    threshold-100 mapping between: the fallback filters replace the
+    mapping's score column where ``existing`` already holds it (no
+    second column), and return the native pass's rows. The values are
+    joined once per side for all four mappings."""
+    from pyspark.sql import functions as F
+
+    from pl_fuzzy_frame_match_spark import FuzzyMapping
+    from pl_fuzzy_frame_match_spark.functions import native_kernels
+    from pl_fuzzy_frame_match_spark.operators import matcher
+
+    left, right = _refine_frames(spark)
+    left_i = matcher.add_index_column(left, matcher.LEFT_INDEX)
+    right_i = matcher.add_index_column(right, matcher.RIGHT_INDEX)
+    fz = FuzzyMapping(
+        "v_jaro_winkler", "rv_jaro_winkler", threshold_score=60.0,
+        fuzzy_type="jaro_winkler", output_column_name="jw",
+    )
+    lev = FuzzyMapping(
+        "v_levenshtein", "rv_levenshtein", threshold_score=50.0,
+        output_column_name="lev",
+    )
+    eq = FuzzyMapping("g", "rg", threshold_score=100.0, output_column_name="eq")
+    existing = (
+        left_i.select(matcher.LEFT_INDEX)
+        .crossJoin(right_i.select(matcher.RIGHT_INDEX))
+        .withColumn("jw", F.lit(-1.0))
+    )
+
+    def run():
+        out = matcher.refine_matches(
+            left_i, right_i, existing, fz, more=[lev, eq, fz]
+        )
+        return out.columns, sorted(out.collect(), key=repr)
+
+    cols, native = run()
+    with monkeypatch.context() as mp:
+        mp.setattr(native_kernels, "native_available", lambda: False)
+        fallback = run()
+    assert cols == [matcher.LEFT_INDEX, matcher.RIGHT_INDEX, "jw", "lev", "eq"]
+    assert fallback == (cols, native)
+    assert native and all(r["jw"] >= 0.6 and r["eq"] == 1.0 for r in native)
+    # a side marked True by the planner (it fits a value table that
+    # was not collected) joins its values with a broadcast hint
+    frame, side_cols, _ = matcher._refine_values(
+        left_i, right_i, existing, [fz, lev, eq, fz], (True, None)
+    )
+    assert side_cols[0] == ["v_jaro_winkler", "v_levenshtein", "g"]
+    analyzed = frame._jdf.queryExecution().analyzed().toString()
+    assert analyzed.count("strategy=broadcast") == 1
 
 
 def test_refine_value_table_bound_counts_utf8_bytes(spark, monkeypatch):
@@ -443,7 +496,9 @@ def test_refine_value_table_bound_counts_utf8_bytes(spark, monkeypatch):
     the planner's char lengths: a side of 3-byte code points whose
     char-based estimate fits (``value_table_fits``) but whose table
     does not joins its values into the pass instead, with the same
-    rows; an ASCII side of the same char lengths keeps its table."""
+    rows and without a broadcast hint (a side refused a table is too
+    wide to broadcast); an ASCII side of the same char lengths keeps
+    its table."""
     from pl_fuzzy_frame_match_spark import FuzzyMapping, fuzzy_match_dfs
     from pl_fuzzy_frame_match_spark.operators import matcher
 
@@ -465,7 +520,12 @@ def test_refine_value_table_bound_counts_utf8_bytes(spark, monkeypatch):
             mp.setattr(matcher, "REFINE_TABLE_BYTES", bound)
             out = fuzzy_match_dfs(left, right, maps)
             plan = out._jdf.queryExecution().optimizedPlan().toString()
-            return plan.count("Join Inner"), sorted(out.collect(), key=repr)
+            hints = out._jdf.queryExecution().analyzed().toString()
+            return (
+                plan.count("Join Inner"),
+                hints.count("strategy=broadcast"),
+                sorted(out.collect(), key=repr),
+            )
 
     # 31 chars per value; per row an 8-byte id, 4-byte offsets and the
     # 1-char key: the estimate is 48 bytes a row on both sides
@@ -475,10 +535,12 @@ def test_refine_value_table_bound_counts_utf8_bytes(spark, monkeypatch):
         assert matcher.value_table_fits(20, [1, 31])
         assert matcher.value_table_fits(16, [1, 31])
     wide = "東京都渋谷区" * 5  # 30 chars, 90 UTF-8 bytes
-    joins_table, rows_table = run(wide, 1 << 30)
-    joins_bytes, rows_bytes = run(wide, bound)
+    joins_table, hints_table, rows_table = run(wide, 1 << 30)
+    joins_bytes, hints_bytes, rows_bytes = run(wide, bound)
     assert rows_bytes == rows_table and len(rows_table) > 0
     assert joins_bytes == joins_table + 2
+    # only the two payload joins are hinted on either path
+    assert hints_bytes == hints_table == 2
     assert run("abcdef" * 5, bound)[0] == joins_table
 
 
@@ -1049,23 +1111,18 @@ def test_stream_audio_dedup_matches_batch(spark, tmp_path):
     assert len(rows) <= 32 - 2 * (32 // 4)
 
 
-def test_refine_direct_equals_general_across_join_modes(spark, monkeypatch):
+def test_refine_paths_agree_across_join_modes(spark, monkeypatch):
     """O10 + refine must be mode-transparent: left / semi / anti joins
-    return identical rows on the native pass (value tables or joined
-    values) and on both fallback refine paths, for all six metrics at
-    bounds near 0 and near 1."""
+    return identical rows on the native pass (value tables, joined
+    values or both) and on the no-toolchain filters, for all six
+    metrics at bounds near 0 and near 1."""
     for how in ("left", "left_semi", "left_anti"):
         for threshold in _REFINE_THRESHOLDS:
-            # the direct fallback only at the bound near 1, where it
-            # scores the most pairs (each fallback call takes ~10 s)
-            paths = ("native", "joined", "general") + (
-                ("direct",) if threshold < 50 else ()
-            )
             results = {
                 path: _refine_rows(spark, monkeypatch, how, threshold, path)[1]
-                for path in paths
+                for path in _REFINE_PATHS
             }
-            for path in paths[1:]:
+            for path in _REFINE_PATHS[1:]:
                 assert results[path] == results["native"], (how, threshold, path)
             assert len(results["native"]) > 0, (how, threshold)
 
