@@ -20,10 +20,15 @@ Two physical strategies, mirroring the reference's adaptive choice
 - **approx** (`cross_join_large_files`, matcher.py:99-161): the
   reference calls a Rust ANN plugin in 10k-row chunks with
   ``top_n=500`` per row — effectively a SIMD-accelerated sketch scan.
-  Spark-first re-expression, two physical shapes chosen by pair
+  Spark-first re-expression, three physical shapes chosen by pair
   volume:
 
-  * **SimHash sketch scan** (default, up to ~1e11 pairs): each
+  * **exact top-N** (up to ``ANN_CATALYST_CAP`` pairs): the exact
+    tier's scorer (the fused lossless scan, or the cross join without
+    a toolchain) scores every key pair, and a salted window keeps the
+    top-N nearest per key — no prefilter, so it loses matches only to
+    the top-N budget.
+  * **SimHash sketch scan** (up to ~1e11 pairs): each
     distinct key gets a 64-bit SimHash of its 3-gram shingle set; the
     same native scan keeps pairs with ``popcount(a ^ b) <= max_hamming``
     and the top-N per key — no buckets, so it is *immune to LSH skew
@@ -35,7 +40,7 @@ Two physical strategies, mirroring the reference's adaptive choice
     when keys are diverse, which at that scale they must be for ANY
     sublinear method to work.
 
-  Both keep at most top-N nearest candidates per left key, then
+  All keep at most top-N nearest candidates per left key, then
   re-attach the per-key index lists. Lossy by design exactly like the
   reference (candidate set is a subset of the cartesian).
 """
@@ -44,7 +49,6 @@ from __future__ import annotations
 
 import logging
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -92,15 +96,18 @@ SKETCH_SCAN_CAP = 1e11
 # recall gates measure the capped operator end to end.
 BANDED_BUCKET_CAP = 1024
 
-# Below this pair volume the approximate path plans as PURE CATALYST:
-# broadcast cross join + codegen metric + threshold + salted top-N
-# window — no right-key collect, no Python worker pool, no C kernel
-# warmup. Those fixed costs are what the sketch scan amortizes over
-# billions of pairs; at an 80M-pair shape the codegen exact path
-# scores in under a second (BENCH exact_xl), so paying workers +
-# collect there is pure overhead (VERDICT r2 wrong #3: forced-ANN
-# 7.4 s at a shape whose exact twin ran 1.75 s). 2e8 keeps the
-# measured-good sketch shapes (225M-pair auto_xl and up) on the scan.
+# Up to this pair volume the approximate path takes its top-N over
+# every exactly scored key pair (_exact_topn_scored): no hamming
+# prefilter, so it loses matches only to the top-N budget. With the
+# native kernels the pairs come from the fused lossless scan, which
+# keeps the tier near the exact tier's cost. Measured on a 4-core
+# host, fuzzbench gen seed 3, 12K x 10K keys (1.2e8 pairs),
+# levenshtein 75, default plan, medians of 3 warm whole joins: 2.05 s,
+# against 83.7 s when the tier scored a codegen cross join (still its
+# scorer without a toolchain); 28,793 identical rows. Past 2e8 the
+# sketch scan runs, measured-good from the 225M-pair auto_xl shape up
+# (PLANS.md round 8); where the lossless/lossy crossover belongs now
+# is ROADMAP direction 1.
 ANN_CATALYST_CAP = 2.0e8
 
 
@@ -120,15 +127,24 @@ def _compute_parallelism(
     return int(max(1, min(by_volume, cores * 2)))
 
 
+def native_scan_fits(n_right_keys: int) -> bool:
+    """Whether the native scan (fused lossless or sketch) can run with
+    ``n_right_keys`` keys on its broadcast right side: the native
+    kernels must be available and the side must fit one broadcast."""
+    from ..functions.native_kernels import native_available
+
+    return n_right_keys <= BROADCAST_KEY_LIMIT and native_available()
+
+
 def exact_candidates(
     left_keys: DataFrame,
     right_keys: DataFrame,
     n_left_keys: int,
     n_right_keys: int,
 ) -> DataFrame:
-    """Cartesian of the deduped key frames (J1): the exact tier's
-    fallback when the fused native scan cannot run (no C toolchain, or
-    both key sets past one broadcast). Broadcasts the smaller
+    """Cartesian of the deduped key frames (J1): the scorer of the
+    exact and top-N tiers when the fused native scan cannot run (no C
+    toolchain, or both key sets past one broadcast). Broadcasts the smaller
     side when it fits (shuffle-free BroadcastNestedLoopJoin) and
     repartitions the probe side so scoring parallelism matches the
     cartesian's compute volume, not its (tiny) input row count."""
@@ -278,19 +294,20 @@ def approx_scored_pairs(
     and a broadcastable right side (at most ``BROADCAST_KEY_LIMIT``
     keys); the caller keeps the cross join for everything else.
 
-    On the sketch-scan path with the native kernels available, scoring
-    fuses into the scan kernel (the reference's ``join_sim`` shape —
-    scored matches out, never raw candidates), so only survivors cross
-    the Arrow boundary. Otherwise candidates come from
+    Up to ``ANN_CATALYST_CAP`` pairs the top-N is taken over every
+    exactly scored pair (:func:`_exact_topn_scored`, the same scorer).
+    Past it, on the sketch-scan path with the native kernels available,
+    scoring fuses into the scan kernel (the reference's ``join_sim``
+    shape — scored matches out, never raw candidates), so only
+    survivors cross the Arrow boundary. Otherwise candidates come from
     :func:`approx_candidate_pairs` and scoring runs as the usual
     Spark-side column (codegen'd banded levenshtein / pandas-UDF
     kernels). Both shapes produce identical rows (top-N by hamming,
     then exact-metric threshold) — equivalence-tested."""
     from ..functions.kernels import distance_column
-    from ..functions.native_kernels import native_available
 
     if lossless:
-        if not native_available() or n_right_keys > BROADCAST_KEY_LIMIT:
+        if not native_scan_fits(n_right_keys):
             raise ValueError(
                 "lossless scan needs the native kernels and a right side"
                 " of at most BROADCAST_KEY_LIMIT keys"
@@ -303,15 +320,11 @@ def approx_scored_pairs(
         )
     pair_volume = max(n_left_keys, 1) * max(n_right_keys, 1)
     if pair_volume <= ANN_CATALYST_CAP:
-        return _catalyst_topn_scored(
+        return _exact_topn_scored(
             left_keys, right_keys, left_col, right_col,
             metric, dist_bound, top_n, n_left_keys, n_right_keys, dist_col,
         )
-    if (
-        pair_volume <= SKETCH_SCAN_CAP
-        and n_right_keys <= BROADCAST_KEY_LIMIT
-        and native_available()
-    ):
+    if pair_volume <= SKETCH_SCAN_CAP and native_scan_fits(n_right_keys):
         return _sketch_scan_topn(
             left_keys, right_keys, left_col, right_col, top_n,
             n_left_keys, n_right_keys, max_hamming,
@@ -367,140 +380,7 @@ def attach_index_lists(
     )
 
 
-def max_key_length(keys: DataFrame, col: str) -> int:
-    """Max string length over a key frame — the one cheap stat the
-    deletion-neighborhood rewrite needs (its edit cap must hold for
-    the LONGEST pair the data can form)."""
-    row = keys.agg(F.max(F.length(col)).alias("__l")).collect()[0]
-    return int(row["__l"] or 0)
-
-
-def _deletion_variants(col, cap: int = 1) -> "F.Column":
-    """Deletion neighborhood of a key (lowered by the caller, in the
-    JVM, as the rescoring is) with up to ``cap``
-    deletions (FastSS U_cap, Bocek et al. 2007), including the key
-    itself, deduplicated and sorted (deterministic output order).
-    |U_1| <= L + 1; |U_2| <= 1 + L + L(L-1)/2.
-
-    An Arrow-batched pandas UDF, not a Catalyst higher-order function:
-    HOFs evaluate INTERPRETED (no codegen), and the
-    ``transform(sequence, concat(substr, substr))`` formulation
-    measured ~220 us/key — which, re-evaluated on both join sides,
-    dominated the whole rewrite. Python slicing is ~1 us/key, runs
-    once per DISTINCT key (never per pair), and the output order is
-    engine-independent."""
-    from pyspark.sql.types import ArrayType, StringType
-
-    @F.pandas_udf(ArrayType(StringType()))
-    def delk(s: pd.Series) -> pd.Series:
-        def variants(k):
-            k = "" if k is None else k
-            out = {k}
-            frontier = {k}
-            for _ in range(cap):
-                nxt = set()
-                for v in frontier:
-                    for i in range(len(v)):
-                        nxt.add(v[:i] + v[i + 1 :])
-                frontier = nxt - out
-                out |= nxt
-            return sorted(out)
-
-        return s.map(variants)
-
-    return delk(F.col(col) if isinstance(col, str) else col)
-
-
-def neighborhood_scored_pairs(
-    left_keys: DataFrame,
-    right_keys: DataFrame,
-    left_col: str,
-    right_col: str,
-    dist_bound: float,
-    dist_col: str = "__dist",
-    n_left_keys: int = 0,
-    n_right_keys: int = 0,
-    cap: int = 1,
-) -> DataFrame:
-    """EXACT levenshtein-join rewrite for edit cap <= 2 (the FastSS /
-    deletion-neighborhood technique, Bocek et al. 2007): when every
-    pair's threshold cap ``floor(bound * maxlen)`` is at most ``cap``,
-    the threshold can only admit ``lev(a, b) <= cap`` pairs, and
-    ``lev(a, b) <= k  =>  U_k(a) ∩ U_k(b) != ∅`` where U_k is the
-    deletion neighborhood with up to k deletions including the string
-    itself (take an optimal alignment: delete each substituted
-    position from both sides, each inserted char from the longer side
-    — at most k deletions per side leave equal subsequences). So
-    candidate generation is an EQUI-JOIN on exploded deletion
-    variants — |key|+1 (cap 1) or ~|key|^2/2 (cap 2) variant rows per
-    key instead of a cartesian — followed by exact rescoring that
-    removes the filter's false positives (e.g. "ab"/"ba" share
-    variant "b" at lev 2).
-
-    Lossless (the filter is complete for k <= cap), output identical
-    to the cross-join exact path, plan a hash join: at 10K x 8K keys
-    this replaces an 80M-pair scan with a ~200K-row join, and at
-    100 TB it is the difference between a cartesian and a shuffle
-    join keyed on short strings."""
-    from ..functions.kernels import distance_column
-
-    lv = left_keys.select(left_col).withColumn(
-        "__var", F.explode(_deletion_variants(jvm_lower(left_col), cap))
-    )
-    rv = right_keys.select(right_col).withColumn(
-        "__var", F.explode(_deletion_variants(jvm_lower(right_col), cap))
-    )
-    # per-key variant fan-out bound: ~L+1 at cap 1, ~1+L+L(L-1)/2 at
-    # cap 2 (L ~ 31 for realistic keys)
-    fanout = 32 if cap <= 1 else 512
-    # key frames arrive AQE-coalesced to one partition (tiny aggregate
-    # outputs), which would serialize the variant join + rescore chain
-    # on a single task (measured: 3.7 s of a 5.6 s query on one core).
-    # Spread the probe side by the candidate volume estimate — same
-    # policy as the exact path's pair-volume repartition — but floor
-    # the width at the core count once the shape is non-trivial: the
-    # fanout constant counts VARIANT rows per key, while the join's
-    # true output is bucket-product-driven and runs ~5-150 candidates
-    # per key on real families, so the row-count estimate lowballs the
-    # compute by ~1 order. Measured at 15K x 15K sequential keys
-    # (round 10): est 480K -> 2 partitions -> 5.6 s for join + banded
-    # rescore + distinct; same chain at 32 partitions -> 1.5 s. Tiny
-    # shapes (est below one task) still skip the repartition.
-    est_pairs = max(n_left_keys, 1) * fanout
-    n_parts = _compute_parallelism(left_keys, est_pairs)
-    if n_parts > 1:
-        cores = left_keys.sparkSession.sparkContext.defaultParallelism
-        lv = lv.repartition(max(n_parts, cores), "__var")
-    # fanout variant rows per key: broadcast the smaller side while it
-    # fits so the variant join never shuffles the larger one
-    if 0 < n_right_keys <= BROADCAST_KEY_LIMIT // fanout and (
-        n_left_keys == 0 or n_right_keys <= n_left_keys
-    ):
-        rv = F.broadcast(rv)
-    elif 0 < n_left_keys <= BROADCAST_KEY_LIMIT // fanout:
-        lv = F.broadcast(lv)
-    cand = lv.join(rv, on="__var", how="inner").select(left_col, right_col)
-    la, lb = "__lc_n1_l", "__lc_n1_r"
-    d = distance_column(
-        "levenshtein", F.col(la), F.col(lb), dist_bound
-    )
-    # rescore BEFORE deduplicating: the banded-lev filter is codegen
-    # (~0.1 us/pair) while distinct() is a full shuffle of string
-    # pairs — thresholding first shrinks the distinct's input by the
-    # filter's selectivity (4x on the 80M-pair bench shape), and a
-    # pair's score is a pure function of the pair, so dedup order
-    # cannot change the result set
-    return (
-        cand.withColumn(la, jvm_lower(left_col))
-        .withColumn(lb, jvm_lower(right_col))
-        .withColumn(dist_col, d)
-        .filter(F.col(dist_col) <= F.lit(dist_bound))
-        .drop(la, lb)
-        .distinct()
-    )
-
-
-def _catalyst_topn_scored(
+def _exact_topn_scored(
     left_keys: DataFrame,
     right_keys: DataFrame,
     left_col: str,
@@ -512,35 +392,45 @@ def _catalyst_topn_scored(
     n_right_keys: int,
     dist_col: str,
 ) -> DataFrame:
-    """Small-shape tier of the approximate join, entirely JVM-side:
-    broadcast cross join of the key frames -> codegen (or pandas-UDF)
-    metric distance on pre-lowered keys -> threshold filter -> at most
-    ``top_n`` nearest right keys per left key via a salted two-phase
-    window. Returns ``(left_col, right_col, dist_col)``.
+    """Small-shape tier of the approximate join: every key pair scored
+    exactly -> threshold filter -> at most ``top_n`` nearest right keys
+    per left key via a salted two-phase window. Returns
+    ``(left_col, right_col, dist_col)``.
 
-    Same contract as the sketch-scan tier (lossy: candidate set bounded
-    by top_n per key; output always a subset of the exact join's scored
-    pairs) with strictly better recall — no hamming prefilter losses —
-    and NONE of its fixed costs (right-key collect, Python worker
-    spin-up, C kernel warm). Ties at the top_n boundary break by
-    ascending right key, deterministic across runs and tiers."""
+    The scored pairs come from the exact tier's scorer: the fused
+    lossless scan when the native kernels are available and the right
+    side fits one broadcast; otherwise a broadcast cross join scored by
+    the codegen (or pandas-UDF) metric on pre-lowered keys. Same
+    contract as the sketch-scan tier (lossy: candidate set bounded by
+    top_n per key; output always a subset of the exact join's scored
+    pairs) with strictly better recall — no hamming prefilter losses.
+    Ties at the top_n boundary break by ascending right key,
+    deterministic across runs and tiers."""
     from ..functions.kernels import distance_column
 
-    la, lb = "__lc_topn_l", "__lc_topn_r"
-    cands = exact_candidates(
-        left_keys.select(left_col).withColumn(la, jvm_lower(left_col)),
-        right_keys.select(right_col).withColumn(
-            lb, jvm_lower(right_col)
-        ),
-        n_left_keys,
-        n_right_keys,
-    )
-    d = distance_column(metric, F.col(la), F.col(lb), dist_bound)
-    scored = (
-        cands.withColumn(dist_col, d)
-        .filter(F.col(dist_col) <= F.lit(dist_bound))
-        .select(left_col, right_col, dist_col)
-    )
+    if native_scan_fits(n_right_keys):
+        scored = _sketch_scan_topn(
+            left_keys, right_keys, left_col, right_col, top_n,
+            n_left_keys, n_right_keys, DEFAULT_MAX_HAMMING,
+            rescore_metric=metric, rescore_bound=dist_bound,
+            dist_col=dist_col, lossless=True,
+        )
+    else:
+        la, lb = "__lc_topn_l", "__lc_topn_r"
+        cands = exact_candidates(
+            left_keys.select(left_col).withColumn(la, jvm_lower(left_col)),
+            right_keys.select(right_col).withColumn(
+                lb, jvm_lower(right_col)
+            ),
+            n_left_keys,
+            n_right_keys,
+        )
+        d = distance_column(metric, F.col(la), F.col(lb), dist_bound)
+        scored = (
+            cands.withColumn(dist_col, d)
+            .filter(F.col(dist_col) <= F.lit(dist_bound))
+            .select(left_col, right_col, dist_col)
+        )
     return _salted_topn(scored, left_col, right_col, dist_col, top_n).select(
         left_col, right_col, dist_col
     )

@@ -67,27 +67,12 @@ from ..plans.planner import (
     should_deduplicate_inputs,
 )
 from .candidates import (
-    BROADCAST_KEY_LIMIT,
     DEFAULT_TOP_N,
-    SKETCH_SCAN_CAP,
     approx_scored_pairs,
     attach_index_lists,
     exact_candidates,
-    max_key_length,
-    neighborhood_scored_pairs,
+    native_scan_fits,
 )
-
-# Attempt the deletion-neighborhood rewrite (cap <= NEIGHBORHOOD_MAX_
-# EDITS) only when the distance bound is small enough that SOME
-# realistic key length satisfies floor(bound * maxlen) <= cap —
-# avoids paying the max-length probe on clearly-inapplicable
-# thresholds.
-NEIGHBORHOOD_BOUND_GATE = 0.3
-# largest edit cap the rewrite handles exactly: U_k deletion
-# neighborhoods are complete for lev <= k; fan-out grows ~L^k/k! per
-# key, so k = 2 (~L^2/2 variants) is the practical ceiling before the
-# variant join itself dominates
-NEIGHBORHOOD_MAX_EDITS = 2
 
 LEFT_INDEX = "__left_index"
 RIGHT_INDEX = "__right_index"
@@ -204,26 +189,6 @@ def _explode_index_lists(
     )
 
 
-def _explode_scored_pairs(
-    scored: DataFrame,
-    left_keys: DataFrame,
-    right_keys: DataFrame,
-    mapping: FuzzyMapping,
-    n_left_keys: int,
-    n_right_keys: int,
-) -> DataFrame:
-    """Thresholded key pairs ``(left key, right key, __fuzzy_dist)`` ->
-    row pairs. Index lists re-attach to the surviving pairs only, and
-    the pairs are distinct, so the exploded index pairs are unique."""
-    survivors = attach_index_lists(
-        scored, left_keys, right_keys, mapping.left_col, mapping.right_col,
-        n_left_keys, n_right_keys,
-    )
-    return _explode_index_lists(
-        survivors, F.lit(1.0) - F.col(_DIST), mapping
-    )
-
-
 def first_round_matches(
     left: DataFrame,
     right: DataFrame,
@@ -233,13 +198,20 @@ def first_round_matches(
     use_appr_nearest_neighbor: Optional[bool],
     top_n: int,
     cross_over: float,
-    max_len_left: Optional[int] = None,
-    max_len_right: Optional[int] = None,
     n_parts: Optional[int] = None,
 ) -> DataFrame:
     """Round 1 of the per-mapping loop (reference matcher.py:419-504):
     build key frames, pick exact/approx strategy on the cartesian of
     distinct-key counts, generate candidates, score.
+
+    A threshold-100 mapping is a hash equi-join on the lowered key. The
+    exact strategy has one lossless scorer, the fused native scan
+    against the broadcast smaller key side; with no C toolchain, or
+    with both key sides past one broadcast, the codegen cross join
+    scores instead. The approximate strategy keeps the top-N per key:
+    up to ``ANN_CATALYST_CAP`` pairs over the exact scorer's pairs,
+    past it from the sketch scan, the blocked scan or MinHash banding
+    (``operators/candidates.py``).
 
     ``n_left_keys`` / ``n_right_keys`` are the planner's HyperLogLog
     approximate distinct counts — the reference recounts the key frames
@@ -268,66 +240,6 @@ def first_round_matches(
         if n_parts:
             joined = joined.repartition(n_parts)
         return _explode_index_lists(joined, F.lit(1.0), mapping)
-    cartesian = max(n_left_keys, 1) * max(n_right_keys, 1)
-    neighborhood_cap = (
-        int(
-            mapping.reversed_threshold_score
-            * max(
-                max_len_left
-                if max_len_left is not None
-                else max_key_length(left_keys, mapping.left_col),
-                max_len_right
-                if max_len_right is not None
-                else max_key_length(right_keys, mapping.right_col),
-            )
-        )
-        if (
-            mapping.fuzzy_type == "levenshtein"
-            and 0.0
-            < mapping.reversed_threshold_score
-            <= NEIGHBORHOOD_BOUND_GATE
-        )
-        else NEIGHBORHOOD_MAX_EDITS + 1
-    )
-    neighborhood_ok = (
-        use_appr_nearest_neighbor is not True  # forced ANN stays ANN
-        and neighborhood_cap <= NEIGHBORHOOD_MAX_EDITS
-    )
-    # Mid-volume promotion adjudicated AGAINST (round 10, VERDICT r9
-    # #5): a probe-gated cap-1 O9 promotion was built and A/B'd at the
-    # auto_xl shape (15K x 15K, probed candidate volume 2.18M) — even
-    # with the parallelism fix below, variant join + rescore +
-    # distinct measures 1.5 s warmed PLUS a 1.3 s volume probe, vs
-    # 1.94 s for the fused sketch scan, and the O9 output is larger
-    # (lossless) so the downstream index joins pay more too. The
-    # round-5 policy note stands: in the mid-volume ANN window the
-    # sketch scan's constant wins. Full A/B in PLANS.md round 10.
-    if neighborhood_ok and (
-        cartesian <= cross_over  # replaces the cartesian: always wins
-        or cartesian > SKETCH_SCAN_CAP  # replaces lossy banding: exact AND cheaper
-        or use_appr_nearest_neighbor is False  # forced exact at any volume
-    ):
-        # O9 (engine-original rewrite, no reference analogue): every
-        # pair's banded cap floor(bound * maxlen) is <= 2, so the
-        # threshold can only admit lev <= cap pairs — plan candidate
-        # generation as a deletion-neighborhood EQUI-join (FastSS):
-        # |key|+1 (cap 1) / ~|key|^2/2 (cap 2) variant rows per key,
-        # hash join, exact rescore. Lossless and linear in the key
-        # count. Policy: below the crossover it replaces the cartesian
-        # outright; in the mid-volume ANN window the fused sketch scan
-        # stays (its measured constant beats the variant join's
-        # shuffles); past the sketch cap it replaces MinHash banding —
-        # an EXACT plan where the reference can only go lossy, at any
-        # volume (the 1e14 abort stops applying to these thresholds).
-        scored = neighborhood_scored_pairs(
-            left_keys, right_keys, mapping.left_col, mapping.right_col,
-            mapping.reversed_threshold_score, dist_col=_DIST,
-            n_left_keys=n_left_keys, n_right_keys=n_right_keys,
-            cap=max(neighborhood_cap, 1),
-        )
-        return _explode_scored_pairs(
-            scored, left_keys, right_keys, mapping, n_left_keys, n_right_keys
-        )
     strategy = choose_candidate_strategy(
         n_left_keys, n_right_keys, use_appr_nearest_neighbor, cross_over
     )
@@ -335,10 +247,8 @@ def first_round_matches(
     # against the broadcast smaller side (lossless; only survivors
     # cross Arrow). The codegen cross join stays as the fallback with
     # no C toolchain or with both key sides past one broadcast.
-    fused_exact = (
-        not strategy.use_approx
-        and min(n_left_keys, n_right_keys) <= BROADCAST_KEY_LIMIT
-        and native_kernels.native_available()
+    fused_exact = not strategy.use_approx and native_scan_fits(
+        min(n_left_keys, n_right_keys)
     )
     if not (strategy.use_approx or fused_exact):
         cands = exact_candidates(
@@ -373,8 +283,14 @@ def first_round_matches(
             top_n=top_n, n_left_keys=n_right_keys,
             n_right_keys=n_left_keys, dist_col=_DIST, lossless=fused_exact,
         )
-    return _explode_scored_pairs(
-        scored, left_keys, right_keys, mapping, n_left_keys, n_right_keys
+    # the scored key pairs are distinct, so the exploded index pairs
+    # are unique
+    survivors = attach_index_lists(
+        scored, left_keys, right_keys, mapping.left_col, mapping.right_col,
+        n_left_keys, n_right_keys,
+    )
+    return _explode_index_lists(
+        survivors, F.lit(1.0) - F.col(_DIST), mapping
     )
 
 
@@ -806,8 +722,8 @@ def fuzzy_match_dfs(
         right_tab_fut = pool.submit(
             _gated_table, right_idx_fut, right_fut, RIGHT_INDEX, right_cols
         )
-        left_count, left_uniq, left_maxlen = left_fut.result()
-        right_count, right_uniq, right_maxlen = right_fut.result()
+        left_count, left_uniq, _ = left_fut.result()
+        right_count, right_uniq, _ = right_fut.result()
         left_i = left_idx_fut.result()
         right_i = right_idx_fut.result()
         native_fut.result()
@@ -887,8 +803,6 @@ def fuzzy_match_dfs(
         use_appr_nearest_neighbor,
         top_n,
         cross_over_for_appr_nearest_neighbor,
-        max_len_left=left_maxlen.get(first.left_col),
-        max_len_right=right_maxlen.get(first.right_col),
         n_parts=key_pair_parts,
     )
     if len(maps) > 1:

@@ -56,10 +56,9 @@ def get_count_uniqueness_and_maxlen(
     df: DataFrame, columns: Sequence[str]
 ) -> Tuple[int, Dict[str, int], Dict[str, int]]:
     """Row count, approximate distinct count AND max string length per
-    column in ONE aggregate pass. The max length feeds the
-    deletion-neighborhood gate (O9) — fusing it here removes the two
-    per-mapping probe jobs `max_key_length` would otherwise run (each
-    a full scan at 100 TB)."""
+    column in ONE aggregate pass. The max length feeds only the refine
+    value-table bound (``operators.matcher.value_table_fits``), which
+    estimates a side's collected bytes from it."""
     cols = list(dict.fromkeys(columns))
     row = df.agg(
         F.count(F.lit(1)).alias("__fuzzy_n"),

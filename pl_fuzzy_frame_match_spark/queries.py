@@ -262,7 +262,8 @@ def fuzzy_join_jw_part(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def fuzzy_join_exact_xl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BASELINE.md's 10K x 8K exact row (80M pairs at sf0.1, reference
-    M3: 18.67 s): every pair pays the banded-levenshtein kernel. Both
+    M3: 18.67 s): every pair is scored by the exact tier's fused native
+    scan (the codegen cross join without a C toolchain). Both
     sides are near-unique customer-name subsets (custkey range vs
     custkey mod — predicates, not LIMIT, so inputs are deterministic
     for the oracle), giving 10,001 x 8,000 keys at sf0.1 and a REAL
@@ -300,13 +301,14 @@ def fuzzy_join_exact_xl(spark: SparkSession, sf_dir: str) -> DataFrame:
 def fuzzy_join_auto_xl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BASELINE-shape query: customer x customer self fuzzy join (15K x
     15K = 225M cartesian at sf0.1) with AUTOMATIC strategy selection —
-    past the 1e8 crossover the planner switches to the MinHash-banding
-    ANN path, mirroring the reference's headline 15K x 10K / 40K x 30K
-    speedup rows (BASELINE.md; reference readme.md:40-58). At the
-    driver's sf0.01 correctness gate the cartesian is 2.25M, the planner
-    picks the LOSSLESS exact path, and the full result is checked
-    against the SQL oracle — so the same query pins both the crossover
-    behavior and exact-path correctness."""
+    past the 1e8 crossover (and the 2e8 top-N tier cap) the planner
+    switches to the SimHash sketch-scan ANN path, mirroring the
+    reference's headline 15K x 10K / 40K x 30K speedup rows
+    (BASELINE.md; reference readme.md:40-58). At the sf0.01
+    correctness gate the cartesian is 2.25M, the planner picks the
+    LOSSLESS exact path (the fused native scan), and the full result
+    is checked against the SQL oracle — so the same query pins both
+    the crossover behavior and exact-path correctness."""
     cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_name")
     out = fuzzy_match_dfs(
         cust, cust, [FuzzyMapping("c_name", "c_name", threshold_score=92.0)]
@@ -484,13 +486,14 @@ def fuzzy_join_jaro(spark: SparkSession, sf_dir: str) -> DataFrame:
 def fuzzy_join_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Forced approximate candidate path (reference
     cross_join_large_files). At this pair volume the ANN planner picks
-    the pure-Catalyst top-N tier — exact scoring + per-key top-N cap —
-    and because no left key has anywhere near top_n=500 matches at the
-    gate scale, the cap never truncates and the result EQUALS the
-    exact join: the lossy-by-design operator becomes oracle-checkable
-    exactly where its chosen tier is lossless. (At volumes where the
-    sketch-scan tier kicks in, recall gates in tests/test_properties.py
-    take over.)"""
+    the exact top-N tier — every key pair scored by the exact tier's
+    scorer (the fused native scan, or the codegen cross join without a
+    C toolchain) + per-key top-N cap — and because no left key has
+    anywhere near top_n=500 matches at the gate scale, the cap never
+    truncates and the result EQUALS the exact join: the lossy-by-design
+    operator becomes oracle-checkable exactly where its chosen tier is
+    lossless. (At volumes where the sketch-scan tier kicks in, recall
+    gates in tests/test_properties.py take over.)"""
     left = load_table(spark, sf_dir, "customer")
     right = load_table(spark, sf_dir, "supplier")
     out = fuzzy_match_dfs(
@@ -5808,20 +5811,15 @@ def multimodal_gif_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def fuzzy_join_exact_cap2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The cap-2 deletion-neighborhood rewrite (O9 extended, FastSS
-    k=2): threshold 85 on 16-char keys gives edit cap
-    floor(0.15*16) = 2, so the forced-exact plan joins on U_2 deletion
-    variants (~1 + L + L(L-1)/2 per key) instead of scanning the
-    cartesian — EXACT results in a regime where the reference's only
-    options are a lossy ANN pass or the full kernel scan. Keys are
-    md5-derived (DIVERSE — the regime the rewrite targets; on
-    degenerate sequential-digit families U_2 neighborhoods overlap so
-    densely that candidates approach the cartesian, measured 69% on
-    raw TPC-H names, and the sketch scan is the better plan); the
-    right side plants an exactly-2-substitution twin of every 7th key,
-    so true matches exist at the cap boundary. The sf0.01 oracle is
-    the NAIVE cross join, so completeness of the k=2 variant filter is
-    value-checked against ground truth every round."""
+    """Forced-exact join at a small edit cap: threshold 85 on 16-char
+    keys admits only pairs within floor(0.15*16) = 2 edits, and the
+    fused native scan's length window and bag-distance filters reject
+    most pairs before the levenshtein DP. Keys are md5-derived
+    (diverse); the right side plants an exactly-2-substitution twin of
+    every 7th key, so true matches exist at the cap boundary. The
+    sf0.01 oracle is the NAIVE cross join, so the exact tier's
+    completeness at the cap is value-checked against ground truth
+    every round."""
     cust = load_table(spark, sf_dir, "customer")
     left = cust.where(F.col("c_custkey") % 5 == 0).select(
         "c_custkey",

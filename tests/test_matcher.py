@@ -2,6 +2,8 @@
 (reference tests/test_pl_fuzzy_frame_match.py:339-404 and the edge cases
 in tests/match_utils.py:116-193)."""
 
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -247,8 +249,8 @@ def test_blocked_sketch_scan_equals_unblocked(spark, monkeypatch):
 def test_ann_with_all_empty_right_keys(spark, monkeypatch):
     """A right frame whose keys are all empty strings passes the O7
     empty-frame early-exit but must yield an empty (not crashing)
-    ANN result — on BOTH the catalyst top-N tier (default at this
-    volume) and the sketch-scan tier (forced)."""
+    ANN result — on BOTH the top-N tier (default at this volume) and
+    the sketch-scan tier (forced)."""
     from pl_fuzzy_frame_match_spark.operators import candidates as cand
 
     left = spark.createDataFrame([("alpha",), ("beta",)], ["a"])
@@ -403,7 +405,10 @@ def _exact_tier_frames(spark):
         for m in ("levenshtein", "jaro_winkler")
         for t in (99.0, 1.0)
     ]
-    + [pytest.param("o9", "levenshtein", 99.0, id="o9-levenshtein-99")],
+    + [
+        pytest.param("topn", m, t, id=f"topn-{m}-{t:g}")
+        for m, t in (("levenshtein", 60.0), ("jaro_winkler", 80.0))
+    ],
 )
 def test_fused_rescoring_matches_jvm_scoring(
     spark, monkeypatch, tier, metric, threshold
@@ -411,29 +416,27 @@ def test_fused_rescoring_matches_jvm_scoring(
     """The in-kernel fused rescoring (native C metric kernels inside
     the scan) must produce exactly the rows + scores of the unfused
     shape (candidates out, Spark-side scoring, filter) for every metric
-    branch of the C scanner: on the lossy sketch tier (forced ANN) and
-    on the lossless exact tier, whose unfused twin is the codegen /
-    pandas-UDF cross join. The O9 deletion-neighbourhood join (``o9``)
-    must match the cross join too."""
+    branch of the C scanner: on the lossy sketch tier (forced ANN), on
+    the lossless exact tier, whose unfused twin is the codegen /
+    pandas-UDF cross join, and on the forced-ANN top-N tier (``topn``),
+    which takes the top-N of the scan's pairs natively and of the cross
+    join's without a toolchain."""
     from pl_fuzzy_frame_match_spark.functions import native_kernels as natk
     from pl_fuzzy_frame_match_spark.operators import candidates as cand
-    from pl_fuzzy_frame_match_spark.operators import matcher as M
 
     if not natk.native_available():
         pytest.skip("no C toolchain")
     if tier == "sketch":
         # pin the SKETCH tier: at this volume the ANN path would
-        # otherwise plan as the catalyst top-N tier and never touch
-        # the C scanner
+        # otherwise plan as the top-N tier and never touch the
+        # sketch branch of the C scanner
         monkeypatch.setattr(cand, "ANN_CATALYST_CAP", -1.0)
         left, right = _sketch_tier_frames(spark)
         ann = True
     else:
-        if tier == "exact":
-            # keep small levenshtein bounds off the O9 equi-join rewrite
-            monkeypatch.setattr(M, "NEIGHBORHOOD_BOUND_GATE", 0.0)
         left, right = _exact_tier_frames(spark)
-        ann = None
+        ann = True if tier == "topn" else None
+    top_n = 3 if tier == "topn" else cand.DEFAULT_TOP_N
     maps = [
         FuzzyMapping(
             "lname", "rname", threshold_score=threshold, fuzzy_type=metric
@@ -450,19 +453,24 @@ def test_fused_rescoring_matches_jvm_scoring(
     def plan(df):
         return df._jdf.queryExecution().executedPlan().toString()
 
-    fused_df = fuzzy_match_dfs(left, right, maps, use_appr_nearest_neighbor=ann)
-    # the scans run in mapInPandas, O9's variant UDF in ArrowEvalPython
-    shape = "ArrowEvalPython" if tier == "o9" else "MapInPandas"
-    assert shape in plan(fused_df)
+    fused_df = fuzzy_match_dfs(
+        left, right, maps, use_appr_nearest_neighbor=ann, top_n=top_n
+    )
+    # the scans run in mapInPandas
+    assert "MapInPandas" in plan(fused_df)
+    if tier == "exact":
+        assert "ArrowEvalPython" not in plan(fused_df)
     fused = rows(fused_df)
     assert fused  # fixture must match something
     if tier == "exact":
         assert (900, 900, 1.0) in fused  # "" matches ""
-    # disable the native tier (and O9) -> unfused JVM-scored shape
+    if tier == "topn":
+        per_left = Counter(lid for lid, _, _ in fused)
+        assert max(per_left.values()) == top_n  # the budget binds
+    # disable the native tier -> unfused JVM-scored shape
     monkeypatch.setattr(natk, "native_available", lambda: False)
-    monkeypatch.setattr(M, "NEIGHBORHOOD_BOUND_GATE", 0.0)
     unfused_df = fuzzy_match_dfs(
-        left, right, maps, use_appr_nearest_neighbor=ann
+        left, right, maps, use_appr_nearest_neighbor=ann, top_n=top_n
     )
     if tier != "sketch":
         assert "MapInPandas" not in plan(unfused_df)  # the cross join

@@ -192,7 +192,7 @@ def _match_pairs(df):
 
 
 def test_ann_catalyst_topn_recall_vs_exact(spark):
-    """Default forced-ANN at small pair volume plans as the catalyst
+    """Default forced-ANN at small pair volume plans as the exact
     top-N tier — no hamming prefilter, so recall should be essentially
     1 whenever matches-per-key stay under top_n."""
     from pl_fuzzy_frame_match_spark.models import FuzzyMapping
@@ -209,7 +209,7 @@ def test_ann_catalyst_topn_recall_vs_exact(spark):
     )
     assert ann <= exact  # ANN is a subset of the exact result (lossy only)
     recall = len(ann & exact) / len(exact)
-    assert recall >= 0.99, f"catalyst top-N recall {recall:.3f} < 0.99"
+    assert recall >= 0.99, f"top-N tier recall {recall:.3f} < 0.99"
 
 
 def test_ann_sketch_scan_recall_vs_exact(spark, monkeypatch):
@@ -224,7 +224,7 @@ def test_ann_sketch_scan_recall_vs_exact(spark, monkeypatch):
     )
     assert len(exact) > 100  # the generator must produce real matches
     # force the sketch-scan tier (normally chosen only past the
-    # catalyst cap) so its hamming-prefilter recall stays gated
+    # top-N tier cap) so its hamming-prefilter recall stays gated
     monkeypatch.setattr(candidates, "ANN_CATALYST_CAP", -1.0)
     ann = _match_pairs(
         fuzzy_match_dfs(left, right, maps, use_appr_nearest_neighbor=True)
@@ -313,9 +313,8 @@ _rand_text = st.one_of(
 @given(
     left_vals=st.lists(_rand_text, min_size=0, max_size=12),
     right_vals=st.lists(_rand_text, min_size=0, max_size=10),
-    # 90 puts levenshtein runs through the deletion-neighborhood
-    # rewrite (bound 0.10 <= gate), so the brute-force model also
-    # pins O9's losslessness on adversarial inputs
+    # 90 admits no edit on these <= 4-char keys (0.10 * 4 < 1): the
+    # exact tier must still find every case-insensitive equal pair
     th=st.sampled_from([1.0, 40.0, 75.0, 90.0, 100.0]),
     metric=st.sampled_from(["levenshtein", "jaro_winkler", "indel"]),
 )

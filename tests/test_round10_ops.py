@@ -228,55 +228,6 @@ def test_er_quality_precision_never_counts_false_pairs(spark):
 
 
 # ---------------------------------------------------------------------------
-# O9 variant-join parallelism floor (round 10): the rescore chain must
-# run cluster-wide once the estimated volume crosses one task
-# ---------------------------------------------------------------------------
-
-
-def test_neighborhood_join_parallelism_floored_at_cores(spark):
-    from pyspark.sql import functions as F
-
-    from pl_fuzzy_frame_match_spark.operators.candidates import (
-        neighborhood_scored_pairs,
-    )
-
-    cust = spark.read.parquet(
-        "/root/testdata/sf0.01/customer.parquet"
-    ).select("c_name").where(F.col("c_name").isNotNull()).distinct()
-    rk = cust.select(F.col("c_name").alias("r_name"))
-    out = neighborhood_scored_pairs(
-        cust, rk, "c_name", "r_name", 0.08,
-        n_left_keys=1500, n_right_keys=1500, cap=1,
-    )
-    # est 1500 * 32 = 48K pairs < one task -> no repartition forced;
-    # the point is the LARGE shape: assert the floor arithmetic via a
-    # shape that crosses PAIRS_PER_TASK
-    big = cust.crossJoin(spark.range(10).select(F.lit("x").alias("__p")))
-    bigk = big.select(
-        F.concat_ws("-", "c_name", F.monotonically_increasing_id().cast("string")).alias("c_name")
-    ).localCheckpoint(eager=True)
-    n = bigk.count()
-    bigr = bigk.select(F.col("c_name").alias("r_name"))
-    wide = neighborhood_scored_pairs(
-        bigk, bigr, "c_name", "r_name", 0.08,
-        n_left_keys=n, n_right_keys=n, cap=1,
-    )
-    cores = spark.sparkContext.defaultParallelism
-    # the variant join's probe side must be hash-repartitioned at >=
-    # core-count width (the round-10 fix: est volume lowballed the
-    # join output and the rescore serialized on 2 tasks); the FINAL
-    # frame's partition count is AQE-coalesced, so assert on the plan
-    plan = wide._jdf.queryExecution().analyzed().toString()
-    import re
-
-    widths = [
-        int(m) for m in re.findall(r"RepartitionByExpression.*?, (\d+)", plan)
-    ]
-    assert widths and max(widths) >= cores, (widths, cores, plan[:500])
-    assert out.count() >= 0
-
-
-# ---------------------------------------------------------------------------
 # IVF-PQ recall gate on the REAL gate corpus (VERDICT r9 #7): the
 # synthetic clusterable corpus measures 1.0; the sf0.01 embeddings are
 # near-unstructured 64-dim vectors — the regime where coarse pruning

@@ -279,8 +279,8 @@ def test_stream_fuzzy_enrich_banded_fallback_matches_batch(
 
 
 def test_banded_tier_plan_shape(spark, monkeypatch):
-    """VERDICT r4 #9 (stretch): the O9-INELIGIBLE scale path — edit
-    cap >= 2, pair volume past SKETCH_SCAN_CAP — must route to the
+    """VERDICT r4 #9 (stretch): the scale path — pair volume past
+    SKETCH_SCAN_CAP — must route to the
     MinHash banded bucket join: hash equi-joins only (no cartesian, no
     nested loop), per-key output bounded by top_n. Caps are
     monkeypatched down so a test-size shape exercises the REAL tier
@@ -535,11 +535,12 @@ def test_decode_image_native_formats(spark, fmt):
     assert (r["width"], r["height"], r["channels"]) == want
 
 
-def test_neighborhood_cap2_matches_bruteforce(spark):
-    """The cap-2 deletion-neighborhood rewrite (FastSS k=2) must be
-    LOSSLESS: forced-exact output row- and score-identical to the
-    brute-force python model over random mutated strings, with a
-    hash-join plan (no cartesian, no BNLJ)."""
+def test_exact_cap2_matches_bruteforce(spark):
+    """A forced-exact join whose threshold admits at most 2 edits must
+    be LOSSLESS: output row- and score-identical to the brute-force
+    python model over random mutated strings, planned without a
+    cartesian or a BNLJ (the fused scan broadcasts the smaller key
+    side into a mapInPandas pass)."""
     import random
 
     from pl_fuzzy_frame_match_spark import FuzzyMapping, fuzzy_match_dfs
@@ -574,7 +575,7 @@ def test_neighborhood_cap2_matches_bruteforce(spark):
     right = spark.createDataFrame(
         [(i, v) for i, v in enumerate(rvals)], "rid long, rname string"
     )
-    # maxlen ~14 -> floor(0.15 * 14) = 2: the cap-2 trigger
+    # maxlen ~14 -> floor(0.15 * 14) = 2 edits at most
     out = fuzzy_match_dfs(
         left, right,
         [FuzzyMapping("lname", "rname", threshold_score=85.0)],
