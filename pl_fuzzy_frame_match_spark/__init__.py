@@ -5,9 +5,15 @@ plus large-scale training-data pipeline operators (dedup, similarity
 search, text analysis, multimodal plumbing, streaming).
 """
 
-from .functions.kernels import similarity_column
-from .models import FUZZY_TYPES, FuzzyMapping, FuzzyTypeLiteral
-from .operators.matcher import (
+from ._zip_cache import install as _install_zip_cache
+
+# every process that imports the engine (the driver and each Python
+# worker) stops re-reading unchanged zip archives at every task start
+_install_zip_cache()
+
+from .functions.kernels import similarity_column  # noqa: E402
+from .models import FUZZY_TYPES, FuzzyMapping, FuzzyTypeLiteral  # noqa: E402
+from .operators.matcher import (  # noqa: E402
     fuzzy_match_dfs,
     fuzzy_match_dfs_with_context,
     fuzzy_match_temp_dir,

@@ -4,18 +4,22 @@ Two physical strategies, mirroring the reference's adaptive choice
 (/root/reference/pl_fuzzy_frame_match/matcher.py:241-340):
 
 - **exact** (`cross_join_small_files`, matcher.py:164-185): every pair
-  of the two *deduped key frames*, scored losslessly. With the native
-  kernels available and the smaller key frame broadcastable, this is
-  one fused C scan (``approx_scored_pairs(..., lossless=True)``): the
-  smaller side is broadcast sorted by length, and each Arrow batch of
-  the other side is scored against all of it in one native pass. For
-  levenshtein a length window and a bag-distance lower bound reject
-  most pairs before the Myers DP (the per-candidate-pair filters of
-  *Fuzzy Joins Using MapReduce*, ICDE 2012), and only survivors cross
-  Arrow. Otherwise ``exact_candidates`` builds a ``crossJoin`` with a
-  broadcast hint when one key set is small (BroadcastNestedLoopJoin,
-  zero shuffle), or Spark's partitioned CartesianProduct, and the
-  matcher scores it with Spark-side columns.
+  of distinct keys, scored losslessly. With the native kernels
+  available and the smaller key set broadcastable, this is one fused C
+  scan (``approx_scored_pairs(..., lossless=True)``, :func:`_lossless_scan`)
+  that reads the indexed rows directly: the smaller side is collected
+  once through Arrow and broadcast grouped by key (sorted by length,
+  with each key's row ids), the other side is hash-partitioned by key
+  and each task dedups its keys and scores them against all of the
+  broadcast side in one native pass. For levenshtein a length window
+  and a bag-distance lower bound reject most pairs before the Myers DP
+  (the per-candidate-pair filters of *Fuzzy Joins Using MapReduce*,
+  ICDE 2012), and only survivors cross Arrow, each carrying both
+  row-id lists. Otherwise ``exact_candidates`` builds a ``crossJoin``
+  of the deduped key frames with a broadcast hint when one key set is
+  small (BroadcastNestedLoopJoin, zero shuffle), or Spark's
+  partitioned CartesianProduct, and the matcher scores it with
+  Spark-side columns.
 
 - **approx** (`cross_join_large_files`, matcher.py:99-161): the
   reference calls a Rust ANN plugin in 10k-row chunks with
@@ -284,15 +288,21 @@ def approx_scored_pairs(
     bands: int = MINHASH_BANDS,
     dist_col: str = "__dist",
     lossless: bool = False,
+    *,
+    index_cols: tuple[str, str] | None = None,
 ) -> DataFrame:
     """Approximate candidates SCORED and THRESHOLDED:
     ``(left_col, right_col, dist_col)`` with ``dist_col <= dist_bound``.
 
-    ``lossless=True`` is the exact tier's fused native scan instead:
-    every key pair is scored in the C kernel (no hamming cap, no top-N),
-    so the rows equal the scored cross join. It needs the native kernels
-    and a broadcastable right side (at most ``BROADCAST_KEY_LIMIT``
-    keys); the caller keeps the cross join for everything else.
+    ``lossless=True`` is the exact tier's fused native scan instead
+    (:func:`_lossless_scan`): every key pair is scored in the C kernel
+    (no hamming cap, no top-N), so the rows equal the scored cross join.
+    It needs the native kernels and a broadcastable right side (at most
+    ``BROADCAST_KEY_LIMIT`` keys); the caller keeps the cross join for
+    everything else. With ``index_cols`` (left, right) the two frames
+    are indexed ROWS, not key frames: the scan dedups the keys itself
+    and each scored key pair also carries both row-id lists under those
+    names.
 
     Up to ``ANN_CATALYST_CAP`` pairs the top-N is taken over every
     exactly scored pair (:func:`_exact_topn_scored`, the same scorer).
@@ -312,11 +322,9 @@ def approx_scored_pairs(
                 "lossless scan needs the native kernels and a right side"
                 " of at most BROADCAST_KEY_LIMIT keys"
             )
-        return _sketch_scan_topn(
-            left_keys, right_keys, left_col, right_col, top_n,
-            n_left_keys, n_right_keys, max_hamming,
-            rescore_metric=metric, rescore_bound=dist_bound,
-            dist_col=dist_col, lossless=True,
+        return _lossless_scan(
+            left_keys, right_keys, left_col, right_col, metric, dist_bound,
+            n_left_keys, n_right_keys, dist_col, index_cols,
         )
     pair_volume = max(n_left_keys, 1) * max(n_right_keys, 1)
     if pair_volume <= ANN_CATALYST_CAP:
@@ -361,10 +369,10 @@ def attach_index_lists(
     n_right_keys: int = 0,
 ) -> DataFrame:
     """Re-attach the per-key index lists to (surviving) candidate
-    pairs. The key frames carry no size stats (they sit behind
-    checkpoints), so without an explicit hint Spark sort-merges the
-    multi-million-row candidate frame; broadcast them whenever the key
-    counts allow."""
+    pairs of the approximate tiers. The key frames are lazy groupBys
+    whose size Spark cannot estimate before they run, so without an
+    explicit hint it sort-merges the multi-million-row candidate frame;
+    broadcast them whenever the key counts allow."""
     lk = (
         F.broadcast(left_keys)
         if 0 < n_left_keys <= BROADCAST_KEY_LIMIT
@@ -409,11 +417,9 @@ def _exact_topn_scored(
     from ..functions.kernels import distance_column
 
     if native_scan_fits(n_right_keys):
-        scored = _sketch_scan_topn(
-            left_keys, right_keys, left_col, right_col, top_n,
-            n_left_keys, n_right_keys, DEFAULT_MAX_HAMMING,
-            rescore_metric=metric, rescore_bound=dist_bound,
-            dist_col=dist_col, lossless=True,
+        scored = _lossless_scan(
+            left_keys, right_keys, left_col, right_col, metric, dist_bound,
+            n_left_keys, n_right_keys, dist_col,
         )
     else:
         la, lb = "__lc_topn_l", "__lc_topn_r"
@@ -559,26 +565,197 @@ SKETCH_PAIRS_PER_TASK = 16_000_000
 # names (34.5 chars, bound 0.25) at ~100M pairs/s/core, since the
 # length and bag-distance filters leave ~1.6% of pairs for Myers; keys
 # that defeat both filters (templated "customer#000001234" families)
-# run Myers on every pair at ~7M pairs/s/core. A task costs ~0.1 s of
-# fixed overhead: exact_names (3.2M pairs, seed 4, 8 interleaved
-# repetitions) joined in 1.01 / 1.09 / 1.28 s medians at 1 / 2 / 4
-# tasks. 4M pairs keeps a worst-case task under ~0.6 s. The other
-# metrics score at 0.1-0.3M pairs/s/core in the same kernel, the rate
-# PAIRS_PER_TASK was set for.
+# run Myers on every pair at ~7M pairs/s/core. Set when each Python
+# task also paid ~0.1 s re-reading zip archives (exact_names, 3.2M
+# pairs, seed 4: 1.01 / 1.09 / 1.28 s at 1 / 2 / 4 tasks) and re-measured
+# once workers stopped paying it (the rows-reading scan, whole warm
+# joins, medians of 8 interleaved repetitions, same host): exact_names
+# 0.46 / 0.51 / 0.48 s at 1 / 2 / 4 tasks, so one task still suffices;
+# its left keys scaled 4x (12.8M pairs) 0.62 / 0.62 / 0.54 s, so
+# splitting pays by then. 4M pairs per task gives 1 and 4 tasks there
+# and keeps a worst-case task under ~0.6 s. The other metrics score at
+# 0.1-0.3M pairs/s/core in the same kernel, the rate PAIRS_PER_TASK was
+# set for.
 EXACT_SCAN_PAIRS_PER_TASK = 4_000_000
 
-# Below this right-side key count the kernel emits the RIGHT KEY
-# STRING directly (the originals ride the broadcast next to the
-# sketches and lowered forms): the Arrow exit carries ~30 bytes more
-# per survivor, and the rank->key broadcast join (one
+# Below this right-side key count the sketch-scan kernel emits the
+# RIGHT KEY STRING directly (the originals ride the broadcast next to
+# the sketches and lowered forms): the Arrow exit carries ~30 bytes
+# more per survivor, and the rank->key broadcast join (one
 # createDataFrame + one join stage, ~0.4 s at bench scale) disappears
 # entirely. Past the bound the original-key copy would meaningfully
 # grow the broadcast (2M keys ~ +50 MB), so the 4-byte rank + join
 # path stays.
 SKETCH_EMIT_KEY_LIMIT = 200_000
 
-# the JVM-lowered left key riding into the scan kernel
+# the JVM-lowered key riding into the scan kernels
 _LC = "__lc_scan_key"
+
+
+def _collect_keys(df: DataFrame, col: str, extra=(), nonempty=False):
+    """One Arrow collect of ``(col, jvm_lower(col), *extra)`` from
+    ``df``, null keys dropped (and empty keys with ``nonempty``). The
+    JVM lowers every key, as on every other tier."""
+    keep = F.col(col).isNotNull()
+    if nonempty:
+        keep = keep & (F.length(col) > 0)
+    cols = [col, jvm_lower(col).alias(_LC), *extra]
+    return df.filter(keep).select(*cols).toArrow()
+
+
+def _key_groups(tbl, col: str, sort_keys):
+    """Rows of the Arrow table ``tbl`` grouped by ``col``, groups in
+    ``sort_keys`` order (``col`` last, after any functions of it, so
+    equal keys sit together): ``(rows, starts)``, group ``g`` holding
+    the rows ``rows[starts[g]:starts[g + 1]]``."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    rows = pc.sort_indices(tbl, sort_keys=sort_keys).to_numpy().astype(np.int64)
+    keys = tbl.column(col).take(rows).combine_chunks()
+    cut = pc.not_equal(keys[1:], keys[:-1]).to_numpy(zero_copy_only=False)
+    starts = np.concatenate(([0], np.flatnonzero(cut) + 1, [len(rows)]))
+    return rows, starts
+
+
+def _id_lists(ids, starts, groups):
+    """Arrow ``list<int64>``: for each group ``g`` of ``groups``, the
+    ids ``ids[starts[g]:starts[g + 1]]``."""
+    import numpy as np
+    import pyarrow as pa
+
+    lo = starts[groups]
+    sizes = starts[groups + 1] - lo
+    off = np.zeros(len(groups) + 1, dtype=np.int64)
+    np.cumsum(sizes, out=off[1:])
+    pos = np.arange(off[-1]) + np.repeat(lo - off[:-1], sizes)
+    # a safe cast: past 2^31 ids in one batch it raises, never wraps
+    offsets = pa.array(off, type=pa.int32())
+    return pa.ListArray.from_arrays(offsets, pa.array(ids[pos]))
+
+
+def _lossless_scan(
+    probe: DataFrame,
+    build: DataFrame,
+    probe_col: str,
+    build_col: str,
+    metric: str,
+    bound: float,
+    n_probe_keys: int,
+    n_build_keys: int,
+    dist_col: str,
+    index_cols: tuple[str, str] | None = None,
+) -> DataFrame:
+    """The exact tier's fused native scan: every pair of distinct
+    non-null keys is scored in C, empty keys included, and the pairs
+    with normalized distance ``<= bound`` come out as
+    ``(probe_col, build_col, dist_col)`` — the rows of the scored cross
+    join.
+
+    The build side is one Arrow collect of ``(key, lowered key)``,
+    grouped by key and sorted by lowered length (so the levenshtein
+    length window and bag-distance filters skip most pairs before the
+    DP), then broadcast. The probe side is hash-partitioned by key, so
+    all copies of a key meet in one task, and each task dedups its keys
+    before scoring them, ``maxRecordsPerBatch`` keys per kernel call
+    (a single task reads its input partitions coalesced, unshuffled).
+
+    With ``index_cols`` (probe, build) both frames are indexed rows:
+    the build collect takes each row's id too, and every scored key
+    pair also carries both sides' row-id lists under those names,
+    ready for the explode. No key frame and no index-list join."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.types import (
+        ArrayType,
+        DoubleType,
+        LongType,
+        StringType,
+        StructField,
+        StructType,
+    )
+
+    spark = probe.sparkSession
+    p_ix, b_ix = index_cols or (None, None)
+    fields = [
+        StructField(probe_col, StringType()),
+        StructField(build_col, StringType()),
+        StructField(dist_col, DoubleType()),
+    ]
+    if index_cols:
+        fields += [StructField(c, ArrayType(LongType())) for c in index_cols]
+    schema = StructType(fields)
+
+    b = _collect_keys(build, build_col, [b_ix] if b_ix else [])
+    b = b.append_column("__len", pc.utf8_length(b.column(_LC)))
+    b_rows, b_starts = _key_groups(
+        b, build_col, [("__len", "ascending"), (build_col, "ascending")]
+    )
+    if not len(b_rows):
+        # every build key null: no pair can match
+        return spark.createDataFrame([], schema)
+    first = b_rows[b_starts[:-1]]
+    bc = spark.sparkContext.broadcast(
+        (
+            b.column(build_col).take(first).combine_chunks(),
+            b.column(_LC).take(first).to_pylist(),
+            b.column(b_ix).take(b_rows).to_numpy() if b_ix else None,
+            b_starts,
+        )
+    )
+    chunk = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    per_task = (
+        EXACT_SCAN_PAIRS_PER_TASK if metric == "levenshtein" else PAIRS_PER_TASK
+    )
+    n_parts = _compute_parallelism(
+        probe, max(n_probe_keys, 1) * max(n_build_keys, 1), per_task
+    )
+    names = schema.names
+
+    def scan(batches):
+        from ..functions.native_kernels import flatten_strings, sketch_scan_score
+
+        batches = list(batches)
+        if not sum(b.num_rows for b in batches):
+            return
+        t = pa.Table.from_batches(batches)
+        b_keys, b_low, b_ids, b_starts = bc.value
+        rows, starts = _key_groups(t, probe_col, [(probe_col, "ascending")])
+        first = rows[starts[:-1]]
+        keys = t.column(probe_col).take(first).combine_chunks()
+        low = t.column(_LC).take(first).to_pylist()
+        ids = t.column(p_ix).take(rows).to_numpy() if p_ix else None
+        r_flat, r_off = flatten_strings(b_low)
+        for c0 in range(0, len(low), chunk):
+            li, rj, d = sketch_scan_score(
+                None, None, low[c0 : c0 + chunk], r_flat, r_off,
+                0, 0, metric, bound,
+            )
+            if not len(li):
+                continue
+            li = li + c0
+            cols = [keys.take(li), b_keys.take(rj), pa.array(d)]
+            if p_ix:
+                cols += [
+                    _id_lists(ids, starts, li),
+                    _id_lists(b_ids, b_starts, rj.astype(np.int64)),
+                ]
+            yield pa.RecordBatch.from_arrays(cols, names=names)
+
+    extra = [p_ix] if p_ix else []
+    probe = probe.filter(F.col(probe_col).isNotNull()).select(probe_col, *extra)
+    # all copies of a key must meet in one task; one task holds them
+    # all without a shuffle
+    probe = (
+        probe.coalesce(1)
+        if n_parts == 1
+        else probe.repartition(n_parts, probe_col)
+    )
+    return probe.select(
+        probe_col, jvm_lower(probe_col).alias(_LC), *extra
+    ).mapInArrow(scan, schema)
+
 
 def _sketch_scan_topn(
     left_keys: DataFrame,
@@ -593,42 +770,36 @@ def _sketch_scan_topn(
     rescore_metric: str | None = None,
     rescore_bound: float | None = None,
     dist_col: str = "__dist",
-    lossless: bool = False,
 ) -> DataFrame:
     """Brute sketch scan as a vectorized kernel: the right side's
     ``(key, 64-bit SimHash)`` pairs are broadcast as numpy arrays
-    (pre-sorted by key for deterministic tie-breaks) and each Arrow
-    batch of left keys XORs against the whole right sketch vector,
-    popcounts (SWAR), and selects the per-row top-N with one
-    ``argpartition`` over a packed uint32 (hamming << 21 | key-rank)
-    sort key — no row-level candidate join, no window shuffle,
-    skew-immune because there is no bucketing at all. This mirrors the
-    reference's chunked SIMD scan (matcher.py:140-154) in Spark
-    clothing: JVM expressions build the per-KEY sketches, C-speed numpy
-    handles the per-PAIR O(n*m) stage, and only surviving pairs leave
-    Python. Up to ``SKETCH_EMIT_KEY_LIMIT`` right keys the kernel
+    (sorted by key, one Arrow collect, for deterministic tie-breaks)
+    and each Arrow batch of left keys XORs against the whole right
+    sketch vector, popcounts (SWAR), and selects the per-row top-N with
+    one ``argpartition`` over a packed uint32 (hamming << 21 |
+    key-rank) sort key — no row-level candidate join, no window
+    shuffle, skew-immune because there is no bucketing at all. This
+    mirrors the reference's chunked SIMD scan (matcher.py:140-154) in
+    Spark clothing: JVM expressions build the per-KEY sketches, C-speed
+    numpy handles the per-PAIR O(n*m) stage, and only surviving pairs
+    leave Python. Up to ``SKETCH_EMIT_KEY_LIMIT`` right keys the kernel
     emits the right key STRING directly (no rank join stage at all);
     past it survivors leave as ``(left key, right RANK)`` rows — a
     4-byte int across Arrow — and the rank joins back to the key via
-    the broadcast rank table.
+    the broadcast rank table. Empty keys never match here.
 
     With ``rescore_metric``/``rescore_bound`` set, the exact metric
     distance is computed IN the kernel (native C batch kernels on the
-    lowercased pair) and only threshold survivors are emitted — the
+    JVM-lowered pair) and only threshold survivors are emitted — the
     fused shape of the reference's ``join_sim`` (scored matches out,
     never raw candidates). At a saturated candidate budget this
     collapses the Arrow exit volume by orders of magnitude (e.g. 126M
     candidates -> 7.7K survivors on the 4B-pair bench shape). Output is
-    then ``(left_col, right_col, dist_col)``.
-
-    ``lossless`` (with the rescore arguments) is the exact tier: no
-    sketches, no hamming cap, no top-N — every key pair is scored in
-    the C kernel, empty keys included, so the output equals the scored
-    cross join. The right side is broadcast sorted by lowercased length
-    so the levenshtein length and bag-distance filters skip most pairs
-    before the DP."""
+    then ``(left_col, right_col, dist_col)``. The lossless (exact-tier)
+    scan is :func:`_lossless_scan`."""
     import numpy as np
     import pandas as pd
+    import pyarrow.compute as pc
     from pyspark.sql.types import (
         DoubleType,
         IntegerType,
@@ -642,39 +813,24 @@ def _sketch_scan_topn(
     rescoring = rescore_metric is not None and rescore_bound is not None
 
     spark = left_keys.sparkSession
-    if not lossless:
-        per_task = SKETCH_PAIRS_PER_TASK
-    elif rescore_metric == "levenshtein":
-        per_task = EXACT_SCAN_PAIRS_PER_TASK
-    else:
-        per_task = PAIRS_PER_TASK
     n_parts = _compute_parallelism(
-        left_keys, max(n_left_keys, 1) * max(n_right_keys, 1), per_task
+        left_keys,
+        max(n_left_keys, 1) * max(n_right_keys, 1),
+        SKETCH_PAIRS_PER_TASK,
     )
     # sketches for BOTH sides come from the same numpy routine (driver
     # for the broadcast build side, inside the kernel for probes) — no
     # JVM interpreted-HOF expression in the path, and bit-for-bit
     # agreement is guaranteed by construction. The keys the kernel
     # rescores are lowered in the JVM (``_LC``), as on every other
-    # tier: Python's ``str.lower`` follows another Unicode version. The
-    # lossless scan keeps empty keys: the cross join matches "" with "".
+    # tier: Python's ``str.lower`` follows another Unicode version.
     lc = jvm_lower(left_col).alias(_LC)
-    if lossless:
-        ls = left_keys.repartition(n_parts).select(left_col, lc)
-        rpairs = sorted(
-            right_keys.select(right_col, jvm_lower(right_col)).collect(),
-            key=lambda r: (len(r[1]), r[0]),
-        )
-    else:
-        ls = left_keys.filter(F.length(left_col) > 0).repartition(n_parts)
-        ls = ls.select(left_col, lc) if rescoring else ls.select(left_col)
-        rpairs = sorted(
-            right_keys.filter(F.length(right_col) > 0)
-            .select(right_col, jvm_lower(right_col))
-            .collect()
-        )
-    rkeys = [r[0] for r in rpairs]
-    if not rkeys:
+    ls = left_keys.filter(F.length(left_col) > 0).repartition(n_parts)
+    ls = ls.select(left_col, lc) if rescoring else ls.select(left_col)
+    r = _collect_keys(right_keys, right_col, nonempty=True)
+    r = r.take(pc.sort_indices(r, sort_keys=[(right_col, "ascending")]))
+    rkeys = r.column(right_col).to_numpy(zero_copy_only=False)
+    if not len(rkeys):
         # all right keys empty/filtered (O7 catches empty FRAMES, not
         # frames whose every key is the empty string): empty candidates
         tail = (
@@ -700,9 +856,9 @@ def _sketch_scan_topn(
     emit_keys = len(rkeys) <= SKETCH_EMIT_KEY_LIMIT
     bc = spark.sparkContext.broadcast(
         (
-            None if lossless else simhash_sketch_np(rkeys),
-            np.array(rkeys, dtype=object) if emit_keys else None,
-            [r[1] for r in rpairs] if rescoring else None,
+            simhash_sketch_np(rkeys),
+            rkeys if emit_keys else None,
+            r.column(_LC).to_pylist() if rescoring else None,
         )
     )
     fields = [
@@ -736,7 +892,7 @@ def _sketch_scan_topn(
                     continue
                 lk = pdf[left_col].to_numpy()
                 li, rj, d = sketch_scan_score(
-                    None if lossless else simhash_sketch_np(lk),
+                    simhash_sketch_np(lk),
                     rv,
                     pdf[_LC].tolist(),
                     r_flat,
@@ -778,7 +934,7 @@ def _sketch_scan_topn(
         return pairs
     # rank -> right key via the (tiny, broadcast) rank table
     rank_df = spark.createDataFrame(
-        list(enumerate(rkeys)), ["__rrank", right_col]
+        list(enumerate(rkeys.tolist())), ["__rrank", right_col]
     )
     return pairs.join(F.broadcast(rank_df), on="__rrank", how="inner").drop(
         "__rrank"

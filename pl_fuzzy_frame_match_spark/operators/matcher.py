@@ -6,10 +6,12 @@ Capability parity with the reference's pipeline
   PHASE A  plan: counts, approx-distinct selectivity, mapping order,
            low-uniqueness input dedup, collision renames, output order
   PHASE B  row identity: __left_index / __right_index
-  PHASE C  per-mapping loop: key dedup (group->index list) -> adaptive
-           candidate generation + scoring on DISTINCT key pairs (exact:
-           fused native scan, cross join fallback | approx: sketch scan
-           / LSH) -> threshold filter -> explode
+  PHASE C  round 1: scoring on DISTINCT key pairs, each carrying its
+           rows' index lists -> threshold filter -> explode (exact:
+           fused native scan over the indexed rows, dedup per task |
+           cross join fallback and approx tiers: groupBy key frames ->
+           cross join / sketch scan / LSH -> index-list re-attach);
+           rounds 2..n: one refine pass over round 1's row pairs
   PHASE D  conjunction of all mappings + payload re-attach
 
 Spark-first deviations from the reference (same *semantics*, different
@@ -80,13 +82,15 @@ _DIST = "__fuzzy_dist"
 
 # Per-task row-pair budget of the native refine pass (all refine
 # rounds, values from the value tables). Measured on a 4-core host
-# (load average 2-5 from other tenants) with the fuzzbench multi_refine
-# inputs, seed 3, left rows scaled, whole joins, medians of 4-5 warm
-# repetitions interleaved in one process, 1 / 2 / 4 / 8 tasks:
-# 306K refine pairs 1.08 / 1.09 / 1.16 s; 612K 1.19 / 1.23 / 1.29 s;
-# 1.2M 1.57 / 1.41 / 1.56 / 1.87 s; 2.4M 2.15 / 1.95 / 1.90 / 2.21 s.
-# Splitting pays from about 1M pairs, at ~0.6-1M pairs per task.
-REFINE_NATIVE_PAIRS_PER_TASK = 1_000_000
+# with the fuzzbench multi_refine inputs, seed 3, left rows scaled,
+# whole joins, medians of 4 warm repetitions interleaved in one
+# process, 1 / 2 / 4 / 8 tasks, after Python tasks stopped re-reading
+# zip archives (~0.1 s per task before; the earlier 1M budget was set
+# then): 317K estimated refine pairs 0.72 / 0.69 / 0.70 / 0.75 s; 633K
+# 0.97 / 0.85 / 0.86 / 0.93 s; 1.27M 1.27 / 1.14 / 1.07 / 1.04 s; 2.5M
+# 1.90 / 1.64 / 1.48 / 1.59 s. Splitting now pays from ~600K pairs, at
+# ~300-600K pairs per task.
+REFINE_NATIVE_PAIRS_PER_TASK = 500_000
 
 # Broadcast an indexed input frame into pair-level joins when its row
 # count (known exactly from the planner pass) is below this. The frames
@@ -201,26 +205,65 @@ def first_round_matches(
     n_parts: Optional[int] = None,
 ) -> DataFrame:
     """Round 1 of the per-mapping loop (reference matcher.py:419-504):
-    build key frames, pick exact/approx strategy on the cartesian of
-    distinct-key counts, generate candidates, score.
+    pick the exact/approx strategy on the cartesian of distinct-key
+    counts, generate candidates, score, explode the row ids.
 
-    A threshold-100 mapping is a hash equi-join on the lowered key. The
-    exact strategy has one lossless scorer, the fused native scan
-    against the broadcast smaller key side; with no C toolchain, or
-    with both key sides past one broadcast, the codegen cross join
-    scores instead. The approximate strategy keeps the top-N per key:
-    up to ``ANN_CATALYST_CAP`` pairs over the exact scorer's pairs,
-    past it from the sketch scan, the blocked scan or MinHash banding
-    (``operators/candidates.py``).
+    A threshold-100 mapping is a hash equi-join of the key frames on
+    the lowered key. The exact strategy has one lossless scorer, the
+    fused native scan, which reads the indexed rows directly: the
+    smaller key side is collected once through Arrow and broadcast
+    grouped by key with its row ids, the larger side is hash-partitioned
+    by key and each task dedups its keys, and every surviving key pair
+    carries both row-id lists to the explode (no key frame, no
+    index-list join). With no C toolchain, or with both key sides past
+    one broadcast, the codegen cross join of the key frames scores
+    instead. The approximate strategy keeps the top-N per key: up to
+    ``ANN_CATALYST_CAP`` pairs over the exact scorer's pairs, past it
+    from the sketch scan, the blocked scan or MinHash banding
+    (``operators/candidates.py``), then re-attaches the key frames'
+    index lists to the survivors.
 
     ``n_left_keys`` / ``n_right_keys`` are the planner's HyperLogLog
     approximate distinct counts — the reference recounts the key frames
     exactly (process.py:101-102); reusing the estimates saves two
     materializations per mapping, and the strategy/broadcast thresholds
     they feed are order-of-magnitude heuristics where ~2% HLL error is
-    immaterial. The whole round stays lazy: one Spark job executes
-    groupBy -> cross/LSH join -> score -> explode end-to-end.
+    immaterial. The round stays lazy except for the native scans'
+    build-side collect: one Spark job then runs the shuffle, scan and
+    explode (or groupBy -> join -> score -> explode) end to end.
     """
+
+    def scored_pairs(left_side, right_side, lossless):
+        # scored+thresholded key pairs straight from the candidate
+        # layer (in-kernel scoring on the scan paths), larger key set
+        # on the probe side (reference matcher.py:16-49)
+        sides = [
+            (left_side, mapping.left_col, n_left_keys, LEFT_INDEX),
+            (right_side, mapping.right_col, n_right_keys, RIGHT_INDEX),
+        ]
+        if n_left_keys < n_right_keys:
+            sides.reverse()
+        (pf, pcol, pn, pix), (bf, bcol, bn, bix) = sides
+        return approx_scored_pairs(
+            pf, bf, pcol, bcol,
+            mapping.fuzzy_type, mapping.reversed_threshold_score,
+            top_n=top_n, n_left_keys=pn, n_right_keys=bn, dist_col=_DIST,
+            lossless=lossless, index_cols=(pix, bix) if lossless else None,
+        )
+
+    score = F.lit(1.0) - F.col(_DIST)
+    if mapping.reversed_threshold_score != 0.0:
+        strategy = choose_candidate_strategy(
+            n_left_keys, n_right_keys, use_appr_nearest_neighbor, cross_over
+        )
+        if not strategy.use_approx and native_scan_fits(
+            min(n_left_keys, n_right_keys)
+        ):
+            # O4 exact tier: the fused native scan over the indexed rows
+            # (lossless; only survivors cross Arrow, with their row ids)
+            return _explode_index_lists(
+                scored_pairs(left, right, lossless=True), score, mapping
+            )
     left_keys = build_key_frame(left, mapping.left_col, LEFT_INDEX)
     right_keys = build_key_frame(right, mapping.right_col, RIGHT_INDEX)
     if mapping.reversed_threshold_score == 0.0:
@@ -240,17 +283,8 @@ def first_round_matches(
         if n_parts:
             joined = joined.repartition(n_parts)
         return _explode_index_lists(joined, F.lit(1.0), mapping)
-    strategy = choose_candidate_strategy(
-        n_left_keys, n_right_keys, use_appr_nearest_neighbor, cross_over
-    )
-    # O4 exact tier: the fused native scan scores every key pair in C
-    # against the broadcast smaller side (lossless; only survivors
-    # cross Arrow). The codegen cross join stays as the fallback with
-    # no C toolchain or with both key sides past one broadcast.
-    fused_exact = not strategy.use_approx and native_scan_fits(
-        min(n_left_keys, n_right_keys)
-    )
-    if not (strategy.use_approx or fused_exact):
+    if not strategy.use_approx:
+        # no C toolchain, or both key sides past one broadcast
         cands = exact_candidates(
             left_keys.withColumn(
                 _LC_PREFIX + mapping.left_col,
@@ -264,34 +298,15 @@ def first_round_matches(
             n_right_keys,
         )
         return score_and_explode(cands, mapping)
-    # Scored+thresholded key pairs straight from the candidate layer
-    # (in-kernel scoring on the scan paths), larger key set on the
-    # probe side (reference matcher.py:16-49). Index lists re-attach
-    # only for survivors: most candidates fail the threshold and must
-    # not pay the index joins.
-    if n_left_keys >= n_right_keys:
-        scored = approx_scored_pairs(
-            left_keys, right_keys, mapping.left_col, mapping.right_col,
-            mapping.fuzzy_type, mapping.reversed_threshold_score,
-            top_n=top_n, n_left_keys=n_left_keys,
-            n_right_keys=n_right_keys, dist_col=_DIST, lossless=fused_exact,
-        )
-    else:
-        scored = approx_scored_pairs(
-            right_keys, left_keys, mapping.right_col, mapping.left_col,
-            mapping.fuzzy_type, mapping.reversed_threshold_score,
-            top_n=top_n, n_left_keys=n_right_keys,
-            n_right_keys=n_left_keys, dist_col=_DIST, lossless=fused_exact,
-        )
-    # the scored key pairs are distinct, so the exploded index pairs
-    # are unique
+    # index lists re-attach only for survivors: most candidates fail the
+    # threshold and must not pay the index joins. The scored key pairs
+    # are distinct, so the exploded index pairs are unique.
     survivors = attach_index_lists(
-        scored, left_keys, right_keys, mapping.left_col, mapping.right_col,
+        scored_pairs(left_keys, right_keys, lossless=False),
+        left_keys, right_keys, mapping.left_col, mapping.right_col,
         n_left_keys, n_right_keys,
     )
-    return _explode_index_lists(
-        survivors, F.lit(1.0) - F.col(_DIST), mapping
-    )
+    return _explode_index_lists(survivors, score, mapping)
 
 
 def _refine_input_parts(

@@ -3,6 +3,7 @@ reference's golden floats (reference tests/test_pl_fuzzy_frame_match.py:339-404,
 tests/test_process.py:10-11,70-89)."""
 
 import random
+import sys
 
 import duckdb
 import pytest
@@ -363,3 +364,47 @@ def test_arrow_entry_point_matches_codegen_levenshtein(spark):
         )
         rows, sim = arrow_score_pairs(a, b, "levenshtein", bound)
         assert list(zip(rows.tolist(), sim.tolist())) == codegen, bound
+
+
+@pytest.mark.skipif(
+    sys.version_info >= (3, 13), reason="zip importers re-read lazily"
+)
+def test_zip_importer_rereads_only_changed_archives(tmp_path, monkeypatch):
+    """Python workers invalidate the import caches at every task start;
+    with the engine imported, a zip importer re-reads its archive only
+    if the archive changed (modification time or size), and then finds
+    the new contents."""
+    import os
+    import zipfile
+    import zipimport
+
+    import pl_fuzzy_frame_match_spark  # noqa: F401  (installs the fix)
+
+    archive = tmp_path / "mods.zip"
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("first_mod.py", "X = 1\n")
+    importer = zipimport.zipimporter(str(archive))
+    reads = []
+    real_read = zipimport._read_directory
+
+    def counting_read(path):
+        reads.append(path)
+        return real_read(path)
+
+    monkeypatch.setattr(zipimport, "_read_directory", counting_read)
+    importer.invalidate_caches()  # no stamp yet: reads
+    importer.invalidate_caches()
+    importer.invalidate_caches()
+    assert len(reads) == 1
+    assert importer.find_spec("first_mod") is not None
+
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("first_mod.py", "X = 1\n")
+        z.writestr("second_mod.py", "Y = 2\n")
+    st = os.stat(archive)
+    os.utime(archive, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    importer.invalidate_caches()
+    assert len(reads) == 2
+    assert importer.find_spec("second_mod") is not None
+    importer.invalidate_caches()
+    assert len(reads) == 2

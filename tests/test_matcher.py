@@ -390,6 +390,18 @@ def _exact_tier_frames(spark):
     )
 
 
+def _on_many_rows(df, id_col, copies=3, parts=5):
+    """``df`` with every row repeated ``copies`` times under new ids,
+    spread round-robin over ``parts`` partitions."""
+    copy = F.explode(F.sequence(F.lit(0), F.lit(copies - 1)))
+    return (
+        df.withColumn("__copy", copy)
+        .withColumn(id_col, F.col(id_col) + 10_000 * F.col("__copy"))
+        .drop("__copy")
+        .repartition(parts)
+    )
+
+
 @pytest.mark.parametrize(
     "tier, metric, threshold",
     [
@@ -408,10 +420,14 @@ def _exact_tier_frames(spark):
     + [
         pytest.param("topn", m, t, id=f"topn-{m}-{t:g}")
         for m, t in (("levenshtein", 60.0), ("jaro_winkler", 80.0))
+    ]
+    + [
+        pytest.param("rows", m, 75.0, id=f"exact-rows-{m}")
+        for m in ("levenshtein", "jaro_winkler")
     ],
 )
 def test_fused_rescoring_matches_jvm_scoring(
-    spark, monkeypatch, tier, metric, threshold
+    spark, monkeypatch, request, tier, metric, threshold
 ):
     """The in-kernel fused rescoring (native C metric kernels inside
     the scan) must produce exactly the rows + scores of the unfused
@@ -420,7 +436,11 @@ def test_fused_rescoring_matches_jvm_scoring(
     the lossless exact tier, whose unfused twin is the codegen /
     pandas-UDF cross join, and on the forced-ANN top-N tier (``topn``),
     which takes the top-N of the scan's pairs natively and of the cross
-    join's without a toolchain."""
+    join's without a toolchain. The ``rows`` cases are the exact tier
+    with every key on several rows, spread over several input
+    partitions and Arrow batches: the scan dedups keys per task and
+    carries the row ids of both sides itself, in one task or in
+    several."""
     from pl_fuzzy_frame_match_spark.functions import native_kernels as natk
     from pl_fuzzy_frame_match_spark.operators import candidates as cand
 
@@ -436,6 +456,15 @@ def test_fused_rescoring_matches_jvm_scoring(
     else:
         left, right = _exact_tier_frames(spark)
         ann = True if tier == "topn" else None
+    if tier == "rows":
+        left = _on_many_rows(left, "lid")
+        right = _on_many_rows(right, "rid")
+        conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+        spark.conf.set(conf, "7")
+        request.addfinalizer(lambda: spark.conf.unset(conf))
+        # levenshtein probes in several hash-partitioned tasks, the
+        # other metric in one coalesced task
+        monkeypatch.setattr(cand, "EXACT_SCAN_PAIRS_PER_TASK", 2_000)
     top_n = 3 if tier == "topn" else cand.DEFAULT_TOP_N
     maps = [
         FuzzyMapping(
@@ -456,13 +485,17 @@ def test_fused_rescoring_matches_jvm_scoring(
     fused_df = fuzzy_match_dfs(
         left, right, maps, use_appr_nearest_neighbor=ann, top_n=top_n
     )
-    # the scans run in mapInPandas
-    assert "MapInPandas" in plan(fused_df)
-    if tier == "exact":
+    # the sketch scan runs in mapInPandas, the lossless scan in
+    # mapInArrow
+    scan_node = "MapInPandas" if tier == "sketch" else "MapInArrow"
+    assert scan_node in plan(fused_df)
+    if tier in ("exact", "rows"):
         assert "ArrowEvalPython" not in plan(fused_df)
+        # round 1 reads the indexed rows: no key-frame aggregate
+        assert "collect_list" not in plan(fused_df)
     fused = rows(fused_df)
     assert fused  # fixture must match something
-    if tier == "exact":
+    if tier in ("exact", "rows"):
         assert (900, 900, 1.0) in fused  # "" matches ""
     if tier == "topn":
         per_left = Counter(lid for lid, _, _ in fused)
@@ -472,6 +505,7 @@ def test_fused_rescoring_matches_jvm_scoring(
     unfused_df = fuzzy_match_dfs(
         left, right, maps, use_appr_nearest_neighbor=ann, top_n=top_n
     )
-    if tier != "sketch":
-        assert "MapInPandas" not in plan(unfused_df)  # the cross join
+    if tier != "sketch":  # the cross join
+        assert "MapInPandas" not in plan(unfused_df)
+        assert "MapInArrow" not in plan(unfused_df)
     assert fused == rows(unfused_df)
