@@ -5,11 +5,14 @@ plus large-scale training-data pipeline operators (dedup, similarity
 search, text analysis, multimodal plumbing, streaming).
 """
 
+import sys
+
 from ._zip_cache import install as _install_zip_cache
 
-# every process that imports the engine (the driver and each Python
-# worker) stops re-reading unchanged zip archives at every task start
-_install_zip_cache()
+if "pyspark.worker_util" in sys.modules:
+    # a pyspark Python worker that imports the engine stops re-reading
+    # unchanged zip archives at every task start
+    _install_zip_cache()
 
 from .functions.kernels import similarity_column  # noqa: E402
 from .models import FUZZY_TYPES, FuzzyMapping, FuzzyTypeLiteral  # noqa: E402

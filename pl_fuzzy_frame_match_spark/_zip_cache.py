@@ -10,9 +10,15 @@ entries). Measured inside a worker on a 4-core host: 130-195 ms per
 task, 72 ms of it the jar. Python 3.13 made the re-read lazy.
 
 :func:`install` wraps the method so that an importer whose archive has
-the same modification time and size as when that importer last read
-it does not read it again. A changed, rewritten or vanished archive is
-re-read exactly as before.
+the same modification time (``st_mtime_ns``) and size as when that
+importer last read it does not read it again. An archive whose stamp
+changed, or that vanished, is re-read exactly as before. An archive
+rewritten in place with the same size and modification time (a
+filesystem with coarse timestamps, a tool that preserves them) is not:
+its importer keeps the old directory until the stamp moves. The
+package installs the wrapper only in pyspark's Python workers (the
+processes that have imported ``pyspark.worker_util``), never in the
+driver or other user processes.
 """
 
 from __future__ import annotations
@@ -31,9 +37,9 @@ def _stamp(path: str):
 
 
 def install() -> None:
-    """Make re-invalidation of an unchanged archive a no-op (the
-    package calls this once, on import); nothing to do on Python
-    3.13+."""
+    """Make re-invalidation of an unchanged archive a no-op, for the
+    whole process (the package calls this once, on import in a Python
+    worker); nothing to do on Python 3.13+."""
     if sys.version_info >= (3, 13):
         return
     original = zipimport.zipimporter.invalidate_caches

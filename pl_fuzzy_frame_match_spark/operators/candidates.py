@@ -290,6 +290,8 @@ def approx_scored_pairs(
     lossless: bool = False,
     *,
     index_cols: tuple[str, str] | None = None,
+    n_left_rows: int = 0,
+    n_right_rows: int = 0,
 ) -> DataFrame:
     """Approximate candidates SCORED and THRESHOLDED:
     ``(left_col, right_col, dist_col)`` with ``dist_col <= dist_bound``.
@@ -302,7 +304,9 @@ def approx_scored_pairs(
     everything else. With ``index_cols`` (left, right) the two frames
     are indexed ROWS, not key frames: the scan dedups the keys itself
     and each scored key pair also carries both row-id lists under those
-    names.
+    names; the frames' row counts ``n_left_rows`` / ``n_right_rows``
+    then pick which sides the JVM groups by key first and size the
+    scan's tasks.
 
     Up to ``ANN_CATALYST_CAP`` pairs the top-N is taken over every
     exactly scored pair (:func:`_exact_topn_scored`, the same scorer).
@@ -325,6 +329,7 @@ def approx_scored_pairs(
         return _lossless_scan(
             left_keys, right_keys, left_col, right_col, metric, dist_bound,
             n_left_keys, n_right_keys, dist_col, index_cols,
+            n_left_rows, n_right_rows,
         )
     pair_volume = max(n_left_keys, 1) * max(n_right_keys, 1)
     if pair_volume <= ANN_CATALYST_CAP:
@@ -578,6 +583,27 @@ SKETCH_PAIRS_PER_TASK = 16_000_000
 # set for.
 EXACT_SCAN_PAIRS_PER_TASK = 4_000_000
 
+# Per-task probe-row budget of the same scan over indexed rows: each
+# task reads, sorts and dedups its whole input, so a probe side of many
+# rows splits by row count too, whatever its key-pair volume. Measured
+# on a 4-core host, whole warm joins (how="left", 16 build keys,
+# medians of 5 interleaved repetitions) at 1 / 2 / 4 tasks: 250K
+# distinct probe keys 1.66 / 1.31 / 1.13 s; 100K keys on 4 rows each
+# 1.96 / 1.49 / 1.26 s; 1M keys (4 reps, 1 / 2 / 4 / 8 tasks) 3.98 /
+# 3.25 / 2.41 / 2.46 s.
+EXACT_SCAN_ROWS_PER_TASK = 100_000
+
+# Rows per distinct key from which the same scan has the JVM group a
+# side by key first (a groupBy dedups each input partition before its
+# shuffle, and the build collect then carries one id list per key).
+# Measured on a 4-core host, fuzzbench names, 2,000 or 1,200 left keys
+# on DUP rows each against 1,600 right keys (the left side probes, or
+# builds), whole warm joins, medians of 5 interleaved repetitions, rows
+# vs grouped: DUP 1 probe 0.47 vs 0.51 s, build 0.42 vs 0.53 s; DUP 4
+# 0.44 vs 0.46 s, 0.46 vs 0.48 s; DUP 16 0.56 vs 0.49 s, 0.52 vs 0.53 s;
+# DUP 64 0.91 vs 0.65 s, 0.72 vs 0.65 s.
+SCAN_GROUP_ROWS_PER_KEY = 8
+
 # Below this right-side key count the sketch-scan kernel emits the
 # RIGHT KEY STRING directly (the originals ride the broadcast next to
 # the sketches and lowered forms): the Arrow exit carries ~30 bytes
@@ -634,6 +660,34 @@ def _id_lists(ids, starts, groups):
     return pa.ListArray.from_arrays(offsets, pa.array(ids[pos]))
 
 
+def _row_ids(col, rows, starts):
+    """The ids of the Arrow column ``col`` (one int64 per row, or a
+    ``list<int64>`` per row) for ``rows`` in order, flattened, and
+    where each group of ``starts`` (over ``rows``) begins among them."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    col = col.take(rows).combine_chunks()
+    if not pa.types.is_list(col.type):
+        return col.to_numpy(), starts
+    ends = np.zeros(len(col) + 1, dtype=np.int64)
+    np.cumsum(pc.list_value_length(col).to_numpy(), out=ends[1:])
+    return col.flatten().to_numpy(), ends[starts]
+
+
+def _scan_input(df: DataFrame, col: str, ix, group: bool) -> DataFrame:
+    """A side's non-null ``(col, ix)`` rows for the lossless scan; with
+    ``group``, one row per key whose ``ix`` lists the key's row ids (a
+    JVM groupBy, which dedups each input partition before its shuffle)."""
+    df = df.filter(F.col(col).isNotNull())
+    if ix is None:
+        return df.select(col)
+    if group:
+        return df.groupBy(col).agg(F.collect_list(ix).alias(ix))
+    return df.select(col, ix)
+
+
 def _lossless_scan(
     probe: DataFrame,
     build: DataFrame,
@@ -645,6 +699,8 @@ def _lossless_scan(
     n_build_keys: int,
     dist_col: str,
     index_cols: tuple[str, str] | None = None,
+    n_probe_rows: int = 0,
+    n_build_rows: int = 0,
 ) -> DataFrame:
     """The exact tier's fused native scan: every pair of distinct
     non-null keys is scored in C, empty keys included, and the pairs
@@ -658,12 +714,18 @@ def _lossless_scan(
     DP), then broadcast. The probe side is hash-partitioned by key, so
     all copies of a key meet in one task, and each task dedups its keys
     before scoring them, ``maxRecordsPerBatch`` keys per kernel call
-    (a single task reads its input partitions coalesced, unshuffled).
+    (all of them when that is not positive; a single task reads its
+    input partitions coalesced, unshuffled).
 
     With ``index_cols`` (probe, build) both frames are indexed rows:
     the build collect takes each row's id too, and every scored key
     pair also carries both sides' row-id lists under those names,
-    ready for the explode. No key frame and no index-list join."""
+    ready for the explode, with no index-list join. A side whose row
+    count (``n_probe_rows`` / ``n_build_rows``) reaches
+    ``SCAN_GROUP_ROWS_PER_KEY`` rows per key is grouped by key in the
+    JVM first, so its copies of a key shrink to one id list before any
+    shuffle or collect. Each task holds its whole input, so the probe
+    rows also size the tasks, ``EXACT_SCAN_ROWS_PER_TASK`` each."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -687,7 +749,16 @@ def _lossless_scan(
         fields += [StructField(c, ArrayType(LongType())) for c in index_cols]
     schema = StructType(fields)
 
-    b = _collect_keys(build, build_col, [b_ix] if b_ix else [])
+    def grouped(n_rows, n_keys):
+        return n_rows >= SCAN_GROUP_ROWS_PER_KEY * max(n_keys, 1)
+
+    b = _collect_keys(
+        _scan_input(
+            build, build_col, b_ix, grouped(n_build_rows, n_build_keys)
+        ),
+        build_col,
+        [b_ix] if b_ix else [],
+    )
     b = b.append_column("__len", pc.utf8_length(b.column(_LC)))
     b_rows, b_starts = _key_groups(
         b, build_col, [("__len", "ascending"), (build_col, "ascending")]
@@ -696,20 +767,29 @@ def _lossless_scan(
         # every build key null: no pair can match
         return spark.createDataFrame([], schema)
     first = b_rows[b_starts[:-1]]
+    b_ids = _row_ids(b.column(b_ix), b_rows, b_starts) if b_ix else None
     bc = spark.sparkContext.broadcast(
         (
             b.column(build_col).take(first).combine_chunks(),
             b.column(_LC).take(first).to_pylist(),
-            b.column(b_ix).take(b_rows).to_numpy() if b_ix else None,
-            b_starts,
+            b_ids,
         )
     )
+    # zero or negative: no limit, one kernel call per task
     chunk = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
     per_task = (
         EXACT_SCAN_PAIRS_PER_TASK if metric == "levenshtein" else PAIRS_PER_TASK
     )
-    n_parts = _compute_parallelism(
-        probe, max(n_probe_keys, 1) * max(n_build_keys, 1), per_task
+    p_grouped = grouped(n_probe_rows, n_probe_keys)
+    n_parts = max(
+        _compute_parallelism(
+            probe, max(n_probe_keys, 1) * max(n_build_keys, 1), per_task
+        ),
+        _compute_parallelism(
+            probe,
+            n_probe_keys if p_grouped else n_probe_rows,
+            EXACT_SCAN_ROWS_PER_TASK,
+        ),
     )
     names = schema.names
 
@@ -720,16 +800,17 @@ def _lossless_scan(
         if not sum(b.num_rows for b in batches):
             return
         t = pa.Table.from_batches(batches)
-        b_keys, b_low, b_ids, b_starts = bc.value
+        b_keys, b_low, b_ids = bc.value
         rows, starts = _key_groups(t, probe_col, [(probe_col, "ascending")])
         first = rows[starts[:-1]]
         keys = t.column(probe_col).take(first).combine_chunks()
         low = t.column(_LC).take(first).to_pylist()
-        ids = t.column(p_ix).take(rows).to_numpy() if p_ix else None
+        ids = _row_ids(t.column(p_ix), rows, starts) if p_ix else None
         r_flat, r_off = flatten_strings(b_low)
-        for c0 in range(0, len(low), chunk):
+        step = chunk if chunk > 0 else len(low)
+        for c0 in range(0, len(low), step):
             li, rj, d = sketch_scan_score(
-                None, None, low[c0 : c0 + chunk], r_flat, r_off,
+                None, None, low[c0 : c0 + step], r_flat, r_off,
                 0, 0, metric, bound,
             )
             if not len(li):
@@ -738,13 +819,13 @@ def _lossless_scan(
             cols = [keys.take(li), b_keys.take(rj), pa.array(d)]
             if p_ix:
                 cols += [
-                    _id_lists(ids, starts, li),
-                    _id_lists(b_ids, b_starts, rj.astype(np.int64)),
+                    _id_lists(*ids, li),
+                    _id_lists(*b_ids, rj.astype(np.int64)),
                 ]
             yield pa.RecordBatch.from_arrays(cols, names=names)
 
     extra = [p_ix] if p_ix else []
-    probe = probe.filter(F.col(probe_col).isNotNull()).select(probe_col, *extra)
+    probe = _scan_input(probe, probe_col, p_ix, p_grouped)
     # all copies of a key must meet in one task; one task holds them
     # all without a shuffle
     probe = (

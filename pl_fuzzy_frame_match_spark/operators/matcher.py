@@ -203,6 +203,8 @@ def first_round_matches(
     top_n: int,
     cross_over: float,
     n_parts: Optional[int] = None,
+    n_left_rows: int = 0,
+    n_right_rows: int = 0,
 ) -> DataFrame:
     """Round 1 of the per-mapping loop (reference matcher.py:419-504):
     pick the exact/approx strategy on the cartesian of distinct-key
@@ -214,10 +216,10 @@ def first_round_matches(
     smaller key side is collected once through Arrow and broadcast
     grouped by key with its row ids, the larger side is hash-partitioned
     by key and each task dedups its keys, and every surviving key pair
-    carries both row-id lists to the explode (no key frame, no
-    index-list join). With no C toolchain, or with both key sides past
-    one broadcast, the codegen cross join of the key frames scores
-    instead. The approximate strategy keeps the top-N per key: up to
+    carries both row-id lists to the explode (no index-list join, and
+    no key frame unless a side has many rows per key). With no C
+    toolchain, or with both key sides past one broadcast, the codegen
+    cross join of the key frames scores instead. The approximate strategy keeps the top-N per key: up to
     ``ANN_CATALYST_CAP`` pairs over the exact scorer's pairs, past it
     from the sketch scan, the blocked scan or MinHash banding
     (``operators/candidates.py``), then re-attaches the key frames'
@@ -228,7 +230,9 @@ def first_round_matches(
     exactly (process.py:101-102); reusing the estimates saves two
     materializations per mapping, and the strategy/broadcast thresholds
     they feed are order-of-magnitude heuristics where ~2% HLL error is
-    immaterial. The round stays lazy except for the native scans'
+    immaterial. ``n_left_rows`` / ``n_right_rows`` (the planner's row
+    counts) size the fused scan's tasks when keys repeat over many
+    rows. The round stays lazy except for the native scans'
     build-side collect: one Spark job then runs the shuffle, scan and
     explode (or groupBy -> join -> score -> explode) end to end.
     """
@@ -244,11 +248,19 @@ def first_round_matches(
         if n_left_keys < n_right_keys:
             sides.reverse()
         (pf, pcol, pn, pix), (bf, bcol, bn, bix) = sides
+        rows = {}
+        if lossless:  # the fused scan reads the indexed rows
+            n_rows = {LEFT_INDEX: n_left_rows, RIGHT_INDEX: n_right_rows}
+            rows = dict(
+                index_cols=(pix, bix),
+                n_left_rows=n_rows[pix],
+                n_right_rows=n_rows[bix],
+            )
         return approx_scored_pairs(
             pf, bf, pcol, bcol,
             mapping.fuzzy_type, mapping.reversed_threshold_score,
             top_n=top_n, n_left_keys=pn, n_right_keys=bn, dist_col=_DIST,
-            lossless=lossless, index_cols=(pix, bix) if lossless else None,
+            lossless=lossless, **rows,
         )
 
     score = F.lit(1.0) - F.col(_DIST)
@@ -819,6 +831,8 @@ def fuzzy_match_dfs(
         top_n,
         cross_over_for_appr_nearest_neighbor,
         n_parts=key_pair_parts,
+        n_left_rows=left_count,
+        n_right_rows=right_count,
     )
     if len(maps) > 1:
         logger.info(

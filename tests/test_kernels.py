@@ -369,17 +369,38 @@ def test_arrow_entry_point_matches_codegen_levenshtein(spark):
 @pytest.mark.skipif(
     sys.version_info >= (3, 13), reason="zip importers re-read lazily"
 )
-def test_zip_importer_rereads_only_changed_archives(tmp_path, monkeypatch):
+def test_zip_importer_rereads_only_changed_archives(
+    spark, tmp_path, monkeypatch
+):
     """Python workers invalidate the import caches at every task start;
-    with the engine imported, a zip importer re-reads its archive only
-    if the archive changed (modification time or size), and then finds
-    the new contents."""
+    with the engine imported there, a zip importer re-reads its archive
+    only if the archive changed (modification time or size), and then
+    finds the new contents. The driver keeps the stock importer."""
     import os
     import zipfile
     import zipimport
 
-    import pl_fuzzy_frame_match_spark  # noqa: F401  (installs the fix)
+    from pl_fuzzy_frame_match_spark import _zip_cache
 
+    def importer_module(_):
+        import zipimport
+
+        import pl_fuzzy_frame_match_spark  # noqa: F401
+
+        yield zipimport.zipimporter.invalidate_caches.__module__
+
+    workers = spark.sparkContext.parallelize([0], 1).mapPartitions(
+        importer_module
+    )
+    assert workers.collect() == [_zip_cache.__name__]
+    assert zipimport.zipimporter.invalidate_caches.__module__ == "zipimport"
+
+    # install in this process too, undone at teardown
+    monkeypatch.setattr(
+        zipimport.zipimporter, "invalidate_caches",
+        zipimport.zipimporter.invalidate_caches,
+    )
+    _zip_cache.install()
     archive = tmp_path / "mods.zip"
     with zipfile.ZipFile(archive, "w") as z:
         z.writestr("first_mod.py", "X = 1\n")

@@ -424,6 +424,10 @@ def _on_many_rows(df, id_col, copies=3, parts=5):
     + [
         pytest.param("rows", m, 75.0, id=f"exact-rows-{m}")
         for m in ("levenshtein", "jaro_winkler")
+    ]
+    + [
+        pytest.param(tier, "levenshtein", 75.0, id=f"exact-{tier}-levenshtein")
+        for tier in ("rows-unbatched", "rows-grouped")
     ],
 )
 def test_fused_rescoring_matches_jvm_scoring(
@@ -440,7 +444,10 @@ def test_fused_rescoring_matches_jvm_scoring(
     with every key on several rows, spread over several input
     partitions and Arrow batches: the scan dedups keys per task and
     carries the row ids of both sides itself, in one task or in
-    several."""
+    several; ``rows-unbatched`` lifts the Arrow batch limit (a
+    non-positive ``maxRecordsPerBatch``), so each task scores its keys
+    in one kernel call, and in ``rows-grouped`` the JVM groups both
+    sides' rows by key before the scan."""
     from pl_fuzzy_frame_match_spark.functions import native_kernels as natk
     from pl_fuzzy_frame_match_spark.operators import candidates as cand
 
@@ -456,15 +463,18 @@ def test_fused_rescoring_matches_jvm_scoring(
     else:
         left, right = _exact_tier_frames(spark)
         ann = True if tier == "topn" else None
-    if tier == "rows":
+    lossless = tier == "exact" or tier.startswith("rows")
+    if tier.startswith("rows"):
         left = _on_many_rows(left, "lid")
         right = _on_many_rows(right, "rid")
         conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
-        spark.conf.set(conf, "7")
+        spark.conf.set(conf, "-1" if tier == "rows-unbatched" else "7")
         request.addfinalizer(lambda: spark.conf.unset(conf))
         # levenshtein probes in several hash-partitioned tasks, the
         # other metric in one coalesced task
         monkeypatch.setattr(cand, "EXACT_SCAN_PAIRS_PER_TASK", 2_000)
+        if tier == "rows-grouped":  # 3 rows per key
+            monkeypatch.setattr(cand, "SCAN_GROUP_ROWS_PER_KEY", 2)
     top_n = 3 if tier == "topn" else cand.DEFAULT_TOP_N
     maps = [
         FuzzyMapping(
@@ -489,13 +499,15 @@ def test_fused_rescoring_matches_jvm_scoring(
     # mapInArrow
     scan_node = "MapInPandas" if tier == "sketch" else "MapInArrow"
     assert scan_node in plan(fused_df)
-    if tier in ("exact", "rows"):
+    if lossless:
         assert "ArrowEvalPython" not in plan(fused_df)
-        # round 1 reads the indexed rows: no key-frame aggregate
-        assert "collect_list" not in plan(fused_df)
+        # round 1 reads the indexed rows: a key aggregate only where
+        # keys repeat over many rows
+        grouped = "collect_list" in plan(fused_df)
+        assert grouped == (tier == "rows-grouped")
     fused = rows(fused_df)
     assert fused  # fixture must match something
-    if tier in ("exact", "rows"):
+    if lossless:
         assert (900, 900, 1.0) in fused  # "" matches ""
     if tier == "topn":
         per_left = Counter(lid for lid, _, _ in fused)
